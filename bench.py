@@ -224,16 +224,12 @@ def bench_queries(spark, sf_dir: str) -> dict[str, float]:
 
 
 def run_single() -> dict:
+    from gdal_spark.operators import spatial_join as sj
     from gdal_spark.queries import points_df
     from gdal_spark.session import get_spark
 
     from tools.memprobe import probe_gbps
     gbps_before = round(probe_gbps(), 2)
-    # cover-granularity knee for THIS input scale (sf0.1, 600k points):
-    # z10 cover (16384-cell budget) minimizes flagship wall — see
-    # spatial_join.cover_cells_budget. Identical output at any setting;
-    # larger inputs (the scaling job) keep the finer default.
-    os.environ.setdefault("SPARK_GRAFT_COVER_CELLS", "16384")
     spark = get_spark(app="bench", master=f"local[{CPUS}]",
                       shuffle_partitions=CPUS)
     n_rows = points_df(spark, SF_DIR).count()
@@ -254,9 +250,7 @@ def run_single() -> dict:
         # healthy ~12+ GB/s single-stream, co-tenant collapse <2 — see
         # tools/memprobe.py; Spark wall times scale with this)
         "host_gbps": [gbps_before, round(probe_gbps(), 2)],
-        # effective cover-cell budget for this run so published numbers
-        # are reproducible and the per-scale tuning is visible
-        "cover_cells": int(os.environ["SPARK_GRAFT_COVER_CELLS"]),
+        "cover_zoom": sj.auto_cover_zoom(),
     }
     # attach ONLY the scalar efficiency numbers from the most recent
     # scaling-protocol run (`python bench.py --scaling` → SCALING.json).
@@ -313,7 +307,7 @@ def stage_scaling_input(sf_dir: str, out_dir: str | None = None) -> str:
 def scaling_job(spark, sf_dir: str, replicate: int,
                 staged_dir: str | None = None):
     """The scaling-efficiency measurement job: geocode → PIP join
-    (broadcast cover + Arrow refine) → per-zone counts, UNION z12 tile
+    (broadcast cover + SQL edge test) → per-zone counts, UNION z12 tile
     counts — all forced by ONE action so stage-launch latency doesn't
     drown the compute being measured. The pyramid cascade is excluded
     here on purpose: its 7 sequential two-second stages are pure
@@ -353,10 +347,9 @@ def scaling_job(spark, sf_dir: str, replicate: int,
     raw.createOrReplaceTempView("lineitem")
     pts = spark.sql(
         f"WITH {sqlexpr.points_cte(dialect='spark')} SELECT * FROM points")
-    # Recompute-over-cache: the three consumers (PIP interior branch,
-    # boundary-refine branch, tile counts) each re-run the
-    # scan→geocode pipeline. Alternatives were MEASURED and lose on
-    # this box: co-partitioning by cell can't share the exchange
+    # Recompute-over-cache: the two consumers (PIP join, tile counts)
+    # each re-run the scan→geocode pipeline. Alternatives were MEASURED
+    # and lose on this box: co-partitioning by cell can't share the exchange
     # (column pruning specializes each branch's subtree — 0
     # ReusedExchange), and persist()ing the celled working set ships
     # every row through the columnar cache codec, whose ser/deser CPU

@@ -3,7 +3,7 @@
 Everything here is a pure Python constant or an integer-hash derivation,
 rendered into three synchronized forms:
 
-1. numpy structures for oracle kernels and broadcast refine tables,
+1. numpy structures for oracle kernels and the numpy PIP tests,
 2. Spark DataFrames (``zones_df`` etc., created via createDataFrame —
    these are tiny broadcast-side tables),
 3. SQL snippets (VALUES lists / CTEs) that BOTH Spark SQL and DuckDB
@@ -217,7 +217,7 @@ def zones_spark_rows():
 
 
 def zone_rings_numpy() -> dict[int, list[np.ndarray]]:
-    """zone_fid → list of float64 (n,2) ring arrays (broadcast refine)."""
+    """zone_fid → list of float64 (n,2) ring arrays (numpy PIP tests)."""
     return {z["zone_fid"]: [np.asarray(r, dtype=np.float64) for r in z["rings"]]
             for z in ZONES}
 

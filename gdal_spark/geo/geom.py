@@ -9,7 +9,9 @@ Semantics matched to the reference:
   step (ogr/ogrsf_frmts/generic/ogrlayer.cpp:4005-4078 ``FilterGeometry``:
   envelope reject → envelope-contains accept → exact Intersects).
   Even-odd ray casting with an explicit on-boundary test (a point on any
-  ring edge, including hole edges, intersects the polygon).
+  ring edge, including hole edges, intersects the polygon). Each edge's
+  side test is the sign of the half-plane oracle's cross product, in its
+  op order; ``spatial_join.pip_sql`` is the same rule in Spark SQL.
 - ``polygon_area``: planar shoelace — OGR_GEOM_AREA / ``get_Area`` are
   planar (ogr/ogr_geometry.h:1788, ogr_gensql.cpp:839-841).
 - ``haversine_m``: great-circle meters on the GDAL sphere radius 6378137
@@ -58,14 +60,16 @@ def points_on_ring(px: np.ndarray, py: np.ndarray, ring) -> np.ndarray:
 
 def _crossings(px: np.ndarray, py: np.ndarray, ring) -> np.ndarray:
     """Even-odd crossing counts of a rightward ray per point (half-open
-    edge rule [y1, y2) so vertices count once)."""
+    edge rule [y1, y2) so vertices count once): an upward edge counts
+    when the point is left of it (cross > 0), a downward one when right
+    (cross < 0); cross == 0 is ``points_on_ring``'s case."""
     x1, y1, x2, y2 = _ring_arrays(ring)
     px = px[:, None]
     py = py[:, None]
-    cond = (y1 <= py) != (y2 <= py)  # edge straddles the scan height
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
-    return np.sum(cond & (px < xint), axis=1)
+    cross = (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1)
+    up = (y1 <= py) & (py < y2) & (cross > 0)
+    down = (y2 <= py) & (py < y1) & (cross < 0)
+    return np.sum(up | down, axis=1)
 
 
 def point_in_polygon(px, py, rings) -> np.ndarray:

@@ -211,8 +211,8 @@ def intersection_pieces(spark: SparkSession) -> DataFrame:
     the plan is the scale one — bbox equi-prefilter join (a real
     deployment joins on a cell cover instead of the raw bbox cross),
     mapInPandas numpy clip kernel per candidate piece pair (rows are
-    geometry PAIRS — coarse-grained work per row, same pattern as the
-    PIP refine UDF), then a per-pair ORDERED fold of the signed areas
+    geometry PAIRS — coarse-grained work per row), then a per-pair
+    ORDERED fold of the signed areas
     (sort_array over (piece_a, piece_b) — float sums are
     order-dependent, so the fold order is pinned to match the oracle
     twin; the per-pair piece count is bounded by the two decomposition

@@ -6,8 +6,8 @@ generic/ogrlayer.cpp:4005-4078 ``FilterGeometry``):
 1. envelope reject        → here: XYZ-tile cell-cover equi-join (coarse)
 2. envelope-contains      → cover cells *fully inside* the polygon skip
    accept                    the exact test (ogrlayer.cpp:4040 shortcut)
-3. exact GEOS Intersects  → boundary-inclusive numpy PIP refine in an
-   refine                    Arrow-batched pandas UDF
+3. exact GEOS Intersects  → boundary-inclusive crossing-number test as
+   refine                    one codegen'd SQL predicate (``pip_sql``)
 
 and the layer-algebra Intersection pair-emission (ogrlayer.cpp:
 5386-5803): every intersecting (point, polygon) pair is emitted with
@@ -20,10 +20,10 @@ Scale design (100 TB story):
   DataFrame joined with an explicit ``broadcast()`` hint, so the join is
   a map-side BroadcastHashJoin; the only wide op is whatever aggregation
   the caller adds downstream.
-- The cover zoom adapts so each polygon covers ≤ ``max_cells_per_zone``
-  cells; full-inside cells bypass the Python refine entirely, so for
-  large polygons the Arrow hop only sees boundary-cell rows (a small
-  fraction at high zoom).
+- The cover zoom adapts so each polygon covers ≤ ``COVER_CELLS``
+  cells. Stages 2 and 3 are one join condition, ``full OR <pip>``:
+  ``Or`` short-circuits in codegen, so interior-cell rows never
+  evaluate an edge, and the join is one pass with no Python hop.
 - For polygon sets too large to broadcast, the same cover table can be
   shuffle-joined on (tx, ty) with salting — see tiling.salted_count for
   the skew pattern; not needed for the fixture scale.
@@ -31,36 +31,25 @@ Scale design (100 TB story):
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from gdal_spark.fixtures import ZONES, zone_rings_numpy, zone_area
+from gdal_spark.fixtures import ZONES, dlit, zone_area
 from gdal_spark.geo import geom as G
 from gdal_spark.geo import mercator as M
 
 
-def cover_cells_budget() -> int:
-    """bbox-cell budget per zone for the cover zoom choice. Finer
-    covers shrink the Python-refine boundary fraction (the per-row win
-    grows with input size); coarser covers shrink the broadcast build
-    (a per-query fixed cost). Measured knee at sf0.1 (600k points):
-    16384 (z10) beats both 1024 (z8, 12.5 s — refine-bound) and 131072
-    (z12, 5.5 s — probe/build-bound) at 4.4 s flagship; at the scaling
-    job's 10^8-row inputs the finer default wins. Read per call so the
-    bench can set it per input scale; output is IDENTICAL at any
-    setting."""
-    return int(os.environ.get("SPARK_GRAFT_COVER_CELLS", "131072"))
+#: bbox-cell budget per zone for the cover zoom choice (z12 for the
+#: fixture zones). Output is identical at any budget; finer covers send
+#: fewer rows through the edge test, coarser ones build a smaller
+#: broadcast side.
+COVER_CELLS = 131072
 
 
-def auto_cover_zoom(zones=ZONES, max_cells_per_zone: int | None = None) -> int:
+def auto_cover_zoom(zones=ZONES, max_cells_per_zone: int = COVER_CELLS) -> int:
     """Highest zoom where every zone's bbox cover stays under the cap."""
-    if max_cells_per_zone is None:
-        max_cells_per_zone = cover_cells_budget()
     best = 0
     for z in range(1, 19):
         ok = True
@@ -160,8 +149,8 @@ def _expand_cells(tx, ty, d: int):
 #: seed-grid budget for the quadtree cover build: the recursion starts
 #: at the coarsest zoom where the zone bbox is under this many cells,
 #: then subdivides only boundary cells — build work is O(perimeter /
-#: cell_size), not O(area / cell_size²), so a fine final zoom (small
-#: Python-refine fraction) stays cheap to construct driver-side.
+#: cell_size), not O(area / cell_size²), so a fine final zoom (few
+#: rows through the edge test) stays cheap to construct driver-side.
 COVER_SEED_CELLS = 1024
 
 
@@ -227,39 +216,36 @@ def build_cover_df(spark: SparkSession, cover, zoom: int) -> DataFrame:
         cover_pdf, "cell long, zone_fid int, full boolean")
 
 
-def refined_hits(pts: DataFrame, spark: SparkSession, cover_df: DataFrame,
-                 zones=ZONES, lat_col: str = "lat",
-                 lon_col: str = "lon") -> DataFrame:
-    """Broadcast cover join + exact refine over points that already
-    carry a ``_cell`` column. Exposed separately so a caller that has
-    co-partitioned the points by cell (one exchange shared with other
-    per-cell consumers) can run the join on top of its own exchange."""
-    cand = pts.join(F.broadcast(cover_df), F.col("_cell") == F.col("cell"),
-                    "inner").drop("cell")
-
-    rings_b = spark.sparkContext.broadcast(
-        {z["zone_fid"]: [np.asarray(r, dtype=np.float64) for r in z["rings"]] for z in zones})
-
-    @F.pandas_udf(T.BooleanType())
-    def _refine(lon: pd.Series, lat: pd.Series, zone_fid: pd.Series) -> pd.Series:
-        res = np.zeros(len(lon), dtype=bool)
-        x = lon.to_numpy(dtype=np.float64)
-        y = lat.to_numpy(dtype=np.float64)
-        for fid, idx in pd.Series(range(len(zone_fid))).groupby(zone_fid.to_numpy()).groups.items():
-            ii = np.asarray(idx)
-            res[ii] = G.point_in_polygon(x[ii], y[ii], rings_b.value[int(fid)])
-        return pd.Series(res)
-
-    # Split the covered-cell fast path BEFORE the UDF: an expression
-    # like (full | udf(...)) makes Catalyst evaluate the Python UDF for
-    # EVERY row (BatchEvalPython hoists the UDF above the boolean), so
-    # interior-cell points would pay the Arrow hop they are supposed to
-    # skip (ogrlayer.cpp:4040's envelope-contains shortcut). With the
-    # union only boundary-cell rows cross into Python.
-    inside = cand.filter(F.col("full"))
-    boundary = cand.filter(~F.col("full")).filter(
-        _refine(F.col(lon_col), F.col(lat_col), F.col("zone_fid")))
-    return inside.unionByName(boundary).drop("_cell", "full")
+def pip_sql(zones=ZONES, lat_col: str = "lat", lon_col: str = "lon") -> str:
+    """Spark SQL boolean: the point (lon_col, lat_col) intersects zone
+    ``zone_fid`` — ``geom.point_in_polygon``'s rule as column math: on
+    some ring edge (cross == 0 inside the edge's bbox), or an odd count
+    of edges spanning [ylo, yhi) with the point on their inner side. The
+    side is the sign of ``(x2 - x1) * (lat - y1) - (y2 - y1) * (lon -
+    x1)``, the half-plane oracle's expression in its op order. One
+    string, so the predicate costs one ``F.expr``. For the 46 fixture
+    edges the join stage's generated method is ~34 KB of bytecode
+    (Spark 4.1), over HotSpot's 8000-byte JIT limit: it runs
+    interpreted."""
+    lat, lon = lat_col, lon_col
+    arms = []
+    for z in zones:
+        on_edge, crossings = [], []
+        for ring in z["rings"]:
+            for (x1, y1), (x2, y2) in zip(ring, [*ring[1:], ring[0]]):
+                xlo, xhi, ylo, yhi = map(dlit, (min(x1, x2), max(x1, x2),
+                                                min(y1, y2), max(y1, y2)))
+                cross = (f"({dlit(x2)} - {dlit(x1)}) * ({lat} - {dlit(y1)})"
+                         f" - ({dlit(y2)} - {dlit(y1)}) * ({lon} - {dlit(x1)})")
+                on_edge.append(f"({lon} BETWEEN {xlo} AND {xhi} AND {lat}"
+                               f" BETWEEN {ylo} AND {yhi} AND {cross} = 0)")
+                if y1 != y2:
+                    side = ">" if y1 < y2 else "<"
+                    crossings.append(f"IF({lat} >= {ylo} AND {lat} < {yhi}"
+                                     f" AND {cross} {side} 0, 1, 0)")
+        arms.append(f"WHEN {z['zone_fid']} THEN {' OR '.join(on_edge)}"
+                    f" OR ({' + '.join(crossings)}) % 2 = 1")
+    return f"CASE zone_fid {' '.join(arms)} END"
 
 
 def pip_join(points: DataFrame, spark: SparkSession, zones=ZONES,
@@ -268,9 +254,12 @@ def pip_join(points: DataFrame, spark: SparkSession, zones=ZONES,
              point_fid: str | None = None) -> DataFrame:
     """points ⋈ zones on ST_Intersects(point, polygon).
 
-    Returns points' columns + zone_fid (inner join over intersecting
-    pairs). ``first_match`` adds OGR SQL JOIN semantics: per point keep
-    the single match with the smallest zone_fid (secondary FID order).
+    One broadcast join on the cover cell whose condition is
+    ``full OR pip_sql(...)``: interior cells accept without a test,
+    boundary cells run the exact edge test in codegen. Returns points'
+    columns + zone_fid (inner join over intersecting pairs).
+    ``first_match`` adds OGR SQL JOIN semantics: per point keep the
+    single match with the smallest zone_fid (secondary FID order).
     """
     zoom, cover = zone_cell_cover(zones, zoom)
     cover_df = build_cover_df(spark, cover, zoom)
@@ -279,8 +268,9 @@ def pip_join(points: DataFrame, spark: SparkSession, zones=ZONES,
     pts = points.filter(F.col(lat_col).isNotNull()).withColumn(
         "_cell", tx * (1 << zoom) + ty)
 
-    refined = refined_hits(pts, spark, cover_df, zones,
-                           lat_col=lat_col, lon_col=lon_col)
+    refined = (pts.join(F.broadcast(cover_df), F.col("_cell") == F.col("cell"))
+               .filter(F.col("full") | F.expr(pip_sql(zones, lat_col, lon_col)))
+               .drop("_cell", "cell", "full"))
 
     if first_match:
         from pyspark.sql import Window

@@ -30,24 +30,64 @@ def test_pip_square():
     assert list(got) == [True, False, True, True, True, False]
 
 
+#: zone 2 points on the generator's 0.0001° lattice within ~1e-14 of an
+#: edge, with the side exact rational arithmetic gives: (lon, lat, in)
+ZONE2_NEAR_EDGE = [(140.304, 35.265, True), (138.8305, 35.795, False),
+                   (138.9896, 35.1096, True), (138.8355, 35.745, False)]
+
+
+def edge_lattice_points(samples_per_edge=50):
+    """Points along every zone ring edge snapped to the 0.0001° lattice,
+    each with its 8 lattice neighbours: on, just inside and just
+    outside every edge, and every vertex."""
+    xs, ys = [], []
+    for z in ZONES:
+        for ring in z["rings"]:
+            r = np.asarray(ring, dtype=np.float64)
+            a, b = r, np.roll(r, -1, axis=0)
+            t = np.linspace(0.0, 1.0, samples_per_edge)[:, None, None]
+            p = np.round((a + t * (b - a)).reshape(-1, 2) * 1e4)
+            xs.append(p[:, 0])
+            ys.append(p[:, 1])
+    kx, ky = np.concatenate(xs), np.concatenate(ys)
+    dx, dy = (d.ravel() for d in np.meshgrid([-1.0, 0.0, 1.0], [-1.0, 0.0, 1.0]))
+    return (kx[:, None] + dx).ravel() / 1e4, (ky[:, None] + dy).ravel() / 1e4
+
+
+def halfplane_pip(px, py, z):
+    """The DuckDB oracle's rule (queries._PIP_HITS_SQL): inside some
+    convex part (every edge cross >= 0) and not strictly inside any hole
+    (every hole edge cross > 0)."""
+    def cross(ring):
+        r = np.asarray(ring, dtype=np.float64)
+        x1, y1 = r[:, 0], r[:, 1]
+        x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
+        return (x2 - x1)[None, :] * (py[:, None] - y1[None, :]) - \
+            (y2 - y1)[None, :] * (px[:, None] - x1[None, :])
+    inside = np.zeros(len(px), dtype=bool)
+    for part in z["parts"]:
+        inside |= (cross(part) >= 0).all(axis=1)
+    for hole in z["holes"]:
+        inside &= ~(cross(hole) > 0).all(axis=1)
+    return inside
+
+
 def test_pip_vs_halfplane_on_convex_zones():
     """Engine ray-cast vs the oracle's half-plane algebra must agree on
-    random points (the two PIP formulations used by engine vs DuckDB)."""
+    every zone (convex parts, the L's decomposition, the hole): on
+    random points, on lattice points along every edge, and on the zone 2
+    points a divided edge intersection put on the wrong side."""
     rng = np.random.RandomState(7)
+    lx, ly = edge_lattice_points()
     for z in ZONES:
-        if z["holes"] or len(z["parts"]) > 1:
-            continue
         xmin, ymin, xmax, ymax = G.polygon_bbox(z["rings"])
-        px = rng.uniform(xmin - 0.5, xmax + 0.5, 4000)
-        py = rng.uniform(ymin - 0.5, ymax + 0.5, 4000)
+        px = np.concatenate([rng.uniform(xmin - 0.5, xmax + 0.5, 4000), lx])
+        py = np.concatenate([rng.uniform(ymin - 0.5, ymax + 0.5, 4000), ly])
         raycast = G.point_in_polygon(px, py, zone_rings_numpy()[z["zone_fid"]])
-        ring = np.asarray(z["parts"][0], dtype=np.float64)
-        x1, y1 = ring[:, 0], ring[:, 1]
-        x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
-        cross = (x2 - x1)[None, :] * (py[:, None] - y1[None, :]) - \
-                (y2 - y1)[None, :] * (px[:, None] - x1[None, :])
-        halfplane = (cross >= 0).all(axis=1)
-        assert (raycast == halfplane).all(), f"zone {z['zone_fid']}"
+        assert (raycast == halfplane_pip(px, py, z)).all(), f"zone {z['zone_fid']}"
+    px, py, want = (np.array(c) for c in zip(*ZONE2_NEAR_EDGE))
+    assert (halfplane_pip(px, py, ZONES[2]) == want).all()
+    assert (G.point_in_polygon(px, py, zone_rings_numpy()[2]) == want).all()
 
 
 def test_pip_hole_and_lshape():

@@ -15,12 +15,16 @@ def _plan(df) -> str:
 def test_pip_join_broadcasts_cover_not_pages(spark):
     """Flagship PIP join: the polygon cell cover is broadcast; the
     page side is never sort-merge-joined (the 100-TB contract: big
-    side flows through map-side joins only)."""
+    side flows through map-side joins only). The exact test is part of
+    the join condition: no Python hop and no union of re-scanning
+    branches."""
     from gdal_spark.queries import REGISTRY
     df = REGISTRY["pip_join"][0](spark, SF_SMOKE)
     plan = _plan(df)
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    for node in ("ArrowEvalPython", "BatchEvalPython", "Union"):
+        assert node not in plan, node
 
 
 def test_ann_topk_is_take_ordered(spark):

@@ -87,3 +87,26 @@ def test_pip_join_plan_is_broadcast_no_shuffle_on_big_side(spark):
     scan_side = plan[first_join:]
     # no shuffle between the parquet scan and the join on the probe side
     assert "Exchange hashpartitioning" not in plan.split("BroadcastHashJoin")[0]
+
+
+def test_pip_join_matches_numpy_pip_on_edge_lattice(spark):
+    """The join's SQL predicate and geom.point_in_polygon give the same
+    (point, zone) pairs on lattice points along every zone edge and on
+    the zone 2 near-edge points, so the cover build's corner test and
+    the join share one semantics — the exact side for the latter."""
+    from test_geom import ZONE2_NEAR_EDGE, edge_lattice_points
+    px, py = edge_lattice_points(samples_per_edge=20)
+    n = len(px)
+    px = np.concatenate([px, [p[0] for p in ZONE2_NEAR_EDGE]])
+    py = np.concatenate([py, [p[1] for p in ZONE2_NEAR_EDGE]])
+    pts = spark.createDataFrame(
+        [(i, float(y), float(x)) for i, (x, y) in enumerate(zip(px, py))],
+        "pid long, lat double, lon double")
+    got = set(map(tuple, sj.pip_join(pts, spark).select("pid", "zone_fid")
+                  .toPandas().to_numpy().tolist()))
+    rings = zone_rings_numpy()
+    want = {(int(i), z["zone_fid"]) for z in ZONES
+            for i in np.nonzero(G.point_in_polygon(px, py, rings[z["zone_fid"]]))[0]}
+    assert got == want
+    assert [(n + i, 2) in got for i in range(len(ZONE2_NEAR_EDGE))] == \
+        [inside for _, _, inside in ZONE2_NEAR_EDGE]

@@ -185,7 +185,8 @@ def parse_prj_wkt(text: str) -> dict:
     """Minimal ESRI .prj (WKT1) parameter extraction for
     Transverse_Mercator PROJCS — name, spheroid, and the five
     projection parameters (the shapefile sidecar's contract;
-    ogr/ogrspatialref.cpp importFromESRI analog)."""
+    ogr/ogrspatialref.cpp importFromESRI analog). Any other PROJECTION
+    raises ValueError."""
     import re as _re
 
     def _param(name, default=0.0):
@@ -193,14 +194,20 @@ def parse_prj_wkt(text: str) -> dict:
                        _re.I)
         return float(m.group(1)) if m else default
 
+    proj = _re.search(r'PROJECTION\["([^"]+)"', text)
+    if not proj or proj.group(1) != "Transverse_Mercator":
+        raise ValueError("not a Transverse_Mercator .prj: "
+                         f"{proj.group(1) if proj else 'no PROJECTION'}")
     m = _re.search(r'SPHEROID\["([^"]+)",([-0-9.eE+]+),([-0-9.eE+]+)',
                    text)
     name = _re.match(r'PROJCS\["([^"]+)"', text)
+    # inverse flattening 0 is WKT's marker for a sphere (f = 0)
+    rf = float(m.group(3)) if m else None
     return {
         "name": name.group(1) if name else None,
         "spheroid": m.group(1) if m else None,
         "a": float(m.group(2)) if m else None,
-        "f": 1.0 / float(m.group(3)) if m else None,
+        "f": (1.0 / rf if rf else 0.0) if m else None,
         "lat0": _param("latitude_of_origin"),
         "lon0": _param("central_meridian"),
         "k0": _param("scale_factor", 1.0),

@@ -8,11 +8,13 @@ Reference pipeline (osgeo_utils/gdal2tiles.py): base tiles at max zoom
 same with an OGC TileMatrixSet registry.
 
 Spark shape: per-page tile assignment is pure column math
-(mercator.tile_cols — no UDF, fully codegen'd); the pyramid is an
-iterative ``groupBy(tx // 2, ty // 2)`` cascade, one narrow shuffle per
-zoom — EXACTLY the reference's overview stage, with executors replacing
-the process pool. XYZ parent/child halving is exact: the ceil−1 tile
-rule commutes with integer halving (proved in tests/test_tiling.py).
+(mercator.tile_cols — no UDF, fully codegen'd); the pyramid is one
+explode-to-ancestors aggregate: each base tile emits its ancestor
+``tx >> k, ty >> k`` at every level k above it and one groupBy sums
+them. That is the reference's overview stage because XYZ halving is
+exact — the ceil−1 tile rule commutes with integer halving
+(tests/test_mercator.py::test_xyz_flip_and_parent_halving) — so an
+ancestor's count is a plain sum over its base tiles.
 
 Skew: hot tiles (urban hotspots / hot TLD centroids burn one tile with
 a large fraction of all pages) are harmless for counts because Spark's
@@ -43,24 +45,17 @@ def tile_counts(points: DataFrame, z: int, lat_col: str = "lat",
 
 
 def pyramid(base_counts: DataFrame, min_zoom: int = 0) -> DataFrame:
-    """Overview cascade: each zoom's counts from the 4 children below
-    (create_overview_tile:1466 semantics; ADD merge of children)."""
-    levels = [base_counts]
-    cur = base_counts
-    z = cur.select(F.first("z")).first()[0]
-    while z > min_zoom:
-        cur = (cur.select(
-            (F.col("z") - 1).alias("z"),
-            F.floor(F.col("tx") / 2).cast("long").alias("tx"),
-            F.floor(F.col("ty") / 2).cast("long").alias("ty"),
-            F.col("n_pages"))
-            .groupBy("z", "tx", "ty").agg(F.sum("n_pages").alias("n_pages")))
-        levels.append(cur)
-        z -= 1
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
+    """Every level from the base zoom down to ``min_zoom`` in one
+    aggregate: each base tile is exploded to its ancestors (``k`` levels
+    up is ``tx >> k, ty >> k``) and the counts summed once. This is
+    create_overview_tile:1466's ADD merge of children, applied k times.
+    The zoom is read per row, so no probe job runs. When
+    ``min_zoom >= z`` only the base level is returned."""
+    up = base_counts.select("*", F.explode(F.sequence(
+        F.lit(0), F.greatest(F.col("z") - min_zoom, F.lit(0)))).alias("k"))
+    return (up.groupBy(F.expr("z - k AS z"), F.expr("shiftright(tx, k) AS tx"),
+                       F.expr("shiftright(ty, k) AS ty"))
+            .agg(F.sum("n_pages").alias("n_pages")))
 
 
 def tile_pngs(tiles: DataFrame, tile_size: int = 32,

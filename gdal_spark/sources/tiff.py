@@ -789,7 +789,9 @@ def write_strip_tiff(df, path: str, dtype="uint8", comp="deflate",
             # clamp to the output range — NOT numpy's C-cast
             # truncate-toward-zero / modulo wrap.
             info = np.iinfo(out_dt)
-            vals = np.clip(np.floor(vals + 0.5), info.min, info.max)
+            vals = np.clip(np.where(vals >= 0, np.floor(vals + 0.5),
+                                    np.ceil(vals - 0.5)),
+                           info.min, info.max)
         block[pdf["py"].to_numpy() - y0,
               pdf["px"].to_numpy()] = vals
         payload = encode_strip(block, comp, pred)

@@ -132,3 +132,23 @@ def test_shapefile_scan_partitions_by_record_block(spark):
           .load("/root/reference/autotest/ogr/data/poly.shp"))
     assert df.rdd.getNumPartitions() == 5
     assert "PythonScan" in _plan(df) or "BatchScan" in _plan(df)
+
+
+def test_pyramid_is_one_aggregate(spark):
+    """The tile pyramid is one explode-to-ancestors aggregate: building
+    it runs no driver probe job, and its plan is the base plan plus one
+    shuffle, with no per-zoom union branches."""
+    from gdal_spark.operators import tiling
+    from gdal_spark.queries import points_df
+    base = tiling.tile_counts(points_df(spark, SF_SMOKE), 12)
+    sc = spark.sparkContext
+    group = "test_pyramid_is_one_aggregate"
+    sc.setJobGroup(group, group)
+    try:
+        pyr = tiling.pyramid(base, 0)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    plan = _plan(pyr)
+    assert "Union" not in plan
+    assert plan.count("Exchange") == _plan(base).count("Exchange") + 1

@@ -6,6 +6,8 @@ parsed from the SHIPPED poly.PRJ sidecar."""
 
 import math
 
+import pytest
+
 from gdal_spark.geo.warp import (parse_prj_wkt, tm_forward_gen,
                                  tm_inverse_gen)
 
@@ -53,3 +55,35 @@ def test_roundtrip_closure():
     lon, lat = tm_inverse_gen(E, N, p)
     x, y = tm_forward_gen(lon, lat, p)
     assert math.hypot(x - E, y - N) < 1e-6
+
+
+SPHERE_TM = (
+    'PROJCS["Sphere_TM",GEOGCS["GCS_Sphere",DATUM["D_Sphere",'
+    'SPHEROID["Sphere",6371000.0,0.0]],PRIMEM["Greenwich",0.0],'
+    'UNIT["Degree",0.0174532925199433]],'
+    'PROJECTION["Transverse_Mercator"],PARAMETER["False_Easting",500000.0],'
+    'PARAMETER["False_Northing",0.0],PARAMETER["Central_Meridian",9.0],'
+    'PARAMETER["Scale_Factor",0.9996],PARAMETER["Latitude_Of_Origin",0.0],'
+    'UNIT["Meter",1.0]]')
+
+
+def test_prj_sphere_has_zero_flattening():
+    """Inverse flattening 0 marks a sphere: f = 0, and the generalized
+    TM reduces to the spherical closed form
+    x = k0·R·atanh(cos φ sin Δλ), y = k0·R·atan(tan φ / cos Δλ)."""
+    p = parse_prj_wkt(SPHERE_TM)
+    assert (p["spheroid"], p["a"], p["f"]) == ("Sphere", 6371000.0, 0.0)
+    lon, lat = 12.0, 48.0
+    phi, dlam = math.radians(lat), math.radians(lon - 9.0)
+    x, y = tm_forward_gen(lon, lat, p)
+    assert abs(x - (500000.0 + 0.9996 * 6371000.0
+                    * math.atanh(math.cos(phi) * math.sin(dlam)))) < 1e-6
+    assert abs(y - 0.9996 * 6371000.0
+               * math.atan(math.tan(phi) / math.cos(dlam))) < 1e-6
+
+
+def test_prj_rejects_other_projections():
+    lcc = SPHERE_TM.replace("Transverse_Mercator",
+                            "Lambert_Conformal_Conic")
+    with pytest.raises(ValueError, match="Lambert_Conformal_Conic"):
+        parse_prj_wkt(lcc)

@@ -176,6 +176,19 @@ def test_writer_roundtrip_packbits_int16(tiff, tmp_path):
     np.testing.assert_array_equal(_grid(got), _grid(want))
 
 
+def test_writer_rounds_signed_half_away_from_zero(tiff, tmp_path):
+    """Signed-integer output rounds half away from zero, the
+    GDALCopyWords rule: -2.5 → -3, not numpy's floor(v + 0.5) → -2."""
+    from gdal_spark.sources.tiff import write_strip_tiff
+    out = str(tmp_path / "halves.tif")
+    src = tiff.createDataFrame(
+        [(0, 0, -2.5), (1, 0, -0.5), (2, 0, 0.5), (3, 0, 2.5)],
+        "px int, py int, value double")
+    write_strip_tiff(src, out, dtype="int16", comp="none")
+    got = tiff.read.format("tiff").load(out).toPandas()
+    assert _grid(got).tolist() == [[-3, -1, 1, 3]]
+
+
 def test_overview_chain_published_checksums(tiff):
     """byte_with_ovr.tif internal overviews = chained IFDs holding
     single padded 128x128 tiles; ifd option selects the level.

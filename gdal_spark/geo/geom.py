@@ -11,7 +11,10 @@ Semantics matched to the reference:
   Even-odd ray casting with an explicit on-boundary test (a point on any
   ring edge, including hole edges, intersects the polygon). Each edge's
   side test is the sign of the half-plane oracle's cross product, in its
-  op order; ``spatial_join.pip_sql`` is the same rule in Spark SQL.
+  op order. ``spatial_join.pip_sql`` is the same rule in Spark SQL, over
+  the edges the cover keeps for a point's cell: each of them gives the
+  same sign bit for bit, and the dropped ones provably cannot change the
+  answer (``spatial_join._cell_edges``).
 - ``polygon_area``: planar shoelace — OGR_GEOM_AREA / ``get_Area`` are
   planar (ogr/ogr_geometry.h:1788, ogr_gensql.cpp:839-841).
 - ``haversine_m``: great-circle meters on the GDAL sphere radius 6378137
@@ -99,7 +102,9 @@ def polygon_area(rings) -> float:
 
 
 def polygon_bbox(rings) -> tuple[float, float, float, float]:
-    r = np.asarray(rings[0], dtype=np.float64)
+    """Bbox over every ring: a multipart zone's later parts can lie
+    outside its first ring."""
+    r = np.concatenate([np.asarray(ring, dtype=np.float64) for ring in rings])
     return float(r[:, 0].min()), float(r[:, 1].min()), float(r[:, 0].max()), float(r[:, 1].max())
 
 

@@ -137,8 +137,10 @@ class _Wrap:
         return iter([self._el])
 
 
-def _folders(root):
-    """Yield (layer_name, [placemarks]) per the reference's model."""
+def _folders(root, path):
+    """(layer_name, [placemarks]) per the reference's model. A document
+    with no <name> is named after the file; folders sharing a name are
+    one layer, so ``read`` numbers their fids on."""
     out = []
 
     def walk(el, name):
@@ -150,7 +152,7 @@ def _folders(root):
             if _strip(c.tag) in ("Folder", "Document"):
                 walk(c, nm)
 
-    walk(root, os.path.splitext("layer")[0])
+    walk(root, os.path.splitext(os.path.basename(path))[0])
     return out
 
 
@@ -181,10 +183,13 @@ class KmlReader(DataSourceReader):
         cols = {k: [] for k in ("file", "layer", "fid", "name",
                                 "description", "geom_type", "wkb",
                                 "zs")}
-        for lname, pms in _folders(root):
+        next_fid: dict[str, int] = {}
+        for lname, pms in _folders(root, part.path):
             if part.layer is not None and lname != part.layer:
                 continue
-            for fid, pm in enumerate(pms):
+            fid0 = next_fid.get(lname, 0)
+            next_fid[lname] = fid0 + len(pms)
+            for fid, pm in enumerate(pms, fid0):
                 gt, wkb_b, zs = parse_placemark_geom(pm)
                 cols["file"].append(fname)
                 cols["layer"].append(lname)

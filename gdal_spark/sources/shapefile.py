@@ -426,10 +426,13 @@ class ShapefileReader(DataSourceReader):
         }
         keep = np.ones(n, dtype=bool)
         if m["dbf"] is not None:
+            # a short .dbf underruns [r0, r1): pad the missing tail as
+            # live records with null attributes
             dvals, deleted = dbf_block(m["dbf"], r0, r1)
-            keep &= ~deleted[:n]
+            pad = n - len(deleted)
+            keep &= ~np.concatenate([deleted, np.zeros(pad, dtype=bool)])
             for k, v in dvals.items():
-                cols[k] = v
+                cols[k] = list(v) + [None] * pad
         if m["shp"] is not None and n > 0:
             idx = m["index"]
             lo = int(idx[r0, 0])

@@ -43,3 +43,29 @@ def test_campus_polygons(spark):
     assert [r["name"] for r in rows] == [
         f"Building 4{i}" for i in range(4)]
     assert all(r["geom_type"] == "Polygon" for r in rows)
+
+
+def test_unnamed_document_and_repeated_folders(spark, tmp_path):
+    """A document with no <name> is named after its file, and two
+    folders sharing a name are one layer whose fids run on, so every
+    (layer, fid) key is unique."""
+    path = tmp_path / "roads.kml"
+    path.write_text("""<?xml version="1.0" encoding="UTF-8"?>
+<kml xmlns="http://www.opengis.net/kml/2.2"><Document>
+  <Placemark><name>a</name><Point><coordinates>1,2</coordinates></Point></Placemark>
+  <Folder><name>F</name>
+    <Placemark><name>b</name><Point><coordinates>3,4</coordinates></Point></Placemark>
+  </Folder>
+  <Folder><name>F</name>
+    <Placemark><name>c</name><Point><coordinates>5,6</coordinates></Point></Placemark>
+    <Placemark><name>d</name><Point><coordinates>7,8</coordinates></Point></Placemark>
+  </Folder>
+</Document></kml>""")
+    spark.dataSource.register(KmlDataSource)
+    rows = (spark.read.format("kml").load(str(path))
+            .orderBy("layer", "fid").collect())
+    assert [(r["layer"], r["fid"], r["name"]) for r in rows] == [
+        ("F", 0, "b"), ("F", 1, "c"), ("F", 2, "d"), ("roads", 0, "a")]
+    f = (spark.read.format("kml").option("layer", "F").load(str(path))
+         .orderBy("fid").collect())
+    assert [r["name"] for r in f] == ["b", "c", "d"]

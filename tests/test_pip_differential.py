@@ -1,0 +1,272 @@
+"""Differential test bed for the point-in-polygon join on generated zone
+layers. Three answers must agree on every (point, zone) pair:
+
+- ``spatial_join.pip_join`` (the broadcast cover join);
+- ``geom.point_in_polygon`` (numpy crossing number);
+- a DuckDB half-plane query over edge ``VALUES`` built here from each
+  zone's convex parts and holes. It imports nothing from the engine.
+
+Each seeded layer holds a concave ring, a ring with holes, a multipart
+zone, two zones sharing an edge, zero-width spikes, a triangle with its
+vertices on tile corners, a comb that puts more than ``EDGE_SLOTS``
+local edges into one z12 cell, and two squares meeting at one vertex.
+Most coordinates lie on z12 tile boundaries. Points: uniform, a lattice
+along every edge with its 8 one-ulp neighbours, and the corners of every
+cover cell with theirs. The cover is checked on its own too: every
+point in a ``full`` cell must be inside by the oracle.
+
+``PIP_BED_SEEDS=3,4,5`` runs more seeds.
+"""
+
+import os
+
+import numpy as np
+import pandas as pd
+import pytest
+
+from gdal_spark.geo import geom as G
+from gdal_spark.geo import mercator as M
+from gdal_spark.operators import spatial_join as sj
+
+Z = 12
+SEEDS = [int(s) for s in os.environ.get("PIP_BED_SEEDS", "1,2").split(",")]
+
+
+def _lon(k):
+    """Longitude of the z12 tile column boundary k (exact in float)."""
+    return k * (360.0 / 4096) - 180.0
+
+
+def _lat(j):
+    """Latitude of the z12 tile row boundary j, as the cover computes it."""
+    return float(M.tile_bounds_latlon_np(np.array([0]), np.array([j]), Z)[2][0])
+
+
+def _rect(x0, y0, x1, y1):
+    return [(x0, y0), (x1, y0), (x1, y1), (x0, y1)]
+
+
+def _zone(fid, rings, parts, holes=(), segments=()):
+    """A zone: ``rings`` for the engine; CCW convex ``parts``, CCW
+    ``holes`` and degenerate ``segments`` (each a list of half-plane
+    edges) for the half-plane oracle."""
+    return {"zone_fid": fid, "rings": rings, "parts": parts,
+            "holes": list(holes), "segments": list(segments)}
+
+
+def _hseg(xa, xb, y):
+    """Half-planes of the horizontal segment xa..xb (xa < xb) at y."""
+    return [((xa, y), (xb, y)), ((xb, y), (xa, y)),
+            ((xb, y - 1.0), (xb, y + 1.0)), ((xa, y + 1.0), (xa, y - 1.0))]
+
+
+def _vseg(x, ya, yb):
+    """Half-planes of the vertical segment ya..yb (ya < yb) at x."""
+    return [((x, yb), (x, ya)), ((x, ya), (x, yb)),
+            ((x - 1.0, ya), (x + 1.0, ya)), ((x + 1.0, yb), (x - 1.0, yb))]
+
+
+def make_layer(seed):
+    """Generated zones, each with ``rings`` (for the engine) and CCW
+    convex ``parts`` / ``holes`` (for the half-plane oracle)."""
+    rng = np.random.RandomState(seed)
+    k0 = 2161 + rng.randint(0, 8)          # ~10° E
+    j0 = 1448 + rng.randint(0, 8)          # ~46° N
+    off = lambda: float(rng.choice([0.25, 0.5, 0.3125, 0.6171875]))
+
+    def X(k, f=0.0):
+        return _lon(k0 + k) + f * (360.0 / 4096)
+
+    def Y(j):
+        return _lat(j0 - j)
+
+    zones = []
+    # concave U, on tile boundaries except the inner notch floor
+    a, b = 0, 4 + rng.randint(0, 2)
+    yf = (Y(1) + Y(2)) / 2 + off() * 1e-3
+    ring = [(X(a), Y(0)), (X(b), Y(0)), (X(b), Y(4)), (X(b - 1), Y(4)),
+            (X(b - 1), yf), (X(a + 1), yf), (X(a + 1), Y(4)), (X(a), Y(4))]
+    zones.append(_zone(0, [ring], [
+        _rect(X(a), Y(0), X(b), yf), _rect(X(a), yf, X(a + 1), Y(4)),
+        _rect(X(b - 1), yf, X(b), Y(4))]))
+    # rectangle with two holes, one on tile boundaries, one off them
+    outer = _rect(X(6), Y(0), X(11), Y(5))
+    h1 = _rect(X(7), Y(1), X(8), Y(2))
+    h2 = _rect(X(9, off()), Y(3), X(10, off()), (Y(3) + Y(4)) / 2)
+    zones.append(_zone(1, [outer, h1, h2], [outer], [h1, h2]))
+    # multipart: the second part lies outside the first part's bbox
+    p1, p2 = _rect(X(0), Y(6), X(2), Y(8)), _rect(X(4, off()), Y(9),
+                                                  X(6), Y(11))
+    zones.append(_zone(2, [p1, p2], [p1, p2]))
+    # two zones sharing part of the edge x = X(9)
+    left, right = _rect(X(7), Y(6), X(9), Y(8)), _rect(X(9), Y(7), X(11), Y(9))
+    zones.append(_zone(3, [left], [left]))
+    zones.append(_zone(4, [right], [right]))
+    # zero-width spikes: horizontal out of the right side (off the
+    # grid), vertical out of the top (on a tile boundary)
+    x0, x1, x2, y0, y1 = X(0), X(2), X(3, off()), Y(12), Y(14)
+    ys, xs, ytop = (Y(12) + Y(13)) / 2 + off() * 1e-4, X(1), Y(15)
+    ring = [(x0, y0), (x1, y0), (x1, ys), (x2, ys), (x1, ys), (x1, y1),
+            (xs, y1), (xs, ytop), (xs, y1), (x0, y1)]
+    zones.append(_zone(5, [ring], [_rect(x0, y0, x1, y1)],
+                       segments=[_hseg(x1, x2, ys), _vseg(xs, y1, ytop)]))
+    # triangle with its vertices on tile corners (diagonal edges)
+    tri = [(X(5), Y(12)), (X(9), Y(13)), (X(6), Y(16))]
+    zones.append(_zone(6, [tri], [tri]))
+    # comb: 6 teeth inside one z12 cell
+    w = (360.0 / 4096) / 13
+    base = _rect(X(12), Y(0), X(13), Y(1))
+    teeth = [_rect(X(12) + (2 * t + 1) * w, Y(1), X(12) + (2 * t + 2) * w,
+                   Y(2) - off() * 1e-3) for t in range(6)]
+    ring = [(X(12), Y(0)), (X(13), Y(0)), (X(13), Y(1))]
+    for t in reversed(teeth):
+        (tx0, _), (tx1, _), (_, ty1), _ = t
+        ring += [(tx1, Y(1)), (tx1, ty1), (tx0, ty1), (tx0, Y(1))]
+    ring += [(X(12), Y(1))]
+    zones.append(_zone(7, [ring], [base] + teeth))
+    # two squares meeting at the tile corner (X(14), Y(4))
+    sa, sb = _rect(X(13), Y(3), X(14), Y(4)), _rect(X(14), Y(4), X(15), Y(5))
+    zones.append(_zone(8, [sa, sb], [sa, sb]))
+    return zones
+
+
+# ------------------------------------------------------------- points
+
+def _neighbours(px, py):
+    """Each point with its 8 one-ulp neighbours."""
+    xs = [np.nextafter(px, -np.inf), px, np.nextafter(px, np.inf)]
+    ys = [np.nextafter(py, -np.inf), py, np.nextafter(py, np.inf)]
+    return (np.concatenate([x for x in xs for _ in ys]),
+            np.concatenate([y for _ in xs for y in ys]))
+
+
+def make_points(zones, cover, seed, per_edge=12):
+    rng = np.random.RandomState(1000 + seed)
+    allv = np.concatenate([np.asarray(r) for z in zones for r in z["rings"]])
+    (xmin, ymin), (xmax, ymax) = allv.min(axis=0), allv.max(axis=0)
+    ux = rng.uniform(xmin - 0.01, xmax + 0.01, 4000)
+    uy = rng.uniform(ymin - 0.01, ymax + 0.01, 4000)
+    lx, ly = [], []
+    t = np.linspace(0.0, 1.0, per_edge)[:, None]
+    for z in zones:
+        for r in z["rings"]:
+            a = np.asarray(r, dtype=np.float64)
+            b = np.roll(a, -1, axis=0)
+            p = (a[None] + t[..., None] * (b - a)[None]).reshape(-1, 2)
+            lx.append(p[:, 0])
+            ly.append(p[:, 1])
+    lx, ly = _neighbours(np.concatenate(lx), np.concatenate(ly))
+    minlat, minlon, maxlat, maxlon = M.tile_bounds_latlon_np(
+        cover["tx"].to_numpy(), cover["ty"].to_numpy(), Z)
+    cx, cy = _neighbours(np.concatenate([minlon, maxlon, minlon, maxlon]),
+                         np.concatenate([minlat, minlat, maxlat, maxlat]))
+    px = np.concatenate([ux, lx, cx])
+    py = np.concatenate([uy, ly, cy])
+    pts = np.unique(np.stack([px, py], axis=1), axis=0)
+    return pts[:, 0], pts[:, 1]
+
+
+# ------------------------------------------------------------- oracles
+
+def _lit(x):
+    s = repr(float(x))
+    return s if "e" in s else s + "e0"
+
+
+def _closed_edges(ring):
+    r = list(ring)
+    return list(zip(r, r[1:] + r[:1]))
+
+
+def duckdb_pairs(zones, px, py):
+    """(point, zone) pairs by the half-plane rule: inside some convex
+    part (every edge's cross product >= 0), or on a spike (a degenerate
+    part bounded by half-planes), and not strictly inside any hole."""
+    import duckdb
+
+    rows = []
+    for z in zones:
+        groups = ([(0, _closed_edges(p)) for p in z["parts"]]
+                  + [(0, seg) for seg in z["segments"]]
+                  + [(1, _closed_edges(h)) for h in z["holes"]])
+        for pid, (is_hole, edges) in enumerate(groups):
+            for (x1, y1), (x2, y2) in edges:
+                rows.append(f"({z['zone_fid']}, {pid}, {is_hole}, {_lit(x1)},"
+                            f" {_lit(y1)}, {_lit(x2)}, {_lit(y2)})")
+    con = duckdb.connect()
+    con.register("pts", pd.DataFrame({"pid": np.arange(len(px)),
+                                      "lat": py, "lon": px}))
+    cross = "(e.x2 - e.x1) * (p.lat - e.y1) - (e.y2 - e.y1) * (p.lon - e.x1)"
+    got = con.execute(f"""
+        WITH e AS (SELECT * FROM (VALUES {', '.join(rows)})
+                   AS t(zone_fid, part_id, is_hole, x1, y1, x2, y2)),
+        s AS (
+          SELECT p.pid, e.zone_fid, e.part_id, e.is_hole,
+                 MIN(CASE WHEN {cross} >= 0 THEN 1 ELSE 0 END) AS inc,
+                 MIN(CASE WHEN {cross} > 0 THEN 1 ELSE 0 END) AS strict
+          FROM pts p, e GROUP BY ALL)
+        SELECT pid, zone_fid FROM s GROUP BY pid, zone_fid
+        HAVING MAX(CASE WHEN is_hole = 0 AND inc = 1 THEN 1 ELSE 0 END) = 1
+           AND MAX(CASE WHEN is_hole = 1 AND strict = 1 THEN 1 ELSE 0 END) = 0
+    """).fetchall()
+    return set(got)
+
+
+def numpy_pairs(zones, px, py):
+    return {(int(i), z["zone_fid"]) for z in zones
+            for i in np.nonzero(G.point_in_polygon(
+                px, py, [np.asarray(r, dtype=np.float64)
+                         for r in z["rings"]]))[0]}
+
+
+def join_pairs(spark, zones, px, py, zoom):
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"pid": np.arange(len(px)), "lat": py, "lon": px}))
+    got = (sj.pip_join(pts, spark, zones=zones, zoom=zoom)
+           .select("pid", "zone_fid").toPandas())
+    return set(map(tuple, got.to_numpy().tolist()))
+
+
+# --------------------------------------------------------------- tests
+
+def _diff(a, b):
+    return sorted(a - b)[:5], sorted(b - a)[:5]
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_join_numpy_and_duckdb_agree(spark, seed):
+    zones = make_layer(seed)
+    _, cover = sj.zone_cell_cover(zones, Z)
+    px, py = make_points(zones, cover, seed)
+    want = numpy_pairs(zones, px, py)
+    oracle = duckdb_pairs(zones, px, py)
+    assert oracle == want, _diff(oracle, want)
+    for zoom in (Z, Z + 2):
+        got = join_pairs(spark, zones, px, py, zoom)
+        assert got == want, (zoom, _diff(got, want))
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_full_cells_hold_only_inside_points(seed):
+    zones = make_layer(seed)
+    _, cover = sj.zone_cell_cover(zones, Z)
+    px, py = make_points(zones, cover, seed)
+    tx, ty = M.latlon_to_tile_np(py, px, Z)
+    cell = np.asarray(tx) * (1 << Z) + np.asarray(ty)
+    full = cover[cover["full"]]
+    for z in zones:
+        f = full[full["zone_fid"] == z["zone_fid"]]
+        sel = np.isin(cell, f["tx"].to_numpy() * (1 << Z) + f["ty"].to_numpy())
+        rings = [np.asarray(r, dtype=np.float64) for r in z["rings"]]
+        assert G.point_in_polygon(px[sel], py[sel], rings).all(), z["zone_fid"]
+
+
+def test_layer_exercises_splits_and_wide_rows():
+    """The comb needs more than EDGE_SLOTS local edges in one z12 cell,
+    so its rows are split into parts; the squares' shared vertex keeps
+    four edges in every part around it."""
+    _, cover = sj.zone_cell_cover(make_layer(SEEDS[0]), Z)
+    bnd = cover[~cover["full"]]
+    comb = bnd[bnd["zone_fid"] == 7]
+    assert np.isfinite(comb["lon0"]).any()
+    assert (bnd["edges"].map(len) > sj.EDGE_SLOTS).any()

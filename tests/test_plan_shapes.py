@@ -152,3 +152,43 @@ def test_pyramid_is_one_aggregate(spark):
     plan = _plan(pyr)
     assert "Union" not in plan
     assert plan.count("Exchange") == _plan(base).count("Exchange") + 1
+
+
+def _codegen_subtrees(df) -> list[tuple[str, int]]:
+    """(plan text, largest generated method in bytes) per whole-stage
+    codegen subtree of ``df``'s executed plan. The size is the one
+    Spark's compiler reports to
+    ``CodegenMetrics.METRIC_GENERATED_METHOD_BYTECODE_SIZE``; read per
+    plan, it is free of other queries run in the same JVM."""
+    jvm = df.sparkSession._jvm
+    seq = jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(
+        df._jdf.queryExecution().executedPlan())
+    return [(seq.apply(i)._1(), seq.apply(i)._3().maxMethodCodeSize())
+            for i in range(seq.size())]
+
+
+def test_pip_join_stage_stays_under_jit_limit(spark):
+    """The join's exact test is a fixed number of edge slots read from
+    the broadcast cover, so the join stays in whole-stage codegen with
+    every generated method under HotSpot's 8000-byte compile limit, and
+    the predicate text is the same for the fixture zones and for a
+    layer ten times their size."""
+    from pyspark.sql import functions as F
+
+    from gdal_spark.fixtures import ZONES
+    from gdal_spark.operators import spatial_join as sj
+    from gdal_spark.queries import points_df
+    big = [dict(z, zone_fid=10 * i + z["zone_fid"],
+                rings=[[(x + 1.5 * i, y) for x, y in r] for r in z["rings"]])
+           for i in range(10) for z in ZONES]
+    texts = []
+    for zones in (ZONES, big):
+        df = (sj.pip_join(points_df(spark, SF_SMOKE), spark, zones=zones)
+              .groupBy("zone_fid").agg(F.count("*")))
+        df.collect()
+        stages = _codegen_subtrees(df)
+        assert any("BroadcastHashJoin" in text for text, _ in stages)
+        assert max(size for _, size in stages) < 8000, stages
+        zoom, cover = sj.zone_cell_cover(zones)
+        texts.append(sj.pip_sql(sj._slot_count(cover)))
+    assert texts[0] == texts[1]

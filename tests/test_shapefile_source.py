@@ -201,3 +201,35 @@ def test_real_world_county_extract(spark):
     assert len(r) == 1
     assert r[0]["shape_type"] == "Polygon"
     assert r[0]["wkb"] is not None and r[0]["n_points"] > 4
+
+
+def _null_shapefile(base, n_shp, n_dbf):
+    """``n_shp`` null-shape records in .shp, a one-field (N 4.0) .dbf
+    whose header and body hold only ``n_dbf`` records (no .shx)."""
+    recs = b"".join(struct.pack(">ii", i + 1, 2) + struct.pack("<i", 0)
+                    for i in range(n_shp))
+    head = struct.pack(">7i", 9994, 0, 0, 0, 0, 0, (100 + len(recs)) // 2)
+    head += struct.pack("<2i4d4d", 1000, 0, 0, 0, 0, 0, 0, 0, 0, 0)
+    with open(f"{base}.shp", "wb") as fh:
+        fh.write(head + recs)
+    desc = b"V".ljust(11, b"\0") + b"N" + bytes(4) + bytes([4, 0]) \
+        + bytes(14)
+    rsz, hsz = 1 + 4, 32 + len(desc) + 1
+    dhead = bytes([3, 26, 1, 1]) + struct.pack("<IHH", n_dbf, hsz, rsz) \
+        + bytes(20)
+    body = b"".join(b" " + str(10 + i).rjust(4).encode()
+                    for i in range(n_dbf))
+    with open(f"{base}.dbf", "wb") as fh:
+        fh.write(dhead + desc + b"\r" + body)
+
+
+def test_short_dbf_pads_attributes_with_nulls(spark, tmp_path):
+    """A .dbf with fewer records than the .shp: the missing attribute
+    rows read as nulls instead of failing the scan."""
+    base = str(tmp_path / "short")
+    _null_shapefile(base, n_shp=3, n_dbf=1)
+    spark.dataSource.register(ShapefileDataSource)
+    rows = (spark.read.format("shapefile").load(f"{base}.shp")
+            .orderBy("fid").collect())
+    assert [(r["fid"], r["V"]) for r in rows] == [(0, 10), (1, None),
+                                                   (2, None)]

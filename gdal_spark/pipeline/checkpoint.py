@@ -31,6 +31,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gdal_spark.sources.commit import atomic_write
+
 
 class SnapshotStore:
     def __init__(self, base_dir: str):
@@ -107,10 +109,8 @@ class SnapshotStore:
             },
             "schema": out.schema.jsonValue(),
         }
-        tmp = self._manifest_path(stage) + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, self._manifest_path(stage))
+        atomic_write(self._manifest_path(stage),
+                     [json.dumps(manifest, indent=1).encode()])
         return out
 
     def lineage(self, stage: str) -> list[dict]:
@@ -193,8 +193,6 @@ class VersionedTable(SnapshotStore):
                         "upsert_key": key},
             "schema": written.schema.jsonValue(),
         }
-        tmp = self._manifest_path(table) + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, self._manifest_path(table))
+        atomic_write(self._manifest_path(table),
+                     [json.dumps(manifest, indent=1).encode()])
         return manifest

@@ -23,6 +23,7 @@ WKB path."""
 from __future__ import annotations
 
 import glob as _glob
+import itertools
 import json
 import os
 import struct
@@ -32,6 +33,8 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader,
 from pyspark.sql.types import (BinaryType, DoubleType, IntegerType,
                                LongType, MapType, StringType,
                                StructField, StructType)
+
+from gdal_spark.sources import commit
 
 GEOJSON_SCHEMA = StructType([
     StructField("file", StringType()),
@@ -240,22 +243,19 @@ def write_geojson(df, path: str, attr_cols, id_field=None,
     test_ogr_geojson_id_field_and_id_type).
 
     ``df`` needs fid (dense 0..n-1), wkb, and ``attr_cols``.
-    Executors serialize each fid-block's feature lines into a part
-    file (two-phase rename); the driver concatenates them inside the
-    FeatureCollection wrapper — O(bytes copied), no feature ever
+    Commits through sources/commit.py: executors serialize each
+    fid-block's feature lines into a part file, every block but the
+    first starting with its own separator, so the driver streams the
+    parts in block order inside the FeatureCollection wrapper and
+    replaces ``path`` atomically — O(bytes copied), no feature ever
     parsed driver-side."""
-    import pandas as _pd
     from pyspark.sql import functions as F
 
-    tmp_dir = path + ".parts"
-    os.makedirs(tmp_dir, exist_ok=True)
     cols = list(attr_cols)
 
-    def one_block(key, pdf):
-        blk = int(key[0])
-        pdf = pdf.sort_values("fid")
+    def encode(blk, pdf):
         lines = []
-        for _, row in pdf.iterrows():
+        for _, row in pdf.sort_values("fid").iterrows():
             feat = {"type": "Feature"}
             if id_field is not None:
                 v = row[id_field]
@@ -278,34 +278,16 @@ def write_geojson(df, path: str, attr_cols, id_field=None,
                 else wkb_to_geojson_geom(bytes(row["wkb"])))
             lines.append(json.dumps(feat, separators=(",", ":"),
                                     ensure_ascii=False))
-        part = os.path.join(tmp_dir, f"gj-{blk:06d}")
-        with open(part + ".tmp", "w", encoding="utf-8") as fh:
-            fh.write(",\n".join(lines))
-        os.replace(part + ".tmp", part)
-        return _pd.DataFrame({"blk": [blk], "n": [len(pdf)]})
+        text = (",\n" if blk else "") + ",\n".join(lines)
+        return {"gj": text.encode("utf-8")}, {"n": len(pdf)}
 
-    report = (df.withColumn("_blk",
-                            (F.col("fid") / F.lit(rpb)).cast("int"))
-              .groupBy("_blk")
-              .applyInPandas(one_block, "blk int, n long")
-              .collect())
-    report.sort(key=lambda r: r["blk"])
-    with open(path, "w", encoding="utf-8") as out:
-        out.write('{"type":"FeatureCollection","features":[\n')
-        first = True
-        for r in report:
-            if r["n"] == 0:
-                continue
-            if not first:
-                out.write(",\n")
-            first = False
-            with open(os.path.join(tmp_dir, f"gj-{r['blk']:06d}"),
-                      encoding="utf-8") as fh:
-                out.write(fh.read())
-        out.write("\n]}\n")
-    for r in report:
-        os.remove(os.path.join(tmp_dir, f"gj-{r['blk']:06d}"))
-    os.rmdir(tmp_dir)
+    with commit.parts_dir(path) as tmp_dir:
+        report = commit.write_blocks(
+            df, (F.col("fid") / F.lit(rpb)).cast("int"), tmp_dir, encode,
+            "n long")
+        commit.atomic_write(path, itertools.chain(
+            [b'{"type":"FeatureCollection","features":[\n'],
+            commit.parts(tmp_dir, "gj", len(report)), [b"\n]}\n"]))
     return {"n": int(sum(r["n"] for r in report))}
 
 

@@ -35,6 +35,7 @@ re-derived from the published autotest expectations, not the source):
 from __future__ import annotations
 
 import glob as _glob
+import itertools
 import os
 import struct
 
@@ -46,6 +47,8 @@ from pyspark.sql.types import (ArrayType, BinaryType, BooleanType,
                                DateType, DoubleType, IntegerType,
                                LongType, StringType, StructField,
                                StructType)
+
+from gdal_spark.sources import commit
 
 SHAPE_NAMES = {
     0: "Null", 1: "Point", 3: "Arc", 5: "Polygon", 8: "MultiPoint",
@@ -631,115 +634,89 @@ def write_shapefile(df, path: str, fields, rpb: int = 4096) -> dict:
     file format's physical layout), ``wkb``, plus one column per DBF
     field. ``fields`` = [(name, type, len, dec)...] dBASE specs.
 
-    Two-phase commit like sources/tiff.py's strip writer: each fid
-    block shuffles once on floor(fid/rpb), applyInPandas encodes the
-    block's .shp records AND .dbf records into two part files
-    (tmp + atomic rename), returns per-record content lengths +
-    the block envelope; the driver then writes the 100-byte header,
-    concatenates parts in order, derives every .shx offset from the
-    returned lengths, and assembles the .dbf header. Driver memory
-    is O(n_records) index words, never geometry."""
-    import pandas as _pd
+    Commits through sources/commit.py: each fid block (floor(fid/rpb))
+    encodes its .shp and .dbf records into two parts and reports its
+    record lengths, shape types and envelope; the driver derives the
+    headers and every .shx offset from that (O(n_records) index words,
+    never geometry) and streams the parts behind them. The header
+    shape type is the one the non-null records share (a mix raises
+    ValueError); with none it is 0 (null) and the bbox is zero.
+
+    The .dbf and .shx are committed before the .shp. Each file is
+    replaced atomically; the set of three is not, so a crash between
+    commits can pair a new .dbf with an old .shp."""
     from pyspark.sql import functions as F
 
     base = os.path.splitext(path)[0]
-    tmp_dir = base + ".parts"
-    os.makedirs(tmp_dir, exist_ok=True)
     field_list = [tuple(f) for f in fields]
-    attr_cols = [f[0] for f in field_list]
 
-    def one_block(key, pdf):
-        blk = int(key[0])
-        pdf = pdf.sort_values("fid")
-        shp_parts, lens = [], []
-        bx0 = by0 = np.inf
-        bx1 = by1 = -np.inf
-        dbf_parts = []
-        for _, row in pdf.iterrows():
-            rec = _encode_shp_record(int(row["fid"]),
-                                     row["wkb"])
-            shp_parts.append(rec)
+    def encode(blk, pdf):
+        shp, dbf, lens, types = [], [], [], set()
+        box = [np.inf, np.inf, -np.inf, -np.inf]
+        for _, row in pdf.sort_values("fid").iterrows():
+            rec = _encode_shp_record(int(row["fid"]), row["wkb"])
+            shp.append(rec)
             lens.append(len(rec) - 8)
-            if row["wkb"] is not None:
-                st = struct.unpack_from("<i", rec, 8)[0]
-                if st == 5:
-                    x0, y0, x1, y1 = struct.unpack_from(
-                        "<4d", rec, 12)
-                elif st == 1:
-                    x0, y0 = struct.unpack_from("<dd", rec, 12)
-                    x1, y1 = x0, y0
-                bx0, by0 = min(bx0, x0), min(by0, y0)
-                bx1, by1 = max(bx1, x1), max(by1, y1)
-            dbf_parts.append(_encode_dbf_record(row, field_list))
-        for ext, payload in (("shp", b"".join(shp_parts)),
-                             ("dbf", b"".join(dbf_parts))):
-            part = os.path.join(tmp_dir, f"{ext}-{blk:06d}")
-            with open(part + ".tmp", "wb") as fh:
-                fh.write(payload)
-            os.replace(part + ".tmp", part)
-        return _pd.DataFrame({
-            "blk": [blk], "n": [len(pdf)],
-            "lens": [",".join(map(str, lens))],
-            "xmin": [bx0], "ymin": [by0],
-            "xmax": [bx1], "ymax": [by1]})
+            st = struct.unpack_from("<i", rec, 8)[0]
+            if st != 0:
+                types.add(st)
+                x0, y0, x1, y1 = (struct.unpack_from("<4d", rec, 12)
+                                  if st == 5 else
+                                  struct.unpack_from("<dd", rec, 12) * 2)
+                box = [min(box[0], x0), min(box[1], y0),
+                       max(box[2], x1), max(box[3], y1)]
+            dbf.append(_encode_dbf_record(row, field_list))
+        return ({"shp": b"".join(shp), "dbf": b"".join(dbf)},
+                {"lens": ",".join(map(str, lens)),
+                 "types": ",".join(map(str, types)),
+                 "xmin": box[0], "ymin": box[1],
+                 "xmax": box[2], "ymax": box[3]})
 
-    report = (df.withColumn("_blk",
-                            (F.col("fid") / F.lit(rpb)).cast("int"))
-              .groupBy("_blk")
-              .applyInPandas(one_block,
-                             "blk int, n long, lens string, "
-                             "xmin double, ymin double, "
-                             "xmax double, ymax double")
-              .collect())
-    report.sort(key=lambda r: r["blk"])
-    lens = [int(v) for r in report for v in r["lens"].split(",")]
-    n = len(lens)
-    bbox = (min(r["xmin"] for r in report),
-            min(r["ymin"] for r in report),
-            max(r["xmax"] for r in report),
-            max(r["ymax"] for r in report))
+    with commit.parts_dir(base) as tmp_dir:
+        report = commit.write_blocks(
+            df, (F.col("fid") / F.lit(rpb)).cast("int"), tmp_dir, encode,
+            "lens string, types string, xmin double, ymin double, "
+            "xmax double, ymax double")
+        lens = [int(v) for r in report for v in r["lens"].split(",")]
+        n = len(lens)
+        types = {t for r in report for t in r["types"].split(",") if t}
+        if len(types) > 1:
+            raise ValueError(f"mixed shape types {sorted(types)}: a "
+                             "shapefile holds one shape type")
+        stype = int(types.pop()) if types else 0
+        live = [r for r in report if r["xmin"] <= r["xmax"]]
+        bbox = ((min(r["xmin"] for r in live), min(r["ymin"] for r in live),
+                 max(r["xmax"] for r in live), max(r["ymax"] for r in live))
+                if live else (0.0, 0.0, 0.0, 0.0))
 
-    # --- .shp + .shx: header then ordered byte concat / offsets ---
-    total = 100 + sum(8 + ln for ln in lens)
-    head = (struct.pack(">i5i", 9994, 0, 0, 0, 0, 0)
-            + struct.pack(">i", total // 2)
-            + struct.pack("<ii", 1000, 5)
-            + struct.pack("<4d", *bbox) + struct.pack("<4d", 0, 0, 0, 0))
-    with open(path, "wb") as out:
-        out.write(head)
-        for r in report:
-            with open(os.path.join(tmp_dir,
-                                   f"shp-{r['blk']:06d}"), "rb") as fh:
-                out.write(fh.read())
-    with open(base + ".shx", "wb") as out:
-        out.write(head[:24] + struct.pack(">i", (100 + 8 * n) // 2)
-                  + head[28:])
-        off = 100
+        # .dbf: header + descriptors + ordered records + 0x1A
+        rsz = 1 + sum(f[2] for f in field_list)
+        hsz = 32 + 32 * len(field_list) + 1
+        dbf_head = (struct.pack("<B3BIHH20x", 3, 95, 7, 26, n, hsz, rsz)
+                    + b"".join(name.encode("ascii")[:11].ljust(11, b"\0")
+                               + ftype.encode("ascii") + b"\0\0\0\0"
+                               + bytes([flen, fdec]) + b"\0" * 14
+                               for name, ftype, flen, fdec in field_list)
+                    + b"\x0d")
+        commit.atomic_write(base + ".dbf", itertools.chain(
+            [dbf_head], commit.parts(tmp_dir, "dbf", len(report)),
+            [b"\x1a"]))
+
+        # .shp + .shx: one header, offsets from the reported lengths
+        total = 100 + sum(8 + ln for ln in lens)
+        head = (struct.pack(">i5i", 9994, 0, 0, 0, 0, 0)
+                + struct.pack(">i", total // 2)
+                + struct.pack("<ii", 1000, stype)
+                + struct.pack("<4d", *bbox) + struct.pack("<4d", 0, 0, 0, 0))
+        shx, off = [head[:24] + struct.pack(">i", (100 + 8 * n) // 2)
+                    + head[28:]], 100
         for ln in lens:
-            out.write(struct.pack(">ii", off // 2, ln // 2))
+            shx.append(struct.pack(">ii", off // 2, ln // 2))
             off += 8 + ln
-
-    # --- .dbf: header + descriptors + ordered concat + 0x1A ---
-    rsz = 1 + sum(f[2] for f in field_list)
-    hsz = 32 + 32 * len(field_list) + 1
-    with open(base + ".dbf", "wb") as out:
-        out.write(struct.pack("<B3BIHH20x", 3, 95, 7, 26, n, hsz, rsz))
-        for name, ftype, flen, fdec in field_list:
-            out.write(name.encode("ascii")[:11].ljust(11, b"\0")
-                      + ftype.encode("ascii")
-                      + b"\0\0\0\0"
-                      + bytes([flen, fdec]) + b"\0" * 14)
-        out.write(b"\x0d")
-        for r in report:
-            with open(os.path.join(tmp_dir,
-                                   f"dbf-{r['blk']:06d}"), "rb") as fh:
-                out.write(fh.read())
-        out.write(b"\x1a")
-    for r in report:
-        os.remove(os.path.join(tmp_dir, f"shp-{r['blk']:06d}"))
-        os.remove(os.path.join(tmp_dir, f"dbf-{r['blk']:06d}"))
-    os.rmdir(tmp_dir)
-    return {"n": n, "bbox": bbox, "attr_cols": attr_cols}
+        commit.atomic_write(base + ".shx", shx)
+        commit.atomic_write(path, itertools.chain(
+            [head], commit.parts(tmp_dir, "shp", len(report))))
+    return {"n": n, "bbox": bbox, "attr_cols": [f[0] for f in field_list]}
 
 
 # ------------------------------------------------------------ ISO WKT ---

@@ -46,16 +46,17 @@ contig_strip / seperate_strip band 2 == 15234, issue #1179) via the
 ``tiff_tiled_scan`` gate.
 
 The module also carries the WRITER half (write_strip_tiff): strips
-are predictor-2-differenced and compressed on executors (one part
-file per strip, two-phase commit exactly like sources/wet.py — the
-commit-side rename requires a filesystem shared by driver and
-executors: local mode, NFS, or a fuse mount), then the driver
-assembles header + IFD + strip bytes. gdal_translate's
+are predictor-2-differenced and compressed on executors, one part
+file per strip, then the driver streams header + IFD + strip bytes
+into the final file. The parts, their ordered concat and the atomic
+rename are the shared sink commit path in sources/commit.py (which
+states its shared-filesystem contract). gdal_translate's
 CreateCopy-to-GTiff analog for the engine's pixel schema.
 """
 
 from __future__ import annotations
 
+import itertools
 import struct
 import zlib
 
@@ -63,6 +64,8 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     InputPartition)
 from pyspark.sql.types import (BinaryType, DoubleType, IntegerType,
                                StringType, StructField, StructType)
+
+from gdal_spark.sources import commit
 
 PIXEL_SCHEMA = StructType([
     StructField("file", StringType()),
@@ -750,19 +753,16 @@ def write_strip_tiff(df, path: str, dtype="uint8", comp="deflate",
     strip's pixels shuffle once on strip id, the strip is assembled,
     predictor-2 differenced and compressed inside applyInPandas, and
     lands as one part file. The driver then writes header + IFD and
-    concatenates the (already-compressed) strip bytes in order —
-    driver work is O(n_strips) metadata plus a byte copy, never pixel
-    math. Same two-phase-commit / shared-filesystem contract as
-    sources/wet.py (documented there and in the module docstring).
+    streams the (already-compressed) strip bytes in order — driver
+    work is O(n_strips) metadata plus a byte copy, never pixel math.
+    Parts, the missing-strip check and the atomic final rename are
+    sources/commit.py's, with its shared-filesystem contract.
 
     Reference analog: GTiff CreateCopy + TIFFWriteEncodedStrip
     (frmts/gtiff/geotiff.cpp); the strip layout mirrors what
     gdal_translate emits for a BAND-interleaved single-band raster.
     """
-    import os
-
     import numpy as np
-    import pandas as pd
     from pyspark.sql import functions as F
 
     w, h = [(r["w"], r["h"]) for r in df.agg(
@@ -774,11 +774,8 @@ def write_strip_tiff(df, path: str, dtype="uint8", comp="deflate",
                "packbits": 32773, "g4": 4}[comp]
     pred = 2 if comp in ("deflate", "lzw") \
         and np.dtype(dtype).kind != "f" else 1
-    tmp_dir = path + ".parts"
-    os.makedirs(tmp_dir, exist_ok=True)
 
-    def one_strip(key, pdf):
-        strip = int(key[0])
+    def one_strip(strip, pdf):
         y0 = strip * rps
         nrows = min(rps, h - y0)
         out_dt = np.dtype(dtype)
@@ -795,40 +792,22 @@ def write_strip_tiff(df, path: str, dtype="uint8", comp="deflate",
         block[pdf["py"].to_numpy() - y0,
               pdf["px"].to_numpy()] = vals
         payload = encode_strip(block, comp, pred)
-        part = os.path.join(tmp_dir, f"strip-{strip:06d}")
-        with open(part + ".tmp", "wb") as fh:
-            fh.write(payload)
-        os.replace(part + ".tmp", part)
-        return pd.DataFrame({"strip": [strip],
-                             "nbytes": [len(payload)],
-                             "rows": [len(pdf)]})
+        return {"strip": payload}, {"nbytes": len(payload),
+                                    "rows": len(pdf)}
 
-    report = (df.withColumn("strip",
-                            (F.col("py") / F.lit(rps)).cast("int"))
-              .groupBy("strip")
-              .applyInPandas(one_strip,
-                             "strip int, nbytes long, rows long")
-              .collect())
-    by_strip = {r["strip"]: r["nbytes"] for r in report}
-    if set(by_strip) != set(range(nstrips)):
-        missing = sorted(set(range(nstrips)) - set(by_strip))
-        raise IOError(f"strips missing from write: {missing[:5]}")
-    lens = [by_strip[s] for s in range(nstrips)]
-    header = _ifd_bytes(w, h, dtype, comp_id, pred, rps, lens,
-                        data_start=0, geotransform=geotransform)
-    header = _ifd_bytes(w, h, dtype, comp_id, pred, rps, lens,
-                        data_start=len(header),
-                        geotransform=geotransform)
-    with open(path + ".tmp", "wb") as fh:
-        fh.write(header)
-        for s in range(nstrips):
-            with open(os.path.join(tmp_dir,
-                                   f"strip-{s:06d}"), "rb") as p:
-                fh.write(p.read())
-    os.replace(path + ".tmp", path)
-    for s in range(nstrips):
-        os.remove(os.path.join(tmp_dir, f"strip-{s:06d}"))
-    os.rmdir(tmp_dir)
+    with commit.parts_dir(path) as tmp_dir:
+        # dense strip ids 0..k-1 with strip(max py) among them: k == nstrips
+        report = commit.write_blocks(
+            df, (F.col("py") / F.lit(rps)).cast("int"), tmp_dir, one_strip,
+            "nbytes long, rows long")
+        lens = [r["nbytes"] for r in report]
+        header = _ifd_bytes(w, h, dtype, comp_id, pred, rps, lens,
+                            data_start=0, geotransform=geotransform)
+        header = _ifd_bytes(w, h, dtype, comp_id, pred, rps, lens,
+                            data_start=len(header),
+                            geotransform=geotransform)
+        commit.atomic_write(path, itertools.chain(
+            [header], commit.parts(tmp_dir, "strip", nstrips)))
     return {"path": path, "w": w, "h": h, "strips": nstrips,
             "bytes": len(header) + sum(lens),
             "rows": int(sum(r["rows"] for r in report))}

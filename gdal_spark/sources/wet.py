@@ -158,14 +158,15 @@ class WetWriter(DataSourceWriter):
     the sink half of the format driver (GDAL: Driver::Create /
     CreateCopy, gcore/gdaldriver.cpp; OGR partitioned sink SURVEY
     §2.1). Each task streams its partition into a TEMPORARY gzip
-    member; ``commit`` renames the temps into place atomically once
-    every task reports success (and only then applies an overwrite's
-    deletion of prior parts), ``abort`` removes the temps — neither a
-    partial dataset nor a destroyed-then-unreplaced one is ever
-    visible, the all-or-nothing contract an Iceberg/parquet sink
-    gives. Append mode numbers new parts AFTER the existing ones, so
-    successive appends never clobber earlier shards (the ogr2ogr
-    ACCESS_APPEND analog).
+    member (``_``-prefixed, so readers skip it); ``commit`` runs only
+    once every task reports success, ``abort`` removes the temps. So a
+    failed job never touches the existing dataset, and no task's
+    partial output is ever visible. ``commit`` itself is not atomic:
+    an overwrite deletes the prior parts first, then renames the new
+    ones in one by one, so a crash inside ``commit`` can leave the
+    directory with none or only some of the new parts. Append mode
+    numbers new parts AFTER the existing ones, so successive appends
+    never clobber earlier shards (the ogr2ogr ACCESS_APPEND analog).
 
     Filesystem contract: ``commit`` runs on the DRIVER and renames the
     task-written temp files, so ``path`` must be a filesystem shared

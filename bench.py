@@ -1,15 +1,16 @@
 #!/usr/bin/env python
 """Benchmark harness — one JSON line on stdout.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. The primary metric is
-pages/sec of the flagship spatial-join + tiling pipeline over the
-high-volume points table (BASELINE.md protocol).
+Times the flagship, then every REGISTRY query, at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. The primary
+metric is pages/sec of the flagship spatial-join + tiling pipeline over
+the high-volume points table (BASELINE.md protocol). Queries whose input
+is the absent GDAL autotest tree are counted as skipped.
 
 Usage:
   python bench.py                 # single run, one JSON line
-  python bench.py --scaling       # run flagship at local[8] and
-                                  # local[32], report efficiency
+  python bench.py --scaling       # run the scaling job at local[N] and
+                                  # local[4N], report efficiency
                                   # (BASELINE.json north rule: ≥0.8)
 """
 
@@ -29,15 +30,9 @@ def _force(df) -> int:
     return df.count()
 
 
-def flagship(spark, sf_dir: str, replicate: int = 1):
+def flagship(spark, sf_dir: str):
     """Geocode → cell index → PIP join → per-zone counts AND z12 tile
-    counts + pyramid to z6 — the north-star job shape.
-
-    ``replicate`` unions the point table onto itself N× (pure column
-    explode, applied identically at every parallelism level) so the
-    scaling runs measure a compute-dominated job: at sf0.1 the raw
-    600k-row pipeline is stage-latency-bound and parallelism cannot
-    show (a 10^12-row job is the compute-bound regime)."""
+    counts + pyramid to z6 — the north-star job shape."""
     from pyspark.sql import functions as F
 
     from gdal_spark.operators import spatial_join as sj
@@ -45,182 +40,47 @@ def flagship(spark, sf_dir: str, replicate: int = 1):
     from gdal_spark.queries import points_df
 
     pts = points_df(spark, sf_dir)
-    if replicate > 1:
-        pts = (pts.withColumn("_rep", F.explode(
-                   F.sequence(F.lit(0), F.lit(replicate - 1))))
-               .withColumn("pt_id",
-                           F.col("pt_id") * replicate + F.col("_rep"))
-               .drop("_rep"))
     hits = sj.pip_join(pts, spark, point_fid="pt_id")
     zone_counts = hits.groupBy("zone_fid").agg(F.count("*").alias("n"))
     tiles = tiling.pyramid(tiling.tile_counts(pts, 12), min_zoom=6)
     return zone_counts, tiles
 
 
-def bench_queries(spark, sf_dir: str) -> dict[str, float]:
+def time_flagship(spark, sf_dir: str) -> float:
+    """Median of 3 warm flagship runs, after one warm-up pass so
+    JVM/codegen/page-cache costs are not billed to the measured runs
+    (steady state is what a long cluster job sees)."""
     import statistics
 
-    from gdal_spark.queries import REGISTRY, points_df
+    times = []
+    for run in range(4):  # run 0 is the warm-up
+        t0 = time.monotonic()
+        for df in flagship(spark, sf_dir):
+            _force(df)
+        if run:
+            times.append(time.monotonic() - t0)
+    return statistics.median(times)
+
+
+def bench_queries(spark, sf_dir: str) -> tuple[dict[str, float], list[str]]:
+    """One timed run of every REGISTRY query, in registry order. A query
+    that raises FixtureMissing (its input is the absent GDAL autotest
+    tree) is skipped and named in the second return value; any other
+    exception propagates."""
+    from gdal_spark.fixtures import FixtureMissing
+    from gdal_spark.queries import REGISTRY
 
     out: dict[str, float] = {}
-
-    # warm-up: one full flagship pass so JVM/codegen/page-cache costs
-    # are not billed to the measured runs (steady state is what a long
-    # cluster job sees)
-    zc, tiles = flagship(spark, sf_dir)
-    _force(zc)
-    _force(tiles)
-
-    times = []
-    for _ in range(3):
+    skipped: list[str] = []
+    for name, (fn, _) in REGISTRY.items():
         t0 = time.monotonic()
-        zc, tiles = flagship(spark, sf_dir)
-        _force(zc)
-        _force(tiles)
-        times.append(time.monotonic() - t0)
-    out["flagship_join_tile"] = statistics.median(times)
-
-    for name in ["pip_join", "knn", "rasterize_points", "tile_pyramid",
-                 "zonal_stats", "dedup_exact", "token_count", "ann_cosine",
-                 "simhash_lsh", "summary", "events_window", "polygonize",
-                 "grid_invdist", "minhash_lsh", "hilbert_sort",
-                 "warp_resample", "proximity", "overview_modes",
-                 # round-2 additions
-                 "warp_bilinear", "warp_cubic", "rasterize_lines",
-                 "rasterize_touched", "polygonize_rings", "footprint",
-                 "tld_hull", "ivf_ann", "grid_invdistnn", "grid_average",
-                 "contour_segments", "geodesic_measures", "algebra_pieces",
-                 "utm_transform", "geodetic_tiles", "simplify",
-                 # round-2 late additions
-                 "dem_hillshade", "dem_color_relief", "binary_features",
-                 "token_bpe", "tile_counts_salted", "stream_dedup",
-                 "raster_scale", "dem_hillshade_variants",
-                 # round-3 additions
-                 "sieve_merge", "warp_average", "warp_mode", "warp_sum_rms",
-                 "zonal_weighted", "dissolve_geom", "contour_polygons",
-                 "grid_linear", "delaunay_tri", "langid",
-                 "warp_quantiles", "overview_gauss_rms", "buffer_polygons",
-                 "frame_sample", "polar_stereo", "ogr2ogr_compose",
-                 "quality", "ngram_jaccard", "buffer_lines", "fillnodata",
-                 "fillnodata_smooth", "line_of_sight",
-                 # round-3 late additions
-                 "median_cut", "viewshed", "pansharpen", "gcp_polywarp",
-                 "tps_warp", "nearblack", "raster_neighbors", "reclassify",
-                 "raster_blend", "blend_hsv", "lineref_stations", "lineref_project",
-                 "rpc_transform", "hist_equalize", "viewshed_cumulative",
-                 "line_dedup", "url_canonical",
-                 "raster_stack", "raster_update", "pixel_info", "check_geometry",
-                 "dem_hillshade_igor", "stream_geofence", "dither",
-                 "grid_metrics_avg", "dedup_clusters", "pq_ann", "gopher_quality",
-                 # round-3 final additions
-                 "gopher_repetition", "unigram_logprob", "pii_redact",
-                 "pct2rgb", "rasterize_invert", "polygonize_8conn",
-                 "point_on_surface", "oriented_envelope", "set_precision",
-                 "bloom_dedup", "stratified_sample", "decontaminate",
-                 "domain_filter", "band_checksum", "translate_window",
-                 "los_curvature", "tile_tms", "lang_mixture",
-                 "raster_as_features", "raster_compare", "raster_set_type",
-                 "coverage_check", "quality_logistic", "length_outliers",
-                 "asof_join", "range_join", "funnel",
-                 "html_extract", "link_graph", "pagerank_domains",
-                 "simplify_coverage", "clean_coverage", "swap_xy",
-                 "tfidf_topk", "bm25_search", "inverted_index",
-                 "bpe_train", "overview_refresh", "sequence_pack",
-                 "bigram_logprob", "perplexity_buckets", "bpe_apply",
-                 "label_centroids", "curation_pipeline", "geom_distance",
-                 "hll_count", "tld_lang_rollup", "resample_ffill",
-                 "corpus_diff", "robots_filter", "stream_interval_join",
-                 "dsir_weights", "paragraph_dedup", "zonal_median",
-                 "weighted_sample", "ann_recall", "text_normalize",
-                 "upsert_merge", "pca_power", "lineref_subline",
-                 "chunk_overlap", "quadkey", "raster_stretch_pct",
-                 "event_anomaly", "user_retention", "pivot_lang",
-                 "incremental_dedup", "langid_margin", "dedup_best_rep",
-                 "geofence_transitions", "length_deciles", "crawl_schedule",
-                 "compaction_plan", "manifest_stats",
-                 "star_join_revenue", "unpivot_lang", "pricing_summary",
-                 "customers_no_orders", "monthly_growth", "props_extract",
-                 "embedding_stats", "skew_report", "zone_lang_matrix",
-                 "cdc_latest", "zone_top_terms", "mix_execute",
-                 "areal_interp", "zone_compactness", "voronoi_cells",
-                 "grid_invdist_aniso", "point_sample",
-                 "sql_having_case", "sql_set_ops", "dup_spans",
-                 "time_travel", "focal_box5", "shortest_paths",
-                 "warp_approx", "raster_crosstab", "semdedup",
-                 "dbscan", "redirect_resolve", "resample_linear",
-                 "geohash_encode", "sql_exists", "window_range_frame",
-                 "triangle_count", "color_relief_modes",
-                 "grouping_sets", "group_quantiles", "raster_cdf",
-                 "range_coalesce", "vector_combine", "vshift_apply",
-                 "sql_lateral", "layout_pruning",
-                 # round-3 closing session
-                 "homography_warp", "network_dijkstra", "surf_match",
-                 "geoloc_forward", "geoloc_backmap", "clean_collar",
-                 "raster_resize", "mdim_reduce", "classifier_auc",
-                 "vocab_growth",
-                 # round-3 extension session
-                 "morphology", "component_stats", "retile_index", "raster_xyz", "c4_filters",
-                 "hist_match", "substring_dedup", "phash_neardup",
-                 "cms_heavy_hitters", "scd2_history", "winnowing",
-                 "mdim_mosaic", "dem_curvature", "component_moments",
-                 "token_pmi", "stream_cms", "export_schema",
-                 "d8_flow", "watershed", "flow_accumulation",
-                 "segment_intersections", "strahler_order",
-                 "ema_smoothing", "theil_sen",
-                 "transform_geolocs", "buildvrt_grid", "soft_dedup",
-                 "point_sample_cubic", "anchor_text_index",
-                 "cover_compact", "geoloc_warp", "encoding_fix",
-                 "lsh_curve", "doc_shuffle",
-                 # round-3 final session
-                 "cutline_blend", "gcp_refine", "line_merge",
-                 "ndcg_eval", "luhn_cc", "addo_plan",
-                 "kwic_snippets", "char_entropy",
-                 "line_zonal_length", "str_pack", "zipf_fit",
-                 "bloom_fpr", "stats_approx",
-                 # round-3 continuation session
-                 "sql_not_in_null", "warp_nodata", "warc_records",
-                 "bitext_mine", "cdx_index", "mime_filter",
-                 "warp_nodata_avg", "hashclf_score",
-                 "geojsonseq_scan", "gdalinfo_report", "session_window_agg",
-                 "sql_udf_registered", "grouped_agg_udaf",
-                 "udtf_url_segments", "variant_extract", "recursive_cte",
-                 # round-4 additions (+ the three global-window queries
-                 # rewritten two-phase, re-listed so their before/after
-                 # is recorded: classifier_auc / perplexity_buckets /
-                 # length_deciles already appear above)
-                 "tiff_scan", "algebra_pieces_general",
-                 "ogr2ogr_compose_gcp", "wet_scan", "zone_predicates",
-                 "concave_hull", "s2_cells", "h3_cells",
-                 "ogr2ogr_datetime_to", "ogr2ogr_resolve_domains",
-                 "ogr2ogr_splitlistfields",
-                 # round-4 raster-file surface (tiled/PackBits/BigTIFF/
-                 # overview-chain/mask/SubIFD/G4 reads, write round
-                 # trip, palette overviews, TPS compose)
-                 "tiff_tiled_scan", "tiff_roundtrip",
-                 "tiff_overview_scan", "overview_file_build",
-                 "tiff_bigtiff_scan", "palette_overview",
-                 "tiff_mask_scan", "tiff_subifd_scan", "tiff_g4_scan",
-                 "ogr2ogr_compose_tps", "tiff_hillshade",
-                 "tiff_dtype_matrix", "translate_file_resize",
-                 "gif_rgbexpand", "png_file_scan", "aaigrid_scan",
-                 "rawbin_scan", "warp_file_artifact",
-                 "grid_file_artifact", "pnm_scan", "colorrelief_file",
-                 "stats_file", "histogram_file",
-                 # round-5 additions: shapefile/DBF vector FILE
-                 # surface + block-granularity raster scan
-                 "shp_scan", "shp_roundtrip", "dbf_scan",
-                 "shp_join_file", "shp_types_zm", "shp_extent",
-                 "tiff_block_scan", "mif_scan", "mif_all_geoms",
-                 "geojson_scan", "prj_transform",
-                 "ogr2ogr_file_pipeline", "gpx_scan", "kml_scan",
-                 "gsg_scan", "grassascii_scan", "gtx_scan",
-                 "byn_scan", "dted_scan", "csv_vector_scan",
-                 "geojson_write_pipeline", "avce00_scan"]:
-        fn = REGISTRY[name][0]
-        t0 = time.monotonic()
-        _force(fn(spark, sf_dir))
+        try:
+            _force(fn(spark, sf_dir))
+        except FixtureMissing:
+            skipped.append(name)
+            continue
         out[name] = time.monotonic() - t0
-    return out
+    return out, skipped
 
 
 def run_single() -> dict:
@@ -233,8 +93,9 @@ def run_single() -> dict:
     spark = get_spark(app="bench", master=f"local[{CPUS}]",
                       shuffle_partitions=CPUS)
     n_rows = points_df(spark, SF_DIR).count()
-    queries = bench_queries(spark, SF_DIR)
-    pages_per_sec = n_rows / queries["flagship_join_tile"]
+    flag_s = time_flagship(spark, SF_DIR)
+    queries, skipped = bench_queries(spark, SF_DIR)
+    pages_per_sec = n_rows / flag_s
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     result = {
         "metric": "pages/sec flagship spatial-join + tiling",
@@ -242,7 +103,11 @@ def run_single() -> dict:
         "unit": "pages/sec",
         # 2-decimal seconds: the line must stay well under the driver's
         # ~4 KB stdout parse window as the suite grows
-        "queries": {k: round(v, 2) for k, v in queries.items()},
+        "queries": {k: round(v, 2) for k, v in
+                    {"flagship_join_tile": flag_s, **queries}.items()},
+        "n_queries": len(queries),
+        "n_skipped": len(skipped),
+        "skipped": skipped,
         "sf": float(sf),
         "rows": n_rows,
         "cpus": CPUS,
@@ -370,39 +235,13 @@ def scaling_job(spark, sf_dir: str, replicate: int,
     return zone_counts.unionByName(tiles)
 
 
+# Per-run CORE-SECONDS (summed task Executor Run Time of the timed job)
+# come from Spark's event log, read through perfbench.eventlog: event
+# logging is the async file writer production clusters run anyway, and
+# the web UI stays off, so the measurement adds nothing to the measured
+# job. Constant core-seconds across parallelism levels is the plan-level
+# scaling evidence: no serial bottleneck, no parallelism-induced overhead.
 EVENTLOG_DIR = "/tmp/gdal_spark_eventlogs"
-
-
-def eventlog_core_ms(log_dir: str, t0_epoch_ms: float) -> int:
-    """Sum of per-task Executor Run Time (ms) for tasks launched after
-    ``t0_epoch_ms``, parsed from the newest Spark event log — the
-    per-run CORE-SECONDS accounting (event logging is the async
-    file-writer production clusters run anyway; the web UI stays off
-    so the measurement adds nothing to the measured job). Constant
-    core-seconds across parallelism levels is the plan-level scaling
-    evidence: no serial bottleneck, no parallelism-induced overhead."""
-    import glob
-    import json as j
-
-    entries = sorted(glob.glob(os.path.join(log_dir, "*")),
-                     key=os.path.getmtime)
-    newest = entries[-1]
-    # Spark 4 rolling layout: eventlog_v2_<appid>/events_*_<appid>
-    files = (sorted(glob.glob(os.path.join(newest, "events_*")))
-             if os.path.isdir(newest) else [newest])
-    total = 0
-    for f in files:
-        with open(f) as fh:
-            for ln in fh:
-                if '"SparkListenerTaskEnd"' not in ln:
-                    continue
-                ev = j.loads(ln)
-                info = ev.get("Task Info", {})
-                if info.get("Launch Time", 0) < t0_epoch_ms:
-                    continue
-                total += (ev.get("Task Metrics") or {}).get(
-                    "Executor Run Time", 0)
-    return total
 
 
 def run_scaling() -> dict:
@@ -419,7 +258,8 @@ def run_scaling() -> dict:
     script = (
         "import time,json,sys,os;"
         "from gdal_spark.session import get_spark;"
-        "from bench import scaling_job, _force, eventlog_core_ms;"
+        "from bench import scaling_job, _force;"
+        "from perfbench.eventlog import EventLog;"
         f"spark = get_spark(app='scaling', master='local[%d]', shuffle_partitions=%d, "
         f"extra_conf={{'spark.eventLog.enabled': 'true', "
         f"'spark.eventLog.compress': 'false', "
@@ -431,12 +271,12 @@ def run_scaling() -> dict:
         # the full-job cost, keeping the per-run subprocess short
         # enough that the interleaved protocol fits a sandbox session
         f"_force(scaling_job(spark, '{SF_DIR}', max({REPLICATE} // 8, 1), staged_dir='{staged}'));"
-        "e0 = time.time() * 1000.0;"
+        "spark.sparkContext.setJobGroup('scaling', 'scaling');"
         "t0 = time.monotonic();"
         f"_force(scaling_job(spark, '{SF_DIR}', {REPLICATE}, staged_dir='{staged}'));"
         "t1 = time.monotonic();"
         "spark.stop();"
-        f"cs = eventlog_core_ms('{EVENTLOG_DIR}', e0) / 1000.0;"
+        f"cs = EventLog('{EVENTLOG_DIR}').span('scaling').core_s;"
         "print(json.dumps({'t': t1 - t0, 'n': n, 'core_sec': cs}))"
     )
     res = {}
@@ -499,10 +339,10 @@ def run_scaling() -> dict:
     # DOWNWARD on efficiency). Median reported alongside for honesty.
     eff_best = (min(times[SCALE_N]) / min(times[SCALE_4N])) / 4.0
     # WORK CONSERVATION: measured core-seconds of the timed job at each
-    # level (REST executorRunTime delta). Ratio ≈ 1 proves the plan has
-    # no serial bottleneck and no parallelism-induced overhead — the
-    # engine-side half of scaling efficiency, independent of single-box
-    # wall-clock noise.
+    # level (its job group's summed executor run time). Ratio ≈ 1 proves
+    # the plan has no serial bottleneck and no parallelism-induced
+    # overhead — the engine-side half of scaling efficiency, independent
+    # of single-box wall-clock noise.
     work_ratio = (res[SCALE_N]["core_sec_median"]
                   / res[SCALE_4N]["core_sec_median"])
     return {"scaling": res, "n_cores": SCALE_N, "four_n_cores": SCALE_4N,
@@ -534,9 +374,9 @@ if __name__ == "__main__":
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "BENCH_DETAIL.json"), "w") as fh:
             json.dump(res, fh, indent=1)
-        head = {k: v for k, v in res.items() if k != "queries"}
+        head = {k: v for k, v in res.items()
+                if k not in ("queries", "skipped")}
         head["queries_spilled"] = "BENCH_DETAIL.json"
-        head["n_queries"] = len(res["queries"])
         # keep the flagship + slowest few inline — the ones worth
         # tracking round over round — trimming to the 1,000-byte cap
         q = [("flagship_join_tile", res["queries"]["flagship_join_tile"])]

@@ -22,7 +22,29 @@ zones share an edge, one has a hole, one is non-convex, two overlap.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
+
+# ------------------------------------------------ GDAL autotest tree ---
+
+AUTOTEST_DIR = "/root/reference/autotest"
+
+
+class FixtureMissing(FileNotFoundError):
+    """The GDAL autotest fixture tree is absent."""
+
+
+def autotest_path(*parts: str) -> str:
+    """``AUTOTEST_DIR`` joined with ``parts``, e.g.
+    ``autotest_path("gcore/data", "byte.tif")``. Raises FixtureMissing
+    when the tree itself is absent; a file missing from a present tree
+    is left to fail in the read that opens it. Call it inside the
+    function that reads the file, never at import time."""
+    if not os.path.isdir(AUTOTEST_DIR):
+        raise FixtureMissing(
+            f"GDAL autotest fixture tree not found at {AUTOTEST_DIR}")
+    return os.path.join(AUTOTEST_DIR, *parts)
 
 
 def dlit(x) -> str:
@@ -188,32 +210,6 @@ def zone_bbox_values_sql() -> str:
             f"({z['zone_fid']}, {dlit(xmin)}, {dlit(ymin)}, "
             f"{dlit(xmax)}, {dlit(ymax)})")
     return "(VALUES " + ", ".join(rows) + ") AS zbox(zone_fid, xmin, ymin, xmax, ymax)"
-
-
-def tld_values_sql() -> str:
-    rows = ", ".join(
-        f"('{t}', {dlit(lat)}, {dlit(lon)}, '{c}')"
-        for t, (lat, lon, c) in TLD_CENTROIDS.items()
-    )
-    return f"(VALUES {rows}) AS tldc(tld, tlat, tlon, country)"
-
-
-# ------------------------------------------------------ Spark builders ---
-
-def zones_spark_rows():
-    """Rows for a zones DataFrame incl. WKB geometry + bbox columns."""
-    from gdal_spark.geo.geom import polygon_bbox
-    from gdal_spark.geo.wkb import polygon_wkb
-    out = []
-    for z in ZONES:
-        xmin, ymin, xmax, ymax = polygon_bbox(z["rings"])
-        out.append({
-            "zone_fid": z["zone_fid"], "eas_id": z["eas_id"],
-            "area": zone_area(z), "prfedea": z["prfedea"],
-            "geometry": bytearray(polygon_wkb(z["rings"])),
-            "xmin": xmin, "ymin": ymin, "xmax": xmax, "ymax": ymax,
-        })
-    return out
 
 
 def zone_rings_numpy() -> dict[int, list[np.ndarray]]:

@@ -352,12 +352,3 @@ def haversine_m(lat1, lon1, lat2, lon2) -> np.ndarray:
     dlat, dlon = lat2 - lat1, lon2 - lon1
     a = np.sin(dlat / 2.0) ** 2 + np.cos(lat1) * np.cos(lat2) * np.sin(dlon / 2.0) ** 2
     return 2.0 * EARTH_RADIUS * np.arcsin(np.sqrt(np.clip(a, 0.0, 1.0)))
-
-
-def deg_dist2(lat1, lon1, lat2, lon2) -> np.ndarray:
-    """Squared planar degree distance — only *,+,- so Spark, DuckDB and
-    numpy agree BIT-EXACTLY; used as the kNN ranking metric for the
-    oracle-checked path (haversine is reported separately)."""
-    dlat = np.asarray(lat2, float) - np.asarray(lat1, float)
-    dlon = np.asarray(lon2, float) - np.asarray(lon1, float)
-    return dlat * dlat + dlon * dlon

@@ -28,19 +28,6 @@ def point_wkb(x: float, y: float) -> bytes:
     return struct.pack("<BIdd", 1, WKB_POINT, x, y)
 
 
-def points_wkb_np(xs: np.ndarray, ys: np.ndarray) -> list[bytes]:
-    """Vectorized batch point encoder: one structured-array write."""
-    n = len(xs)
-    arr = np.zeros(n, dtype=np.dtype([("b", "u1"), ("t", "<u4"), ("x", "<f8"), ("y", "<f8")], align=False))
-    arr["b"] = 1
-    arr["t"] = WKB_POINT
-    arr["x"] = np.asarray(xs, dtype=np.float64)
-    arr["y"] = np.asarray(ys, dtype=np.float64)
-    raw = arr.tobytes()
-    sz = arr.dtype.itemsize
-    return [raw[i * sz:(i + 1) * sz] for i in range(n)]
-
-
 def polygon_wkb(rings) -> bytes:
     """rings: [outer, hole...] of (x, y) sequences; closes rings."""
     out = [struct.pack("<BII", 1, WKB_POLYGON, len(rings))]

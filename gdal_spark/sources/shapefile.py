@@ -568,35 +568,33 @@ def _rings_from_wkb(wkb_bytes: bytes):
     return rings
 
 
-def _encode_shp_record(fid: int, wkb_bytes: bytes | None) -> bytes:
-    """One .shp record (header + content) from 2-D WKB. Polygons /
-    multipolygons → type 5, points → type 1, null → type 0."""
+def _encode_shp_record(fid: int, wkb_bytes: bytes | None):
+    """One .shp record (header + content) from 2-D WKB, and its
+    envelope (None for a null or empty geometry, which the header bbox
+    ignores). Polygons / multipolygons → type 5 (an empty one has zero
+    parts, points and bbox), points → type 1, null → type 0."""
     from gdal_spark.geo.wkb import parse_wkb
+    env = None
     if wkb_bytes is None:
         content = struct.pack("<i", 0)
     else:
         kind, data = parse_wkb(bytes(wkb_bytes))
         if kind == "point":
             content = struct.pack("<idd", 1, data[0], data[1])
+            env = (data[0], data[1], data[0], data[1])
         else:
             rings = _rings_from_wkb(bytes(wkb_bytes))
-            npts = sum(len(r) for r in rings)
-            allp = np.vstack(rings)
-            parts, pos = [], 0
-            for r in rings:
-                parts.append(pos)
-                pos += len(r)
+            allp = np.vstack(rings) if rings else np.empty((0, 2))
+            if rings:
+                env = (float(allp[:, 0].min()), float(allp[:, 1].min()),
+                       float(allp[:, 0].max()), float(allp[:, 1].max()))
+            starts = np.cumsum([0] + [len(r) for r in rings])[:-1]
             content = (
-                struct.pack("<i4d", 5,
-                            float(allp[:, 0].min()),
-                            float(allp[:, 1].min()),
-                            float(allp[:, 0].max()),
-                            float(allp[:, 1].max()))
-                + struct.pack("<ii", len(rings), npts)
-                + struct.pack(f"<{len(parts)}i", *parts)
+                struct.pack("<i4d", 5, *(env or (0.0,) * 4))
+                + struct.pack("<ii", len(rings), len(allp))
+                + starts.astype("<i4").tobytes()
                 + allp.astype("<f8").tobytes())
-    return (struct.pack(">ii", fid + 1, len(content) // 2)
-            + content)
+    return struct.pack(">ii", fid + 1, len(content) // 2) + content, env
 
 
 def _encode_dbf_record(row, fields) -> bytes:
@@ -654,15 +652,14 @@ def write_shapefile(df, path: str, fields, rpb: int = 4096) -> dict:
         shp, dbf, lens, types = [], [], [], set()
         box = [np.inf, np.inf, -np.inf, -np.inf]
         for _, row in pdf.sort_values("fid").iterrows():
-            rec = _encode_shp_record(int(row["fid"]), row["wkb"])
+            rec, env = _encode_shp_record(int(row["fid"]), row["wkb"])
             shp.append(rec)
             lens.append(len(rec) - 8)
             st = struct.unpack_from("<i", rec, 8)[0]
             if st != 0:
                 types.add(st)
-                x0, y0, x1, y1 = (struct.unpack_from("<4d", rec, 12)
-                                  if st == 5 else
-                                  struct.unpack_from("<dd", rec, 12) * 2)
+            if env is not None:
+                x0, y0, x1, y1 = env
                 box = [min(box[0], x0), min(box[1], y0),
                        max(box[2], x1), max(box[3], y1)]
             dbf.append(_encode_dbf_record(row, field_list))

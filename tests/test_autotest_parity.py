@@ -34,6 +34,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from gdal_spark.fixtures import autotest_path
 from gdal_spark.operators.polygonize import polygonize, sieve_merge
 from gdal_spark.operators.rasterize import gdal_checksum
 
@@ -249,7 +250,7 @@ def test_proximity_autotest_1_default(spark):
     """autotest/alg/proximity.py test_proximity_1: all defaults
     (targets = non-zero, maxdist 50, nodata 65535) into a Byte band."""
     grid = _read_strip_tiff(
-        "/root/reference/autotest/alg/data/pat.tif")
+        autotest_path("alg/data/pat.tif"))
     res = _proximity_grid(spark, grid)
     assert gdal_checksum(_as_uint8(res)) == 1941
 
@@ -258,7 +259,7 @@ def test_proximity_autotest_2_options(spark):
     """autotest/alg/proximity.py test_proximity_2: VALUES=65,64
     MAXDIST=12 NODATA=-1 FIXED_BUF_VAL=255 into a Float32 band."""
     grid = _read_strip_tiff(
-        "/root/reference/autotest/alg/data/pat.tif")
+        autotest_path("alg/data/pat.tif"))
     res = _proximity_grid(spark, grid, target_values=[65, 64], maxdist=12,
                           nodata=-1.0, fixed_buf=255.0)
     assert gdal_checksum(res.astype(np.float32)) == 3256
@@ -269,7 +270,7 @@ def test_proximity_autotest_3_input_nodata(spark):
     MAXDIST=12 USE_INPUT_NODATA=YES NODATA=0 into a Byte band
     (pat.tif carries GDAL_NODATA=255)."""
     grid = _read_strip_tiff(
-        "/root/reference/autotest/alg/data/pat.tif")
+        autotest_path("alg/data/pat.tif"))
     res = _proximity_grid(spark, grid, target_values=[65, 64], maxdist=12,
                           nodata=0.0, src_nodata=255)
     assert gdal_checksum(_as_uint8(res)) == 1465
@@ -409,7 +410,7 @@ def _read_n43():
     """n43.tif: int16, LZW, 4 strips; returns (grid, gt)."""
     import struct
 
-    b = open("/root/reference/autotest/gdrivers/data/n43.tif", "rb").read()
+    b = open(autotest_path("gdrivers/data/n43.tif"), "rb").read()
     bo = "<" if b[:2] == b"II" else ">"
     ifd = struct.unpack(bo + "I", b[4:8])[0]
     nt = struct.unpack(bo + "H", b[ifd:ifd + 2])[0]
@@ -654,7 +655,7 @@ def test_checksum_autotest_byte_tif():
     """The canonical gcore/data/byte.tif checksum: every reference
     checksum test pins 4672 for this 20x20 image
     (autotest/alg/checksum.py, autotest/gcore/...)."""
-    grid = _read_strip_tiff("/root/reference/autotest/gcore/data/byte.tif")
+    grid = _read_strip_tiff(autotest_path("gcore/data/byte.tif"))
     assert gdal_checksum(grid) == 4672
 
 
@@ -664,7 +665,7 @@ def _read_rgbsmall():
     import struct
     import zlib
 
-    b = open("/root/reference/autotest/gdrivers/data/rgbsmall.tif",
+    b = open(autotest_path("gdrivers/data/rgbsmall.tif"),
              "rb").read()
     bo = "<" if b[:2] == b"II" else ">"
     ifd = struct.unpack(bo + "I", b[4:8])[0]
@@ -1030,7 +1031,7 @@ def test_polygonize_autotest_3_complex(spark):
     features, and the DN=0 feature's exact 3-ring geometry (outer with
     two multi-vertex holes)."""
     grid = _read_aaigrid(
-        "/root/reference/autotest/alg/data/polygonize_in_2.grd")
+        autotest_path("alg/data/polygonize_in_2.grd"))
     feats = _polygonize_features(spark, grid)
     assert len(feats) == 125
     gt = (0.0, 1.0, 0.0, 0.0, 0.0, -1.0)

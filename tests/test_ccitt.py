@@ -5,6 +5,8 @@ across pattern classes."""
 
 import numpy as np
 
+from gdal_spark.fixtures import autotest_path
+
 
 def test_encoder_byte_identical_to_libtiff():
     """Re-encoding slim_g4.tif's decoded bitmap reproduces the
@@ -13,7 +15,7 @@ def test_encoder_byte_identical_to_libtiff():
     from gdal_spark.sources.ccitt import (g4_decode, g4_encode,
                                           g4_rows_to_bits)
     from gdal_spark.sources.tiff import _read_ifd
-    path = "/root/reference/autotest/gcore/data/slim_g4.tif"
+    path = autotest_path("gcore/data/slim_g4.tif")
     b = open(path, "rb").read()
     _, t = _read_ifd(b)
     strip = b[t[273][0]:t[273][0] + t[279][0]]

@@ -6,9 +6,10 @@ recoveries 56006/56369)."""
 import numpy as np
 import pytest
 
+from gdal_spark.fixtures import autotest_path
 from gdal_spark.sources.dted import DtedReader, dted_header
 
-D = "/root/reference/autotest/gdrivers/data/"
+D = "gdrivers/data"
 PRIMES = np.array([7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43],
                   dtype=np.int64)
 
@@ -39,12 +40,12 @@ def _checksum(path, cols_per_block=512):
     ("dted/n43_sparse_cols.dt0", 56369),
 ])
 def test_dted_published_checksums(fname, pin):
-    tot, cnt = _checksum(D + fname)
+    tot, cnt = _checksum(autotest_path(D, fname))
     assert (tot, cnt) == (pin, 121 * 121)
 
 
 def test_dted_column_block_partitioning():
     """Column blocks of 50 (3 partitions over 121 columns) must
     reproduce the single-partition checksum exactly."""
-    assert _checksum(D + "n43.dt0", cols_per_block=50) == (49187,
-                                                          14641)
+    path = autotest_path(D, "n43.dt0")
+    assert _checksum(path, cols_per_block=50) == (49187, 14641)

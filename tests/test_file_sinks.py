@@ -140,6 +140,25 @@ def test_shapefile_rejects_mixed_shape_types(spark, tmp_path):
                         str(tmp_path / "mixed.shp"), FIELDS)
 
 
+def test_shapefile_empty_polygon_roundtrip(spark, tmp_path):
+    """MULTIPOLYGON EMPTY (what the reader yields for a zero-part
+    polygon record) writes a zero-part type-5 record that reads back
+    as itself; the header bbox is the other polygon's alone."""
+    spark.dataSource.register(ShapefileDataSource)
+    geoms = [polygon_wkb([_sq(3, 4, 2)]), multipolygon_wkb([])]
+    out = str(tmp_path / "empty_part.shp")
+    info = write_shapefile(spark.createDataFrame(_rows(geoms), SCHEMA),
+                           out, FIELDS)
+    assert info["bbox"] == (3.0, 4.0, 5.0, 6.0)
+    for ext in (".shp", ".shx"):
+        h = shp_header(out[:-4] + ext)
+        assert (h["shape_type"], h["bbox"]) == (5, (3.0, 4.0, 5.0, 6.0))
+    back = spark.read.format("shapefile").load(out).orderBy("fid").collect()
+    assert _norm(back[0]["wkb"]) == _norm(geoms[0])
+    assert bytes(back[1]["wkb"]) == multipolygon_wkb([])
+    assert [r["shape_type"] for r in back] == ["Polygon", "Polygon"]
+
+
 def test_non_dense_fid_fails_the_write(spark, tmp_path):
     """fids 0..2 then 7: block 1 never reports, so the record offsets
     the driver would derive are wrong — the write must fail."""

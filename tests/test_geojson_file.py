@@ -4,22 +4,23 @@
 
 import json
 
+from gdal_spark.fixtures import autotest_path
 from gdal_spark.sources.geojsonfile import (GeoJsonFileDataSource,
                                             doc_features, geom_wkb)
 from gdal_spark.sources.shapefile import iso_wkt
 
-D = "/root/reference/autotest/ogr/data/geojson"
+D = "ogr/data/geojson"
 
 
 def test_bare_features_key_7198():
-    doc = json.load(open(f"{D}/grenada.geojson"))
+    doc = json.load(open(autotest_path(D, "grenada.geojson")))
     feats = doc_features(doc)
     assert len(feats) == 1
     assert feats[0]["geometry"]["type"] == "MultiPolygon"
 
 
 def test_standalone_geometry_wrap():
-    doc = json.load(open(f"{D}/point.geojson"))
+    doc = json.load(open(autotest_path(D, "point.geojson")))
     feats = doc_features(doc)
     assert len(feats) == 1
     assert iso_wkt(geom_wkb(feats[0]["geometry"])) == "POINT (100 0)"
@@ -28,7 +29,7 @@ def test_standalone_geometry_wrap():
 def test_spark_scan_with_bom(spark):
     spark.dataSource.register(GeoJsonFileDataSource)
     rows = (spark.read.format("geojsonfile")
-            .load(f"{D}/point_with_utf8bom.json").collect())
+            .load(autotest_path(D, "point_with_utf8bom.json")).collect())
     assert len(rows) == 1
     assert rows[0]["geom_type"] == "Point"
 
@@ -36,7 +37,7 @@ def test_spark_scan_with_bom(spark):
 def test_spark_properties_map(spark):
     spark.dataSource.register(GeoJsonFileDataSource)
     rows = (spark.read.format("geojsonfile")
-            .load(f"{D}/grenada.geojson").collect())
+            .load(autotest_path(D, "grenada.geojson")).collect())
     assert rows[0]["properties"]["name"] == "Grenada"
     assert rows[0]["properties"]["ISO3166-1:alpha3"] == "GRD"
     assert rows[0]["n_points"] == 426
@@ -52,7 +53,7 @@ def test_writer_published_id_pins(spark, tmp_path):
     from gdal_spark.sources.shapefile import ShapefileDataSource
     spark.dataSource.register(ShapefileDataSource)
     src = (spark.read.format("shapefile")
-           .load("/root/reference/autotest/ogr/data/poly.shp")
+           .load(autotest_path("ogr/data/poly.shp"))
            .filter("fid = 0")
            .select("fid", "wkb", "AREA", "EAS_ID", "PRFEDEA"))
     cases = [
@@ -83,7 +84,7 @@ def test_writer_roundtrip(spark, tmp_path):
     spark.dataSource.register(ShapefileDataSource)
     spark.dataSource.register(GeoJsonFileDataSource)
     src = (spark.read.format("shapefile")
-           .load("/root/reference/autotest/ogr/data/poly.shp")
+           .load(autotest_path("ogr/data/poly.shp"))
            .select("fid", "wkb", "AREA", "EAS_ID", "PRFEDEA"))
     out = str(tmp_path / "poly.json")
     info = write_geojson(src, out, ["AREA", "EAS_ID", "PRFEDEA"],

@@ -4,7 +4,9 @@ published rgbExpand pins."""
 import numpy as np
 import pytest
 
-PATH = "/root/reference/autotest/gdrivers/data/gif/bug407.gif"
+from gdal_spark.fixtures import autotest_path
+
+PATH = "gdrivers/data/gif/bug407.gif"
 
 
 @pytest.fixture(scope="module")
@@ -20,11 +22,12 @@ def test_rgbexpand_published_checksums(gif):
     (test_gdal_translate_lib.py:158-162)."""
     from gdal_spark.operators.rasterize import gdal_checksum
     from gdal_spark.sources.gif import gif_palette
-    pdf = gif.read.format("gif").load(PATH).toPandas()
+    pdf = gif.read.format("gif").load(autotest_path(PATH)).toPandas()
     assert len(pdf) == 400 * 400
     g = np.zeros((400, 400), dtype=int)
     g[pdf["py"], pdf["px"]] = pdf["value"]
-    pal = np.array([(r, gg, b) for _, r, gg, b in gif_palette(PATH)])
+    pal = np.array([(r, gg, b)
+                    for _, r, gg, b in gif_palette(autotest_path(PATH))])
     for ch, want in ((0, 20615), (1, 59147), (2, 63052)):
         assert gdal_checksum(pal[g, ch].astype(float)) == want
 

@@ -5,10 +5,11 @@
 import numpy as np
 import pytest
 
+from gdal_spark.fixtures import autotest_path
 from gdal_spark.sources.gsg import (GsgBlock, GsgReader, gsg_header,
                                     gsg_geotransform)
 
-D = "/root/reference/autotest/gdrivers/data/gsg/"
+D = "gdrivers/data/gsg"
 PRIMES = np.array([7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43],
                   dtype=np.int64)
 
@@ -19,12 +20,12 @@ PRIMES = np.array([7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43],
     ("gsg_7binary.grd", "dsrb"),
 ])
 def test_gsg_published_pins(fname, kind):
-    m = gsg_header(D + fname)
+    m = gsg_header(autotest_path(D, fname))
     assert m["kind"] == kind
     assert (m["nx"], m["ny"]) == (20, 20)
     assert gsg_geotransform(m) == (440720.0, 60.0, 0.0,
                                    3751320.0, 0.0, -60.0)
-    rdr = GsgReader({"path": D + fname})
+    rdr = GsgReader({"path": autotest_path(D, fname)})
     tot, cnt = 0, 0
     for p in rdr.partitions():
         for rb in rdr.read(p):
@@ -42,8 +43,8 @@ def test_gsg_published_pins(fname, kind):
 
 def test_gsg_row_block_partitioning():
     """Binary dialects partition by row blocks with exact offsets."""
-    m = gsg_header(D + "gsg_binary.grd")
-    rdr = GsgReader({"path": D + "gsg_binary.grd"})
+    m = gsg_header(autotest_path(D, "gsg_binary.grd"))
+    rdr = GsgReader({"path": autotest_path(D, "gsg_binary.grd")})
     rdr.ROWS_PER_BLOCK = 7
     parts = rdr.partitions()
     assert [(p.r0, p.r1) for p in parts] == [(0, 7), (7, 14), (14, 20)]
@@ -54,7 +55,7 @@ def test_gsg_row_block_partitioning():
             for y, x, v in zip(d["py"], d["px"], d["value"]):
                 rows[(y, x)] = v
     # must agree with the single-shot ASCII twin (same raster)
-    ascii_rdr = GsgReader({"path": D + "gsg_ascii.grd"})
+    ascii_rdr = GsgReader({"path": autotest_path(D, "gsg_ascii.grd")})
     for p in ascii_rdr.partitions():
         for rb in ascii_rdr.read(p):
             d = rb.to_pydict()

@@ -1,16 +1,17 @@
 """KML source parity vs the published ogr_kml.py pins
 (attributes_1..4 + point/linestring/polygon_read)."""
 
+from gdal_spark.fixtures import autotest_path
 from gdal_spark.sources.kml import KmlDataSource
 from gdal_spark.sources.shapefile import iso_wkt
 
-KML = "/root/reference/autotest/ogr/data/kml/samples.kml"
+KML = "ogr/data/kml/samples.kml"
 
 
 def _layer(spark, name):
     spark.dataSource.register(KmlDataSource)
     return (spark.read.format("kml").option("layer", name)
-            .load(KML).orderBy("fid").collect())
+            .load(autotest_path(KML)).orderBy("fid").collect())
 
 
 def test_placemarks_published(spark):

@@ -6,11 +6,12 @@ all_geoms.mif.golden.csv (16 rows, geometry-per-type mapping)."""
 
 import pytest
 
+from gdal_spark.fixtures import autotest_path
 from gdal_spark.sources.mif import (MifDataSource, _Cursor,
                                     mif_header, parse_geometry)
 from gdal_spark.sources.shapefile import iso_wkt
 
-D = "/root/reference/autotest/ogr/data/mitab"
+D = "ogr/data/mitab"
 
 SMALL_POLY0 = ("POLYGON ((407131.721 155322.441,407134.468 155329.616,"
                "407142.741 155327.242,407141.503 155322.467,"
@@ -28,7 +29,7 @@ def _features(path):
 
 
 def test_small_mif_geometry_pin():
-    feats = _features(f"{D}/small.mif")
+    feats = _features(autotest_path(D, "small.mif"))
     assert len(feats) == 2
     st, wkb = feats[0]
     assert st == "Region"
@@ -36,7 +37,7 @@ def test_small_mif_geometry_pin():
 
 
 def test_all_geoms_vs_golden_count():
-    feats = _features(f"{D}/all_geoms.mif")
+    feats = _features(autotest_path(D, "all_geoms.mif"))
     assert len(feats) == 16  # golden.csv has 16 data rows
     wkts = [None if w is None else iso_wkt(w) for _, w in feats]
     assert wkts[0] == "POINT (0 1)"
@@ -50,7 +51,7 @@ def test_all_geoms_vs_golden_count():
 
 def test_spark_small_mif(spark):
     spark.dataSource.register(MifDataSource)
-    df = spark.read.format("mif").load(f"{D}/small.mif")
+    df = spark.read.format("mif").load(autotest_path(D, "small.mif"))
     rows = df.orderBy("fid").collect()
     assert rows[0]["NAME"] == " S. 11th St."
     assert rows[0]["FLOODZONE"] == 10
@@ -64,8 +65,8 @@ def test_tab_delimiter_and_empty_first_field(spark):
     shipped empty_first_field_with_tab_delimiter fixture."""
     spark.dataSource.register(MifDataSource)
     rows = (spark.read.format("mif")
-            .load("/root/reference/autotest/ogr/data/mitab/"
-                  "empty_first_field_with_tab_delimiter.mif")
+            .load(autotest_path(
+                D, "empty_first_field_with_tab_delimiter.mif"))
             .collect())
     assert len(rows) == 1
     assert rows[0]["field1"] == ""

@@ -7,6 +7,8 @@ benchmark read-through."""
 
 from conftest import SF_SMOKE
 
+from gdal_spark.fixtures import autotest_path
+
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -129,7 +131,7 @@ def test_shapefile_scan_partitions_by_record_block(spark):
     spark.dataSource.register(ShapefileDataSource)
     df = (spark.read.format("shapefile")
           .option("records_per_block", 2)
-          .load("/root/reference/autotest/ogr/data/poly.shp"))
+          .load(autotest_path("ogr/data/poly.shp")))
     assert df.rdd.getNumPartitions() == 5
     assert "PythonScan" in _plan(df) or "BatchScan" in _plan(df)
 

@@ -8,6 +8,7 @@ import zlib
 import numpy as np
 import pytest
 
+from gdal_spark.fixtures import autotest_path
 from gdal_spark.geo.png import _SIG, _chunk, decode_png, encode_png
 
 
@@ -111,7 +112,7 @@ def test_palette_png_published_checksum():
     PLTE parses to (idx,r,g,b) rows."""
     from gdal_spark.geo.png import decode_png, png_palette
     from gdal_spark.operators.rasterize import gdal_checksum
-    b = open("/root/reference/autotest/gdrivers/data/png/test.png",
+    b = open(autotest_path("gdrivers/data/png/test.png"),
              "rb").read()
     a = decode_png(b)
     assert a.shape == (400, 400)

@@ -8,10 +8,11 @@ import math
 
 import pytest
 
+from gdal_spark.fixtures import autotest_path
 from gdal_spark.geo.warp import (parse_prj_wkt, tm_forward_gen,
                                  tm_inverse_gen)
 
-PRJ = "/root/reference/autotest/ogr/data/poly.PRJ"
+PRJ = "ogr/data/poly.PRJ"
 
 E, N = 651409.903, 313177.270
 LAT = 52 + 39 / 60 + 27.2531 / 3600
@@ -19,7 +20,7 @@ LON = 1 + 43 / 60 + 4.5177 / 3600
 
 
 def _p():
-    return parse_prj_wkt(open(PRJ).read())
+    return parse_prj_wkt(open(autotest_path(PRJ)).read())
 
 
 def test_prj_parse():

@@ -25,13 +25,7 @@ def test_entry_smoke(spark):
     assert {"zone_fid", "eas_id", "n_pages"} <= cols
 
 
-def test_every_query_has_oracle_or_reason(spark):
+def test_every_query_has_oracle():
     qs, os = entry.queries(), entry.oracle_sql()
     missing = set(qs) - set(os)
-    # non-SQL-expressible ops may be rows-only; keep the list explicit
-    # (s2_cells / h3_cells: cell-curve math has no SQL oracle; covered
-    # by tests/test_s2.py and tests/test_h3.py property tests instead;
-    # concave_hull: data-dependent chi-shape erosion order — pinned
-    # against the convex hull by tests/test_concave_hull.py)
-    assert missing <= {"s2_cells", "h3_cells", "concave_hull", "dither"}, \
-        f"queries without oracle: {missing}"
+    assert not missing, f"queries without oracle: {missing}"

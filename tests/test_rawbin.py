@@ -3,7 +3,9 @@
 import numpy as np
 import pytest
 
-D = "/root/reference/autotest/gdrivers/data/"
+from gdal_spark.fixtures import autotest_path
+
+D = "gdrivers/data"
 
 
 @pytest.fixture(scope="module")
@@ -27,7 +29,7 @@ def test_published_pins(raw):
              ("ehdr/ehdr10.bil", 0, 8202),
              ("envi/aea.dat", 0, 14823)]
     for rel, band, want in cases:
-        pdf = raw.read.format("rawbin").load(D + rel).toPandas()
+        pdf = raw.read.format("rawbin").load(autotest_path(D, rel)).toPandas()
         assert gdal_checksum(_grid(pdf, band)) == want, rel
 
 
@@ -38,6 +40,7 @@ def test_interleaves_agree_and_pin(raw):
     want = [20718, 20669, 20895]
     for suf in ("bil", "bip", "bsq"):
         pdf = (raw.read.format("rawbin")
-               .load(f"{D}envi/envi_rgbsmall_{suf}.img").toPandas())
+               .load(autotest_path(D, f"envi/envi_rgbsmall_{suf}.img"))
+               .toPandas())
         assert [gdal_checksum(_grid(pdf, b))
                 for b in range(3)] == want, suf

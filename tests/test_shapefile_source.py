@@ -17,12 +17,13 @@ import struct
 import numpy as np
 import pytest
 
+from gdal_spark.fixtures import autotest_path
 from gdal_spark.sources.shapefile import (ShapefileDataSource,
                                           dbf_header, decode_record,
                                           iso_wkt, plan_one,
                                           record_wkb, shp_header)
 
-DATA = "/root/reference/autotest/ogr/data"
+DATA = "ogr/data"
 
 
 def _feature(path, fid):
@@ -34,21 +35,21 @@ def _feature(path, fid):
 
 
 def test_poly_header():
-    h = shp_header(f"{DATA}/poly.shp")
+    h = shp_header(autotest_path(DATA, "poly.shp"))
     assert h["shape_type"] == 5
     assert h["bbox"] == (478315.53125, 4762880.5,
                         481645.3125, 4765610.5)
 
 
 def test_poly_dbf_fields():
-    d = dbf_header(f"{DATA}/poly.dbf")
+    d = dbf_header(autotest_path(DATA, "poly.dbf"))
     assert [(f[0], f[1]) for f in d["fields"]] == [
         ("AREA", "N"), ("EAS_ID", "N"), ("PRFEDEA", "C")]
     assert d["nrec"] == 10
 
 
 def test_poly_feature0_matches_pgdump_golden():
-    wkb, zs, ms = _feature(f"{DATA}/poly.shp", 0)
+    wkb, zs, ms = _feature(autotest_path(DATA, "poly.shp"), 0)
     # type 6 (MultiPolygon), 1 poly, 1 ring, 20 points
     assert struct.unpack_from("<I", wkb, 1)[0] == 6
     (npoly,) = struct.unpack_from("<I", wkb, 5)
@@ -76,13 +77,14 @@ PUBLISHED_WKT = [
 
 @pytest.mark.parametrize("path,fid,expected", PUBLISHED_WKT)
 def test_zm_iso_wkt_published(path, fid, expected):
-    wkb, zs, ms = _feature(f"{DATA}/{path}", fid)
+    wkb, zs, ms = _feature(autotest_path(DATA, path), fid)
     assert iso_wkt(wkb, zs, ms) == expected
 
 
 def test_spark_scan_and_join(spark):
     spark.dataSource.register(ShapefileDataSource)
-    poly = spark.read.format("shapefile").load(f"{DATA}/poly.shp")
+    poly = (spark.read.format("shapefile")
+            .load(autotest_path(DATA, "poly.shp")))
     rows = poly.orderBy("fid").collect()
     assert [r["EAS_ID"] for r in rows] == [
         168, 179, 171, 173, 172, 169, 166, 158, 165, 170]
@@ -93,7 +95,8 @@ def test_spark_scan_and_join(spark):
     assert [r["EAS_ID"] for r in rows if r["EAS_ID"] < 170] == [
         168, 169, 166, 158, 165]
     # ogr_join 2/4: LEFT JOIN idlink.dbf
-    idlink = spark.read.format("shapefile").load(f"{DATA}/idlink.dbf")
+    idlink = (spark.read.format("shapefile")
+              .load(autotest_path(DATA, "idlink.dbf")))
     j = {r["EAS_ID"]: r["NAME"]
          for r in poly.join(
              idlink.select("EAS_ID", "NAME"), "EAS_ID", "left")
@@ -109,7 +112,8 @@ def test_writer_multiblock_roundtrip(spark, tmp_path):
     published attribute pins and vertex counts exactly."""
     from gdal_spark.sources.shapefile import write_shapefile
     spark.dataSource.register(ShapefileDataSource)
-    src = (spark.read.format("shapefile").load(f"{DATA}/poly.shp")
+    src = (spark.read.format("shapefile")
+           .load(autotest_path(DATA, "poly.shp"))
            .select("fid", "wkb", "AREA", "EAS_ID", "PRFEDEA"))
     out = str(tmp_path / "copy.shp")
     info = write_shapefile(src, out, [("AREA", "N", 12, 3),
@@ -135,7 +139,7 @@ def test_spark_partitioned_scan(spark):
     spark.dataSource.register(ShapefileDataSource)
     df = (spark.read.format("shapefile")
           .option("records_per_block", 3)
-          .load(f"{DATA}/poly.shp"))
+          .load(autotest_path(DATA, "poly.shp")))
     assert df.rdd.getNumPartitions() == 4
     assert df.count() == 10
     assert df.agg({"n_points": "sum"}).collect()[0][0] == 245
@@ -146,7 +150,7 @@ def test_empty_and_buggy_fixtures(spark):
     EMPTY geometries; truncated/corrupt records (the buggymulti*
     fixtures) surface null geometry without failing the scan."""
     spark.dataSource.register(ShapefileDataSource)
-    S = f"{DATA}/shp"
+    S = autotest_path(DATA, "shp")
     for f, wkt_exp in (("emptymultipoint.shp", "MULTIPOINT EMPTY"),
                        ("emptymultiline.shp",
                         "MULTILINESTRING EMPTY"),
@@ -176,7 +180,8 @@ def test_invalid_winding_multipolygon_recovery():
     ]
     for fid, pin in enumerate(pins):
         wkb, zs, ms = _feature(
-            f"{DATA}/shp/multipolygon_as_invalid_polygon.shp", fid)
+            autotest_path(DATA, "shp/multipolygon_as_invalid_polygon.shp"),
+            fid)
         assert iso_wkt(wkb) == pin
 
 
@@ -186,17 +191,17 @@ def test_dbf_date_fields(spark):
     import datetime
     spark.dataSource.register(ShapefileDataSource)
     r = (spark.read.format("shapefile")
-         .load(f"{DATA}/shp/date_empty_string.dbf").collect())
+         .load(autotest_path(DATA, "shp/date_empty_string.dbf")).collect())
     assert len(r) == 1 and r[0]["date"] is None
     r = (spark.read.format("shapefile")
-         .load(f"{DATA}/shp/water_main_dist.dbf").collect())
+         .load(autotest_path(DATA, "shp/water_main_dist.dbf")).collect())
     assert r[0]["installe_1"] == datetime.date(1989, 4, 25)
 
 
 def test_real_world_county_extract(spark):
     spark.dataSource.register(ShapefileDataSource)
     r = (spark.read.format("shapefile")
-         .load(f"{DATA}/shp/cb_2022_us_county_20m_extract.shp")
+         .load(autotest_path(DATA, "shp/cb_2022_us_county_20m_extract.shp"))
          .collect())
     assert len(r) == 1
     assert r[0]["shape_type"] == "Polygon"

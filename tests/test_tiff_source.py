@@ -15,7 +15,7 @@ reference autotest's own fixtures and published checksums:
 import numpy as np
 import pytest
 
-DATA = "/root/reference/autotest"
+from gdal_spark.fixtures import autotest_path
 
 
 @pytest.fixture(scope="module")
@@ -36,7 +36,7 @@ def _grid(pdf, band=0):
 def test_byte_tif_published_checksum(tiff):
     from gdal_spark.operators.rasterize import gdal_checksum
     pdf = (tiff.read.format("tiff")
-           .load(f"{DATA}/gcore/data/byte.tif").toPandas())
+           .load(autotest_path("gcore/data/byte.tif")).toPandas())
     assert len(pdf) == 400
     assert gdal_checksum(_grid(pdf)) == 4672
 
@@ -44,7 +44,7 @@ def test_byte_tif_published_checksum(tiff):
 def test_rgbsmall_planar_deflate_published_checksums(tiff):
     from gdal_spark.operators.rasterize import gdal_checksum
     pdf = (tiff.read.format("tiff")
-           .load(f"{DATA}/gdrivers/data/rgbsmall.tif").toPandas())
+           .load(autotest_path("gdrivers/data/rgbsmall.tif")).toPandas())
     assert len(pdf) == 50 * 50 * 3
     assert [gdal_checksum(_grid(pdf, b)) for b in range(3)] == \
         [21212, 21053, 21349]
@@ -54,14 +54,14 @@ def test_n43_lzw_multistrip_matches_independent_reader(tiff):
     from tests.test_autotest_parity import _read_n43
     want, _gt = _read_n43()
     pdf = (tiff.read.format("tiff")
-           .load(f"{DATA}/gdrivers/data/n43.tif").toPandas())
+           .load(autotest_path("gdrivers/data/n43.tif")).toPandas())
     np.testing.assert_array_equal(_grid(pdf), want)
 
 
 def test_predictor2_deflate_matches_inline_decode(tiff):
     import struct
     import zlib
-    path = f"{DATA}/alg/data/warp_52_dem.tif"
+    path = autotest_path("alg/data/warp_52_dem.tif")
     b = open(path, "rb").read()
     bo = "<"
     ifd = struct.unpack(bo + "I", b[4:8])[0]
@@ -104,8 +104,8 @@ def test_glob_scan_tags_file_column(tiff):
     import tempfile
     d = tempfile.mkdtemp(prefix="tiffglob_")
     try:
-        shutil.copy(f"{DATA}/gcore/data/byte.tif", d)
-        shutil.copy(f"{DATA}/alg/data/pat.tif", d)
+        shutil.copy(autotest_path("gcore/data/byte.tif"), d)
+        shutil.copy(autotest_path("alg/data/pat.tif"), d)
         pdf = tiff.read.format("tiff").load(f"{d}/*.tif").toPandas()
         counts = pdf.groupby("file").size().to_dict()
         assert counts == {"byte.tif": 400, "pat.tif": 625}
@@ -122,7 +122,7 @@ def test_partial_final_block_quartet_published_15234(tiff):
     for f in ("contig_tiled.tif", "separate_tiled.tif",
               "contig_strip.tif", "seperate_strip.tif"):
         pdf = (tiff.read.format("tiff")
-               .load(f"{DATA}/gcore/data/{f}").toPandas())
+               .load(autotest_path(f"gcore/data/{f}")).toPandas())
         assert len(pdf) == 35 * 37 * 3, f
         assert gdal_checksum(_grid(pdf, 1)) == 15234, f
 
@@ -135,7 +135,7 @@ def test_tiled_lzw_f2r23_determinism_pin(tiff):
     quartet above)."""
     from gdal_spark.operators.rasterize import gdal_checksum
     pdf = (tiff.read.format("tiff")
-           .load(f"{DATA}/gcore/data/f2r23.tif").toPandas())
+           .load(autotest_path("gcore/data/f2r23.tif")).toPandas())
     assert len(pdf) == 273 * 251
     assert gdal_checksum(_grid(pdf)) == 57785
 
@@ -148,7 +148,7 @@ def test_writer_roundtrip_deflate_predictor(tiff, tmp_path):
     from gdal_spark.operators.rasterize import gdal_checksum
     from gdal_spark.sources.tiff import (tiff_geotransform,
                                          write_strip_tiff)
-    src_path = f"{DATA}/gcore/data/byte.tif"
+    src_path = autotest_path("gcore/data/byte.tif")
     out = str(tmp_path / "rt.tif")
     src = tiff.read.format("tiff").load(src_path)
     info = write_strip_tiff(src, out, dtype="uint8", comp="deflate",
@@ -167,7 +167,7 @@ def test_writer_roundtrip_packbits_int16(tiff, tmp_path):
     re-written as PackBits strips, re-scanned, array-equal."""
     import numpy as np
     from gdal_spark.sources.tiff import write_strip_tiff
-    src_path = "/root/reference/autotest/gdrivers/data/n43.tif"
+    src_path = autotest_path("gdrivers/data/n43.tif")
     out = str(tmp_path / "rt16.tif")
     src = tiff.read.format("tiff").load(src_path)
     write_strip_tiff(src, out, dtype="int16", comp="packbits", rps=32)
@@ -197,7 +197,7 @@ def test_overview_chain_published_checksums(tiff):
     import pytest as _pytest
     from gdal_spark.operators.rasterize import gdal_checksum
     from gdal_spark.sources.tiff import _plan
-    path = f"{DATA}/gcore/data/byte_with_ovr.tif"
+    path = autotest_path("gcore/data/byte_with_ovr.tif")
     want = {0: (20, 4672), 1: (10, 1087), 2: (5, 328)}
     for lvl, (size, cks) in want.items():
         pdf = (tiff.read.format("tiff").option("ifd", str(lvl))
@@ -213,7 +213,7 @@ def test_bigtiff_scan_published_checksum(tiff):
     pins the published checksum 4672 (autotest tiff_read.py:1230)."""
     from gdal_spark.operators.rasterize import gdal_checksum
     pdf = (tiff.read.format("tiff")
-           .load(f"{DATA}/gcore/data/byte_bigtiff_strip5lines.tif")
+           .load(autotest_path("gcore/data/byte_bigtiff_strip5lines.tif"))
            .toPandas())
     assert len(pdf) == 400
     assert gdal_checksum(_grid(pdf)) == 4672
@@ -226,7 +226,7 @@ def test_stripoffset_type_matrix_published(tiff):
     from gdal_spark.queries import TIFF_OFFSET_MATRIX
     from gdal_spark.sources.tiff import _plan
     for fname, want in TIFF_OFFSET_MATRIX.items():
-        got = list(_plan(f"{DATA}/gcore/data/{fname}")["offs"])
+        got = list(_plan(autotest_path(f"gcore/data/{fname}"))["offs"])
         assert got == want, fname
 
 
@@ -235,7 +235,7 @@ def test_colormap_published_palette():
     2 grey(127) — the palette tiff_ovr.py:311-380 builds its
     published overview checksums on."""
     from gdal_spark.sources.tiff import tiff_colormap
-    cm = tiff_colormap(f"{DATA}/gcore/data/test_average_palette.tif")
+    cm = tiff_colormap(autotest_path("gcore/data/test_average_palette.tif"))
     assert len(cm) == 256
     assert cm[0] == (0, 0, 0, 0)
     assert cm[1] == (1, 255, 255, 255)
@@ -257,7 +257,7 @@ def test_mask_band_published_checksums(tiff):
              ("test_with_mask_1bit_and_ovr.tif", 3, 0, 25)]
     for fname, ifd, band, want in cases:
         pdf = (tiff.read.format("tiff").option("ifd", str(ifd))
-               .load(f"{DATA}/gcore/data/{fname}").toPandas())
+               .load(autotest_path(f"gcore/data/{fname}")).toPandas())
         assert gdal_checksum(_grid(pdf, band)) == want, (fname, ifd)
 
 
@@ -266,7 +266,7 @@ def test_subifd_published_pins(tiff):
     220, GTIFF_DIR:2 checksum 0, SubIFD overview px(0,0) 12
     (tiff_read_subifds.py)."""
     from gdal_spark.operators.rasterize import gdal_checksum
-    path = f"{DATA}/gcore/data/tiff_with_subifds.tif"
+    path = autotest_path("gcore/data/tiff_with_subifds.tif")
     pdf = tiff.read.format("tiff").load(path).toPandas()
     g = _grid(pdf)
     assert g.shape == (512, 1024)
@@ -285,7 +285,7 @@ def test_g4_published_checksum(tiff):
     checksum 3322 (tiff_read.py:578 test_tiff_g4_split)."""
     from gdal_spark.operators.rasterize import gdal_checksum
     pdf = (tiff.read.format("tiff")
-           .load(f"{DATA}/gcore/data/slim_g4.tif").toPandas())
+           .load(autotest_path("gcore/data/slim_g4.tif")).toPandas())
     assert len(pdf) == 1000 * 7200
     assert gdal_checksum(_grid(pdf)) == 3322
 
@@ -324,7 +324,7 @@ def test_writer_roundtrip_lzw(tiff, tmp_path):
     import numpy as np
     from gdal_spark.operators.rasterize import gdal_checksum
     from gdal_spark.sources.tiff import write_strip_tiff
-    src_path = f"{DATA}/gcore/data/byte.tif"
+    src_path = autotest_path("gcore/data/byte.tif")
     out = str(tmp_path / "rt_lzw.tif")
     src = tiff.read.format("tiff").load(src_path)
     write_strip_tiff(src, out, dtype="uint8", comp="lzw", rps=6)
@@ -343,11 +343,11 @@ def test_dtype_matrix_published_checksums(tiff):
                                     TIFF_DTYPE_SCALARS)
     for f, want in TIFF_DTYPE_SCALARS:
         pdf = (tiff.read.format("tiff")
-               .load(f"{DATA}/gcore/data/{f}").toPandas())
+               .load(autotest_path(f"gcore/data/{f}")).toPandas())
         assert gdal_checksum(_grid(pdf)) == want, f
     for f in TIFF_DTYPE_COMPLEX:
         pdf = (tiff.read.format("tiff")
-               .load(f"{DATA}/gcore/data/{f}").toPandas())
+               .load(autotest_path(f"gcore/data/{f}")).toPandas())
         re, im = _grid(pdf, 0), _grid(pdf, 1)
         inter = np.empty((20, 40))
         inter[:, 0::2] = re
@@ -363,7 +363,7 @@ def test_writer_roundtrip_g4_bilevel(tiff, tmp_path):
     import numpy as np
     from pyspark.sql import functions as F
     from gdal_spark.sources.tiff import write_strip_tiff
-    src_path = "/root/reference/autotest/gcore/data/slim_g4.tif"
+    src_path = autotest_path("gcore/data/slim_g4.tif")
     src = (tiff.read.format("tiff").load(src_path)
            .filter(F.col("py") < 200))
     out = str(tmp_path / "rt_g4.tif")

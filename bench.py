@@ -2,7 +2,7 @@
 """Benchmark harness — one JSON line on stdout.
 
 Times the flagship, then every REGISTRY query, at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. The primary
+(default: the sf0.1 tables) on local[$SPARK_GRAFT_CPUS]. The primary
 metric is pages/sec of the flagship spatial-join + tiling pipeline over
 the high-volume points table (BASELINE.md protocol). Queries whose input
 is the absent GDAL autotest tree are counted as skipped.

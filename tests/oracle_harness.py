@@ -39,11 +39,11 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 def compare_query(spark, sf_dir: str, name: str) -> tuple[bool, str]:
     """Row count, column set, pandas dtype kinds and order-insensitive
-    values of the query against its oracle. Kinds must match as the
-    driver's dtype-sensitive value hash needs (a DuckDB HUGEINT landing
-    as float64 against Spark int64 fails there even with equal values);
-    only integer widths and signedness may differ. A query that reads
-    the absent GDAL autotest tree raises FixtureMissing."""
+    values of the query against its oracle. Kinds must match, as the
+    correctness gate's value hash is dtype-sensitive (a DuckDB HUGEINT
+    landing as float64 against Spark int64 fails there even with equal
+    values); only integer widths and signedness may differ. A query
+    that reads the absent GDAL autotest tree raises FixtureMissing."""
     import __spark_entry__ as entry
     sdf = entry.queries()[name](spark, sf_dir).toPandas()
     con = duck_con(sf_dir)

@@ -1,8 +1,8 @@
-"""Local replica of the driver's correctness gate.
+"""Local replica of the correctness gate.
 
 Runs every REGISTRY query (or those named) through
 ``tests/oracle_harness.compare_query`` at the given sf dir (default
-sf0.01, the driver's gate scale). A query whose input is the absent GDAL
+sf0.01, the gate's scale). A query whose input is the absent GDAL
 autotest tree prints a ``skip`` line; only real failures are counted.
 
 Usage:  python tools/run_gate.py [sf_dir] [query ...]

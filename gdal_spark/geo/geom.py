@@ -14,7 +14,8 @@ Semantics matched to the reference:
   op order. ``spatial_join.pip_sql`` is the same rule in Spark SQL, over
   the edges the cover keeps for a point's cell: each of them gives the
   same sign bit for bit, and the dropped ones provably cannot change the
-  answer (``spatial_join._cell_edges``).
+  answer (``spatial_join._part_edges``, which also decides which cover
+  cells are wholly inside).
 - ``polygon_area``: planar shoelace — OGR_GEOM_AREA / ``get_Area`` are
   planar (ogr/ogr_geometry.h:1788, ogr_gensql.cpp:839-841).
 - ``haversine_m``: great-circle meters on the GDAL sphere radius 6378137
@@ -106,81 +107,6 @@ def polygon_bbox(rings) -> tuple[float, float, float, float]:
     outside its first ring."""
     r = np.concatenate([np.asarray(ring, dtype=np.float64) for ring in rings])
     return float(r[:, 0].min()), float(r[:, 1].min()), float(r[:, 0].max()), float(r[:, 1].max())
-
-
-def segments_intersect_rect(ring, xmin, ymin, xmax, ymax) -> bool:
-    """True if any ring edge intersects the axis-aligned rectangle.
-
-    Used by the cell-cover builder to classify cover cells as fully
-    inside vs boundary (mirrors the envelope-contains accept shortcut of
-    ogrlayer.cpp:4040: cells fully inside the polygon skip the exact
-    refine)."""
-    x1, y1, x2, y2 = _ring_arrays(ring)
-    # Liang-Barsky style: reject edges with bbox disjoint from rect
-    emin_x, emax_x = np.minimum(x1, x2), np.maximum(x1, x2)
-    emin_y, emax_y = np.minimum(y1, y2), np.maximum(y1, y2)
-    cand = (emax_x >= xmin) & (emin_x <= xmax) & (emax_y >= ymin) & (emin_y <= ymax)
-    if not np.any(cand):
-        return False
-    x1, y1, x2, y2 = x1[cand], y1[cand], x2[cand], y2[cand]
-    # An edge intersects the rect iff some endpoint is inside, or the
-    # segment crosses one of the 4 rect sides.
-    inside = ((x1 >= xmin) & (x1 <= xmax) & (y1 >= ymin) & (y1 <= ymax)) | (
-        (x2 >= xmin) & (x2 <= xmax) & (y2 >= ymin) & (y2 <= ymax))
-    if np.any(inside):
-        return True
-
-    def seg_cross(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
-        d1 = (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)
-        d2 = (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)
-        d3 = (bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1)
-        d4 = (bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)
-        return (d1 * d2 <= 0) & (d3 * d4 <= 0)
-
-    sides = [(xmin, ymin, xmax, ymin), (xmax, ymin, xmax, ymax),
-             (xmax, ymax, xmin, ymax), (xmin, ymax, xmin, ymin)]
-    for bx1, by1, bx2, by2 in sides:
-        if np.any(seg_cross(x1, y1, x2, y2, bx1, by1, bx2, by2)):
-            return True
-    return False
-
-
-def edges_cross_rects(ring, xmin, ymin, xmax, ymax) -> np.ndarray:
-    """Vectorized transpose of segments_intersect_rect: one ring vs N
-    axis-aligned rectangles (arrays xmin…ymax) → bool[N].
-
-    Same predicate per (edge, rect) pair — edge bbox overlap AND
-    (endpoint inside rect OR edge crosses a rect side) — so a cell is
-    classified identically by either code path; this form exists
-    because the cover builder tests ~10^5 cells per zone at fine zooms
-    and the scalar per-cell call is driver-bound (25 s at z12 vs <0.2 s
-    vectorized)."""
-    x1, y1, x2, y2 = _ring_arrays(ring)
-    xmin = np.asarray(xmin, dtype=np.float64)[:, None]
-    ymin = np.asarray(ymin, dtype=np.float64)[:, None]
-    xmax = np.asarray(xmax, dtype=np.float64)[:, None]
-    ymax = np.asarray(ymax, dtype=np.float64)[:, None]
-    emin_x, emax_x = np.minimum(x1, x2), np.maximum(x1, x2)
-    emin_y, emax_y = np.minimum(y1, y2), np.maximum(y1, y2)
-    overlap = (emax_x >= xmin) & (emin_x <= xmax) \
-        & (emax_y >= ymin) & (emin_y <= ymax)          # (N, E)
-    inside = ((x1 >= xmin) & (x1 <= xmax) & (y1 >= ymin) & (y1 <= ymax)) | (
-        (x2 >= xmin) & (x2 <= xmax) & (y2 >= ymin) & (y2 <= ymax))
-    hit = overlap & inside
-    todo = overlap & ~inside
-    if np.any(todo):
-        def seg_cross(bx1, by1, bx2, by2):
-            d1 = (x2 - x1) * (by1 - y1) - (y2 - y1) * (bx1 - x1)
-            d2 = (x2 - x1) * (by2 - y1) - (y2 - y1) * (bx2 - x1)
-            d3 = (bx2 - bx1) * (y1 - by1) - (by2 - by1) * (x1 - bx1)
-            d4 = (bx2 - bx1) * (y2 - by1) - (by2 - by1) * (x2 - bx1)
-            return (d1 * d2 <= 0) & (d3 * d4 <= 0)
-        for bx1, by1, bx2, by2 in ((xmin, ymin, xmax, ymin),
-                                   (xmax, ymin, xmax, ymax),
-                                   (xmax, ymax, xmin, ymax),
-                                   (xmin, ymax, xmin, ymin)):
-            hit |= todo & seg_cross(bx1, by1, bx2, by2)
-    return np.any(hit, axis=1)
 
 
 def clip_convex(subject, clip) -> np.ndarray:

@@ -252,7 +252,7 @@ def triangulate(points: DataFrame, tiles_x: int = 4, tiles_y: int = 2,
     for _ in range(max_iter):
         halo = h
 
-        def _kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def _kernel(key, pdf):
             tx, ty = int(key[0]), int(key[1])
             ex0 = x0 + tx * tw - halo
             ex1 = x0 + (tx + 1) * tw + halo

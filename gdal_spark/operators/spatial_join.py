@@ -33,6 +33,11 @@ Scale design (100 TB story):
   The predicate is a fixed number of edge slots, so its size does not
   grow with the zone layer and the join stage's generated method stays
   under HotSpot's 8000-byte compile limit.
+- One classifier, ``_part_edges``, makes both driver-side decisions:
+  which edges a cell or part keeps, and so whether a cell of the
+  quadtree descent is full (no edge meets it, odd parity), outside (no
+  edge meets it, even parity) or boundary. A ``full`` flag is therefore
+  the same proof as the exact test's, not a separate float corner test.
 - For polygon sets too large to broadcast, the same cover table can be
   shuffle-joined on (tx, ty) with salting — see tiling.salted_count for
   the skew pattern; not needed for the fixture scale.
@@ -57,7 +62,7 @@ from gdal_spark.geo import mercator as M
 COVER_CELLS = 131072
 
 #: degrees. ``tile_cols`` can place a point a rounding step (~1e-13°)
-#: outside its cell's float rectangle; every cover test widens the
+#: outside its cell's float rectangle; ``_part_edges`` widens every
 #: rectangle by this much.
 COVER_MARGIN = 1e-9
 
@@ -94,23 +99,19 @@ def zone_cell_cover(zones=ZONES, zoom: int | None = None) -> tuple[int, pd.DataF
 
     Returns (zoom, frame of tx, ty, zone_fid, full, lon0, lon1, lat0,
     lat1, parity, edges). ``full`` mirrors the envelope-contains accept
-    of ogrlayer.cpp:4040: the cell lies entirely in the polygon
-    interior, so member points need no exact test. A boundary row
-    (``full`` false) carries the exact test's inputs for the part
-    [lon0, lon1) × [lat0, lat1) of its cell (``_cell_edges``): the
-    folded ``parity`` and the local ``edges``. These are NaN / None on
-    full rows.
+    of ogrlayer.cpp:4040: no zone edge meets the cell and the cell lies
+    in the zone's interior, so member points need no exact test. A
+    boundary row (``full`` false) carries the exact test's inputs for
+    the part [lon0, lon1) × [lat0, lat1) of its cell (``_cell_edges``):
+    the folded ``parity`` and the local ``edges``. These are NaN / None
+    on full rows. One rule, ``_part_edges``, decides every cell and
+    part: full, dropped or boundary, and a boundary row's edges.
     """
     zoom = auto_cover_zoom(zones) if zoom is None else zoom
     parts = []
     for zone in zones:
-        rings = [np.asarray(r, dtype=np.float64) for r in zone["rings"]]
-        zbbox = G.polygon_bbox(zone["rings"])
-        txs, tys, fulls = _quad_cover(rings, zbbox, zoom)
-        for part in (pd.DataFrame({"tx": txs[fulls], "ty": tys[fulls],
-                                   "full": True}),
-                     _cell_edges(rings, txs[~fulls], tys[~fulls], zoom)):
-            parts.append(part.assign(zone_fid=np.int32(zone["zone_fid"])))
+        parts += [part.assign(zone_fid=np.int32(zone["zone_fid"]))
+                  for part in _quad_cover(zone["rings"], zoom)]
     pdf = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
         {"tx": np.array([], np.int64), "ty": np.array([], np.int64),
          "full": np.array([], bool), "zone_fid": np.array([], np.int32)})
@@ -124,103 +125,120 @@ def zone_cell_cover(zones=ZONES, zoom: int | None = None) -> tuple[int, pd.DataF
 _EAST = 1000.0
 
 
-def _part_edges(x1, y1, x2, y2, lo_lon, lo_lat, hi_lon, hi_lat):
-    """Edges (E,) against widened rectangles (R,) → (parity (R,), row
-    (N,), edges (N, 4)): the ``_cell_edges`` classification, with the
-    local edges of rectangle ``row[i]`` in ``edges[i]``, rows ascending.
+def _part_edges(x1, y1, x2, y2, x0, x9, y0, y9):
+    """Edges (E,) against rectangles [x0, x9] × [y0, y9] (R,) → (parity
+    (R,), row (N,), edges (N, 4)): the edges of rectangle ``row[i]`` in
+    ``edges[i]`` as x1, y1, x2, y2, rows ascending. The cover build's
+    only edge-vs-rectangle test.
 
-    An edge right of the rectangle counts for a point exactly when
-    ylo <= lat < yhi, i.e. [lat >= ylo] XOR [lat >= yhi]. Each such
-    end below the rectangle toggles ``parity``; an end within its
-    latitudes becomes the stand-in edge (_EAST, y)–(_EAST, _EAST),
-    which counts exactly when lat >= y; ends above it never count.
-    Two equal ends cancel, so an edge continued by another (a shared
-    vertex right of the rectangle) leaves nothing behind."""
-    xlo, xhi = np.minimum(x1, x2), np.maximum(x1, x2)
+    A point ``tile_cols`` maps into a rectangle lies within it widened
+    by ~1e-13°; against the rectangle widened by ``COVER_MARGIN`` (m)
+    every edge is one of:
+
+    - apart in y (yhi < y0 - m or ylo > y9 + m): the point's latitude is
+      outside the edge's [ylo, yhi], so the edge can neither count nor
+      hold the point. Skipped.
+    - local: it meets the widened rectangle, i.e. an endpoint lies in it
+      or it crosses one of its four sides. Kept, and tested per point
+      bit for bit as ``geom.point_in_polygon`` tests it.
+    - otherwise, at every latitude it shares with the widened rectangle
+      it lies outside the rectangle's longitudes, and being one segment
+      it stays on one side: wholly left or wholly right. So at the
+      point's latitude it lies a horizontal gap g > m - ~1e-13 from the
+      point, and is not on it. The cross product is ±|dy|·g exactly;
+      its rounding error is a few ulps of |dy|·(|dx| + |lon - x1|) ≤
+      |dy|·720, about 1e-13·|dy|, far below |dy|·g. So its computed
+      sign gives the true side: a left edge never counts and is
+      skipped; a right edge counts exactly when ylo <= lat < yhi. The
+      side is read from the sign of the oracle's cross product at the
+      rectangle's own left side x0, at a latitude the edge shares with
+      the widened rectangle, which lies more than m from the edge by
+      the same argument. A flat edge reads 0 and is skipped: it never
+      counts.
+
+    A right edge's count, [lat >= ylo] XOR [lat >= yhi], reads only its
+    ends. Each end below the widened rectangle toggles ``parity``; an
+    end within its latitudes becomes the stand-in edge (_EAST, y)–
+    (_EAST, _EAST), which counts exactly when lat >= y; ends above it
+    never count. Two equal ends cancel, so an edge continued by another
+    right edge leaves nothing behind, and a rectangle with no local edge
+    keeps no edges at all. ``parity`` XOR the crossings of the kept
+    edges OR a hit on a local edge is then the exact test's answer for
+    every point in the rectangle."""
+    m, n = COVER_MARGIN, len(x0)
     ylo, yhi = np.minimum(y1, y2), np.maximum(y1, y2)
-    lo_lon, lo_lat, hi_lon, hi_lat = (a[:, None] for a in
-                                      (lo_lon, lo_lat, hi_lon, hi_lat))
-    local = ((ylo <= hi_lat) & (yhi >= lo_lat)
-             & (xhi >= lo_lon) & (xlo <= hi_lon))
-    right = xlo > hi_lon
-    parity = ((right & (ylo < lo_lat)).sum(axis=1)
-              + (right & (yhi < lo_lat)).sum(axis=1)) % 2 == 1
-    ends = [np.nonzero(right & (y >= lo_lat) & (y <= hi_lat))
-            for y in (ylo, yhi)]
-    row = np.concatenate([r for r, _ in ends])
-    y = np.concatenate([y[c] for (_, c), y in zip(ends, (ylo, yhi))])
-    (row, y), odd = np.unique(np.stack([row, y]), axis=1,
-                              return_counts=True)
+    r, c = np.nonzero((ylo <= y9[:, None] + m) & (yhi >= y0[:, None] - m))
+    x1, y1, x2, y2, ylo, yhi = (a[c] for a in (x1, y1, x2, y2, ylo, yhi))
+    side_x, side_y = x0[r], np.clip(y0[r], ylo, yhi)
+    x0, x9, y0, y9 = x0[r] - m, x9[r] + m, y0[r] - m, y9[r] + m
+    dx, dy = x2 - x1, y2 - y1
+
+    def cross(x, y):
+        """the oracle's cross product of the edge and the point (x, y)"""
+        return dx * (y - y1) - dy * (x - x1)
+
+    def crosses(ax, ay, bx, by):
+        """the edge and the side (ax, ay)–(bx, by) cross or touch"""
+        sx, sy = bx - ax, by - ay
+        return ((cross(ax, ay) * cross(bx, by) <= 0)
+                & ((sx * (y1 - ay) - sy * (x1 - ax))
+                   * (sx * (y2 - ay) - sy * (x2 - ax)) <= 0))
+
+    def inside(x, y):
+        return (x >= x0) & (x <= x9) & (y >= y0) & (y <= y9)
+
+    local = ((np.maximum(x1, x2) >= x0) & (np.minimum(x1, x2) <= x9)
+             & (inside(x1, y1) | inside(x2, y2)
+                | crosses(x0, y0, x9, y0) | crosses(x9, y0, x9, y9)
+                | crosses(x9, y9, x0, y9) | crosses(x0, y9, x0, y0)))
+    right = ~local & (np.sign(dy) * cross(side_x, side_y) > 0)
+    parity = np.bincount(r[right & (ylo < y0)], minlength=n) % 2 == 1
+    lo, hi = right & (ylo >= y0), right & (yhi <= y9)
+    (row, y), odd = np.unique(
+        np.stack([np.concatenate([r[lo], r[hi]]),
+                  np.concatenate([ylo[lo], yhi[hi]])]),
+        axis=1, return_counts=True)
     row, y = row[odd % 2 == 1].astype(np.int64), y[odd % 2 == 1]
-    lr, lc = np.nonzero(local)
-    row = np.concatenate([lr, row])
+    row = np.concatenate([r[local], row])
     edges = np.concatenate([
-        np.stack([x1, y1, x2, y2], axis=1)[lc],
+        np.stack([x1, y1, x2, y2], axis=1)[local],
         np.stack([np.full_like(y, _EAST), y, np.full_like(y, _EAST),
                   np.full_like(y, _EAST)], axis=1)])
     order = np.argsort(row, kind="stable")
     return parity, row[order], edges[order]
 
 
-def _cell_edges(rings, gx, gy, zoom) -> pd.DataFrame:
-    """Boundary rows of one zone for cells (gx, gy): per row the part
-    [lon0, lon1) × [lat0, lat1) of the cell it answers for, the parity
-    folded from the edges right of that part, and its local edges
-    (stand-ins included) as an (n, 4) x1, y1, x2, y2 array.
+def _cell_edges(seg, gx, gy, rect, parity, row, edges) -> pd.DataFrame:
+    """Boundary rows of one zone for cells (gx, gy), given the cells'
+    rectangles ``rect`` (x0, x9, y0, y9) and their ``_part_edges``
+    result (parity, row, edges) against the zone's edges ``seg``. Per
+    row: the part [lon0, lon1) × [lat0, lat1) of the cell it answers
+    for, the parity folded from the edges right of that part, and its
+    edges (stand-ins included) as an (n, 4) x1, y1, x2, y2 array.
 
-    A point ``tile_cols`` maps into a cell lies within the cell's
-    rectangle widened by ``COVER_MARGIN`` (m). Against that rectangle
-    every edge is one of:
-
-    - apart in y (yhi < lo_lat or ylo > hi_lat): the point's latitude is
-      outside the edge's [ylo, yhi], so the edge can neither count nor
-      hold the point. Skipped.
-    - wholly left (xhi < lo_lon): the point is not in the edge's x-range,
-      so not on it, and lies right of it by a gap g > m - ~1e-13. The
-      cross product is -dy·g exactly; its rounding error is a few ulps
-      of |dy|·(|dx| + |lon - x1|) ≤ |dy|·720 when the latitude is in
-      the edge's y-range, about 1e-13·|dy|, far below |dy|·g. So its
-      computed sign says "right of the edge" and the edge never counts.
-      Skipped.
-    - wholly right (xlo > hi_lon): the point is not on it, and by the
-      same bound the sign says "left of the edge": the edge counts
-      exactly when ylo <= lat < yhi. That reads only the edge's ends,
-      which ``_part_edges`` folds into ``parity`` or keeps as stand-in
-      edges.
-    - anything else is local and is tested per point, bit for bit as
-      ``geom.point_in_polygon`` tests it.
-
-    So every skipped or folded edge answers as the exact test would,
-    and ``parity`` XOR the local crossings OR a hit on a local edge is
-    that test's answer.
-
-    A row with more than ``EDGE_SLOTS`` local edges is split into its 4
-    quarters, at most ``SPLIT_DEPTH`` times; each quarter is classified
-    as above. A point belongs to exactly one part, as parts are
-    half-open and the cell's outer sides are open (±inf). Only edges
-    that meet at one point (a vertex of degree > ``EDGE_SLOTS``)
-    outlast the splits; such a row keeps all its edges, and
-    ``build_cover_df`` widens every row's slots to fit the largest."""
-    x1, y1, x2, y2 = (np.concatenate(a) for a in
-                      zip(*(G._ring_arrays(r) for r in rings)))
-    minlat, minlon, maxlat, maxlon = M.tile_bounds_latlon_np(gx, gy, zoom)
+    A row with more than ``EDGE_SLOTS`` edges is split into its 4
+    quarters, at most ``SPLIT_DEPTH`` times; each quarter goes through
+    ``_part_edges`` in turn. A point belongs to exactly one part, as
+    parts are half-open and the cell's outer sides are open (±inf).
+    Only edges that meet at one point (a vertex of degree >
+    ``EDGE_SLOTS``) outlast the splits; such a row keeps all its edges,
+    and ``build_cover_df`` widens every row's slots to fit the
+    largest."""
     n = len(gx)
     # a part: its cell, exact rectangle x0, x9, y0, y9, region r0 … r3
-    part = [np.arange(n), minlon, maxlon, np.minimum(minlat, maxlat),
-            np.maximum(minlat, maxlat)] + [
+    part = [np.arange(n), *rect] + [
         np.full(n, v) for v in (-np.inf, np.inf, -np.inf, np.inf)]
     rows = []
     for depth in range(SPLIT_DEPTH + 1):
         cell, x0, x9, y0, y9, r0, r1, r2, r3 = part
-        m = COVER_MARGIN
-        parity, row, edges = _part_edges(x1, y1, x2, y2, x0 - m, y0 - m,
-                                         x9 + m, y9 + m)
         n = np.bincount(row, minlength=len(cell))
         split = (n > EDGE_SLOTS) & (depth < SPLIT_DEPTH)
         rows.append([a[~split] for a in (cell, r0, r1, r2, r3, parity)]
                     + [np.split(edges[~split[row]], np.cumsum(n[~split])[:-1])
                        if (~split).any() else []])
         cell, x0, x9, y0, y9, r0, r1, r2, r3 = (a[split] for a in part)
+        if not len(cell):
+            break
         xm, ym = (x0 + x9) / 2, (y0 + y9) / 2
         quarters = [(hx, hy)
                     for hx in ((x0, xm, r0, xm), (xm, x9, xm, r1))
@@ -228,63 +246,15 @@ def _cell_edges(rings, gx, gy, zoom) -> pd.DataFrame:
         part = [np.tile(cell, 4)] + [
             np.concatenate([(hx + hy)[k] for hx, hy in quarters])
             for k in (0, 1, 4, 5, 2, 3, 6, 7)]
-        if not len(cell):
-            break
+        parity, row, edges = _part_edges(*seg, *part[1:5])
     cell, r0, r1, r2, r3, parity = (np.concatenate(c) for c in
                                     list(zip(*rows))[:6])
-    edges = [e for level in rows for e in level[6]]
     return pd.DataFrame({
         "tx": gx[cell], "ty": gy[cell], "full": False,
         "lon0": r0, "lon1": r1, "lat0": r2, "lat1": r3,
         "parity": pd.Series(parity, dtype=object),
-        "edges": pd.Series(edges, dtype=object)})
-
-
-def _classify_cells(rings, zbbox, gx, gy, zoom):
-    """Classify cells (gx, gy int64 arrays at ``zoom``) against one
-    polygon → (keep, full) bool arrays. keep = cell intersects the
-    polygon; full = cell interior entirely inside (the ogrlayer.cpp:4040
-    envelope-contains accept). Both test the cell widened by
-    ``COVER_MARGIN``, so they hold for every point ``tile_cols`` maps
-    into the cell."""
-    xmin, ymin, xmax, ymax = zbbox
-    minlat, minlon, maxlat, maxlon = M.tile_bounds_latlon_np(gx, gy, zoom)
-    m = COVER_MARGIN
-    lo_lon, lo_lat = minlon - m, np.minimum(minlat, maxlat) - m
-    hi_lon, hi_lat = maxlon + m, np.maximum(minlat, maxlat) + m
-    keep = np.zeros(len(gx), dtype=bool)
-    full = np.zeros(len(gx), dtype=bool)
-    # cell bbox vs zone bbox reject (stage-1 envelope test)
-    idx = np.nonzero(~((hi_lon < xmin) | (lo_lon > xmax)
-                       | (hi_lat < ymin) | (lo_lat > ymax)))[0]
-    if len(idx) == 0:
-        return keep, full
-    lo_lon, hi_lon = lo_lon[idx], hi_lon[idx]
-    lo_lat, hi_lat = lo_lat[idx], hi_lat[idx]
-    m = len(idx)
-    # 4 corners of every candidate cell in one PIP call
-    corners_x = np.concatenate([lo_lon, hi_lon, hi_lon, lo_lon])
-    corners_y = np.concatenate([lo_lat, lo_lat, hi_lat, hi_lat])
-    cin = G.point_in_polygon(corners_x, corners_y, rings).reshape(4, m)
-    inside_all, inside_any = cin.all(axis=0), cin.any(axis=0)
-    crossed = np.zeros(m, dtype=bool)
-    vin = np.zeros(m, dtype=bool)       # any polygon vertex inside cell
-    hole_vin = np.zeros(m, dtype=bool)  # any HOLE vertex inside cell
-    for ri, r in enumerate(rings):
-        crossed |= G.edges_cross_rects(r, lo_lon, lo_lat, hi_lon, hi_lat)
-        rx, ry = r[:, 0][None, :], r[:, 1][None, :]
-        v = ((rx >= lo_lon[:, None]) & (rx <= hi_lon[:, None])
-             & (ry >= lo_lat[:, None]) & (ry <= hi_lat[:, None])).any(axis=1)
-        vin |= v
-        if ri > 0:
-            hole_vin |= v
-    # vin guard: a polygon (or hole) strictly inside one cell leaves no
-    # corner-inside or edge-crossing evidence — the seed grid of the
-    # quadtree build can be coarser than the zone, so test ring
-    # vertices against the cell too
-    keep[idx] = crossed | inside_any | vin
-    full[idx] = inside_all & ~crossed & ~hole_vin
-    return keep, full
+        "edges": pd.Series([e for level in rows for e in level[6]],
+                           dtype=object)})
 
 
 def _expand_cells(tx, ty, d: int):
@@ -298,7 +268,7 @@ def _expand_cells(tx, ty, d: int):
     return ex, ey
 
 
-#: seed-grid budget for the quadtree cover build: the recursion starts
+#: seed-grid budget for the quadtree cover build: the descent starts
 #: at the coarsest zoom where the zone bbox is under this many cells,
 #: then subdivides only boundary cells — build work is O(perimeter /
 #: cell_size), not O(area / cell_size²), so a fine final zoom (few
@@ -306,48 +276,43 @@ def _expand_cells(tx, ty, d: int):
 COVER_SEED_CELLS = 1024
 
 
-def _quad_cover(rings, zbbox, zoom: int):
-    """Uniform-zoom cover of one polygon built by quadtree descent.
+def _quad_cover(rings, zoom: int):
+    """Cover of one polygon at ``zoom`` by quadtree descent → (full
+    cells, boundary rows) frames.
 
-    Emits the same (tx, ty, full) set as classifying every bbox cell at
-    ``zoom`` directly: full coarse cells expand to all-full descendants
-    (strict subset of the interior), boundary cells recurse.
+    Each level's cells go through ``_part_edges``. A cell left with no
+    edges has no local edge, so the zone's boundary misses it and its
+    ``parity`` answers for all of it: odd, the cell is full and expands
+    to its ``zoom`` descendants; even, it is dropped. Every other cell
+    is boundary and descends. At ``zoom`` the boundary cells go on to
+    ``_cell_edges`` with that classification, so no cell is classified
+    twice.
     """
-    xmin, ymin, xmax, ymax = zbbox
-    z0 = max(1, min(zoom, auto_cover_zoom(
-        [{"rings": [r.tolist() for r in rings], "zone_fid": -1}],
-        COVER_SEED_CELLS)))
-    tx0, ty0 = M.latlon_to_tile_np(np.array([ymax]), np.array([xmin]), z0)
-    tx1, ty1 = M.latlon_to_tile_np(np.array([ymin]), np.array([xmax]), z0)
-    txs = np.arange(int(tx0[0]), int(tx1[0]) + 1, dtype=np.int64)
-    tys = np.arange(int(ty0[0]), int(ty1[0]) + 1, dtype=np.int64)
-    gx, gy = np.meshgrid(txs, tys, indexing="ij")
-    gx, gy = gx.ravel(), gy.ravel()
-    out_x, out_y, out_f = [], [], []
-    z = z0
-    while len(gx):
-        keep, full = _classify_cells(rings, zbbox, gx, gy, z)
+    seg = [np.concatenate(a) for a in zip(*(G._ring_arrays(r) for r in rings))]
+    xmin, ymin, xmax, ymax = G.polygon_bbox(rings)
+    z = max(1, min(zoom, auto_cover_zoom([{"rings": rings}], COVER_SEED_CELLS)))
+    tx0, ty0 = M.latlon_to_tile_np(np.array([ymax]), np.array([xmin]), z)
+    tx1, ty1 = M.latlon_to_tile_np(np.array([ymin]), np.array([xmax]), z)
+    gx, gy = (a.ravel() for a in np.meshgrid(
+        np.arange(int(tx0[0]), int(tx1[0]) + 1, dtype=np.int64),
+        np.arange(int(ty0[0]), int(ty1[0]) + 1, dtype=np.int64),
+        indexing="ij"))
+    full = []
+    while True:
+        lat_a, x0, lat_b, x9 = M.tile_bounds_latlon_np(gx, gy, z)
+        rect = [x0, x9, np.minimum(lat_a, lat_b), np.maximum(lat_a, lat_b)]
+        parity, row, edges = _part_edges(*seg, *rect)
+        bnd = np.bincount(row, minlength=len(gx)) > 0
+        full.append(_expand_cells(gx[~bnd & parity], gy[~bnd & parity],
+                                  zoom - z))
         if z == zoom:
-            out_x.append(gx[keep])
-            out_y.append(gy[keep])
-            out_f.append(full[keep])
             break
-        fsel = keep & full
-        if fsel.any():
-            ex, ey = _expand_cells(gx[fsel], gy[fsel], zoom - z)
-            out_x.append(ex)
-            out_y.append(ey)
-            out_f.append(np.ones(len(ex), dtype=bool))
-        bsel = keep & ~full
-        bx, by = gx[bsel], gy[bsel]
-        gx = np.repeat(bx * 2, 4) + np.tile(np.array([0, 1, 0, 1]), len(bx))
-        gy = np.repeat(by * 2, 4) + np.tile(np.array([0, 0, 1, 1]), len(by))
+        gx, gy = _expand_cells(gx[bnd], gy[bnd], 1)
         z += 1
-    if not out_x:
-        e = np.array([], dtype=np.int64)
-        return e, e.copy(), np.array([], dtype=bool)
-    return (np.concatenate(out_x), np.concatenate(out_y),
-            np.concatenate(out_f))
+    fx, fy = (np.concatenate(a) for a in zip(*full))
+    return (pd.DataFrame({"tx": fx, "ty": fy, "full": True}),
+            _cell_edges(seg, gx[bnd], gy[bnd], [a[bnd] for a in rect],
+                        parity[bnd], (np.cumsum(bnd) - 1)[row], edges))
 
 
 def zones_attr_df(spark: SparkSession) -> DataFrame:

@@ -76,7 +76,7 @@ def tile_pngs(tiles: DataFrame, tile_size: int = 32,
 
     from gdal_spark.geo.png import encode_png
 
-    def _enc(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _enc(key, pdf):
         level, ty, tx = int(key[0]), int(key[1]), int(key[2])
         img = np.zeros((tile_size, tile_size), dtype=np.uint8)
         yy = pdf["py"].to_numpy(np.int64) % tile_size

@@ -107,14 +107,6 @@ def test_polygon_area_with_hole():
     assert G.polygon_area(rings) == 15.0
 
 
-def test_segments_intersect_rect():
-    ring = [(0, 0), (10, 0), (10, 10), (0, 10)]
-    assert G.segments_intersect_rect(ring, -1, -1, 1, 1)      # corner crossing
-    assert not G.segments_intersect_rect(ring, 4, 4, 6, 6)    # fully inside
-    assert not G.segments_intersect_rect(ring, 20, 20, 30, 30)
-    assert G.segments_intersect_rect(ring, 9, 4, 11, 6)       # side crossing
-
-
 def test_haversine():
     # quarter meridian ≈ pi/2 * R
     d = G.haversine_m([0.0], [0.0], [90.0], [0.0])

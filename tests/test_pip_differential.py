@@ -13,17 +13,20 @@ local edges into one z12 cell, and two squares meeting at one vertex.
 Most coordinates lie on z12 tile boundaries. Points: uniform, a lattice
 along every edge with its 8 one-ulp neighbours, and the corners of every
 cover cell with theirs. The cover is checked on its own too: every
-point in a ``full`` cell must be inside by the oracle.
+point in a ``full`` cell must be inside by the oracle, and every edge a
+boundary row carries must meet that row's part of its cell.
 
 ``PIP_BED_SEEDS=3,4,5`` runs more seeds.
 """
 
 import os
+from fractions import Fraction
 
 import numpy as np
 import pandas as pd
 import pytest
 
+from gdal_spark.fixtures import ZONES
 from gdal_spark.geo import geom as G
 from gdal_spark.geo import mercator as M
 from gdal_spark.operators import spatial_join as sj
@@ -270,3 +273,44 @@ def test_layer_exercises_splits_and_wide_rows():
     comb = bnd[bnd["zone_fid"] == 7]
     assert np.isfinite(comb["lon0"]).any()
     assert (bnd["edges"].map(len) > sj.EDGE_SLOTS).any()
+
+
+def _meets(edge, rect):
+    """Whether segment (x1, y1, x2, y2) meets the closed rectangle (x0,
+    x9, y0, y9), in exact rational arithmetic: clip the segment's
+    parameter range [0, 1] to each axis's slab."""
+    x1, y1, x2, y2 = map(Fraction, edge)
+    t0, t1 = Fraction(0), Fraction(1)
+    for p, d, lo, hi in ((x1, x2 - x1, *rect[:2]), (y1, y2 - y1, *rect[2:])):
+        lo, hi = Fraction(lo), Fraction(hi)
+        if d == 0:
+            if not lo <= p <= hi:
+                return False
+        else:
+            a, b = sorted(((lo - p) / d, (hi - p) / d))
+            t0, t1 = max(t0, a), min(t1, b)
+    return t0 <= t1
+
+
+@pytest.mark.parametrize("layer", [*SEEDS, "fixture"])
+def test_boundary_rows_carry_only_edges_meeting_their_part(layer):
+    """Every edge on a boundary row, stand-ins excepted, meets the row's
+    part of its cell widened by ``COVER_MARGIN``: an edge that misses it
+    is wholly left or right of every point there, so it belongs in the
+    parity or nowhere."""
+    zones = ZONES if layer == "fixture" else make_layer(layer)
+    _, cover = sj.zone_cell_cover(zones, Z)
+    bnd = cover[~cover["full"]]
+    minlat, minlon, maxlat, maxlon = M.tile_bounds_latlon_np(
+        bnd["tx"].to_numpy(), bnd["ty"].to_numpy(), Z)
+    m = sj.COVER_MARGIN
+    rects = np.stack([
+        np.maximum(minlon, bnd["lon0"].to_numpy(float)) - m,
+        np.minimum(maxlon, bnd["lon1"].to_numpy(float)) + m,
+        np.maximum(np.minimum(minlat, maxlat), bnd["lat0"].to_numpy(float)) - m,
+        np.minimum(np.maximum(minlat, maxlat), bnd["lat1"].to_numpy(float)) + m,
+    ], axis=1)
+    assert len(bnd)
+    stray = [(i, e) for i, (rect, edges) in enumerate(zip(rects, bnd["edges"]))
+             for e in edges.tolist() if e[0] != sj._EAST and not _meets(e, rect)]
+    assert not stray, (len(stray), stray[:3])

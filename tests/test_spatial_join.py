@@ -51,6 +51,33 @@ def test_full_cells_really_inside():
             assert G.point_in_polygon(px, py, rings[fid]).all()
 
 
+def _classify(seg, x0, y0, x9, y9):
+    """One rectangle through ``_part_edges`` → (parity, its local edges,
+    the latitudes of its stand-in edges)."""
+    parity, _, edges = sj._part_edges(
+        *seg, *(np.array([v], np.float64) for v in (x0, x9, y0, y9)))
+    stand = edges[:, 0] == sj._EAST
+    return (bool(parity[0]), set(map(tuple, edges[~stand].tolist())),
+            edges[stand, 1].tolist())
+
+
+def test_part_edges_local_test():
+    """An edge is local exactly when it meets the rectangle. A non-local
+    edge is folded into the parity when right of it and dropped when
+    left of it, also when its bbox covers the rectangle."""
+    square = G._ring_arrays([(0, 0), (10, 0), (10, 10), (0, 10)])
+    bottom, right, left = (0, 0, 10, 0), (10, 0, 10, 10), (0, 10, 0, 0)
+    # corner crossing: the right edge's lower end becomes a stand-in
+    assert _classify(square, -1, -1, 1, 1) == (False, {bottom, left}, [0.0])
+    assert _classify(square, 4, 4, 6, 6) == (True, set(), [])  # fully inside
+    assert _classify(square, 20, 20, 30, 30) == (False, set(), [])
+    assert _classify(square, 9, 4, 11, 6) == (False, {right}, [])  # side
+    # the diagonal x + y = 10 passes by the corner of either square
+    diag = [np.array([v], np.float64) for v in (0, 10, 10, 0)]
+    assert _classify(diag, 1, 1, 3, 3) == (True, set(), [])    # right: folded
+    assert _classify(diag, 7, 7, 9, 9) == (False, set(), [])   # left: dropped
+
+
 def test_first_match_picks_lowest_zone_fid(spark):
     from gdal_spark.queries import pages_df
     p = pages_df(spark, SF)

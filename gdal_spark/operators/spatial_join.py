@@ -219,8 +219,9 @@ def _cell_edges(seg, gx, gy, rect, parity, row, edges) -> pd.DataFrame:
     A row with more than ``EDGE_SLOTS`` edges is split into its 4
     quarters, at most ``SPLIT_DEPTH`` times; each quarter goes through
     ``_part_edges`` in turn. A point belongs to exactly one part, as
-    parts are half-open and the cell's outer sides are open (±inf).
-    Only edges that meet at one point (a vertex of degree >
+    parts are half-open and the cell's outer sides are open (±inf). A
+    part left with no edges and even parity holds no point of the zone
+    and is dropped. Only edges that meet at one point (a vertex of degree >
     ``EDGE_SLOTS``) outlast the splits; such a row keeps all its edges,
     and ``build_cover_df`` widens every row's slots to fit the
     largest."""
@@ -233,9 +234,10 @@ def _cell_edges(seg, gx, gy, rect, parity, row, edges) -> pd.DataFrame:
         cell, x0, x9, y0, y9, r0, r1, r2, r3 = part
         n = np.bincount(row, minlength=len(cell))
         split = (n > EDGE_SLOTS) & (depth < SPLIT_DEPTH)
-        rows.append([a[~split] for a in (cell, r0, r1, r2, r3, parity)]
-                    + [np.split(edges[~split[row]], np.cumsum(n[~split])[:-1])
-                       if (~split).any() else []])
+        keep = ~split & ((n > 0) | parity)
+        rows.append([a[keep] for a in (cell, r0, r1, r2, r3, parity)]
+                    + [np.split(edges[keep[row]], np.cumsum(n[keep])[:-1])
+                       if keep.any() else []])
         cell, x0, x9, y0, y9, r0, r1, r2, r3 = (a[split] for a in part)
         if not len(cell):
             break

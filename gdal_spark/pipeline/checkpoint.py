@@ -7,8 +7,19 @@ Parquet: every stage commit writes
 
 - the stage output as a (optionally partitioned) parquet dataset,
 - an atomic JSON manifest (tmp + rename) recording: snapshot id, stage
-  name, input snapshot ids (lineage chain), wall time, total rows, and
-  per-partition row counts (per-partition lineage/metrics).
+  name, input snapshot ids (lineage chain), wall time, total rows,
+  per-partition row counts (per-partition lineage/metrics) and the
+  output schema.
+
+A commit runs no Spark job but the write (``_commit``). The row counts
+are the rows actually persisted: the driver sums the ``num_rows`` of
+the written parquet footers, keyed by each file's ``col=value``
+directory, as Iceberg records each data file's ``record_count`` in its
+manifest when the file is written. That costs O(files) small driver reads and
+no pass over the rows. The read-back and the resume read take the
+schema given to them (the written frame's, or the manifest's), so
+neither runs a schema-inference job, and a partition column keeps its
+type: a string ``"007"`` stays ``"007"``.
 
 ``run_stage`` is idempotent: a stage whose manifest says ``complete`` is
 not recomputed — the job resumes from the last good snapshot, exactly
@@ -28,10 +39,42 @@ import json
 import os
 import time
 import uuid
+from urllib.parse import unquote
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from gdal_spark.sources.commit import atomic_write
+
+
+def _commit(df: DataFrame, path: str, partition_by: str | None = None):
+    """Write ``df`` to ``path`` as parquet, replacing it, and run no
+    Spark job beyond the write's → (the written dataset, its rows, its
+    rows per partition).
+
+    The counts come from the footers of the written ``part-*`` files,
+    per partition keyed by the unescaped value of their ``col=value``
+    directory. The dataset is read back with ``df``'s schema, the
+    partition column moved last as a partitioned read orders it."""
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(path)
+    per_part = {}
+    for d, dirs, files in os.walk(path):
+        dirs.sort()
+        parts = [f for f in files if f.startswith("part-")]
+        if parts:
+            key = unquote(os.path.basename(d).partition("=")[2])
+            if key == "__HIVE_DEFAULT_PARTITION__":
+                key = "None"  # str() of the null it reads back as
+            per_part[key] = sum(pq.read_metadata(os.path.join(d, f)).num_rows
+                                for f in parts)
+    schema = StructType(sorted(df.schema.fields,
+                               key=lambda f: f.name == partition_by))
+    out = df.sparkSession.read.schema(schema).parquet(path)
+    return out, sum(per_part.values()), per_part if partition_by else {}
 
 
 class SnapshotStore:
@@ -57,39 +100,20 @@ class SnapshotStore:
                   inputs: list[str] | None = None) -> DataFrame:
         """Compute-or-resume one stage. ``fn() -> DataFrame``.
 
-        The manifest's ``rows`` metric is the Observation-counted
-        INPUT row count of the write (zero extra passes), not a
-        post-write audit of the persisted parquet — an intentional
-        trade at 10^12-row scale where a recount is a second full
-        scan; parquet's own footer row counts remain available for an
-        offline audit."""
+        A resume reads the committed output with the manifest's schema
+        and runs no Spark job. A commit runs only the write's: the
+        manifest's ``rows`` and ``rows_per_partition`` are the
+        persisted counts from the written parquet footers, read on the
+        driver (O(files) small reads, no pass over the rows)."""
         m = self.manifest(stage)
         path = self.data_path(stage)
         if m and m.get("status") == "complete":
-            return spark.read.parquet(path)
+            return spark.read.schema(
+                StructType.fromJson(m["schema"])).parquet(path)
 
         t0 = time.monotonic()
-        # Observation rides the WRITE action itself (df.observe), so the
-        # row metric costs zero extra passes — on a 10^12-row stage a
-        # post-write recount would be a second full scan of the output.
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-        obs = Observation(f"stage_{stage}")
-        df = fn().observe(obs, F.count(F.lit(1)).alias("rows"))
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(path)
+        out, total, per_part = _commit(fn(), path, partition_by)
         wall = time.monotonic() - t0
-
-        out = spark.read.parquet(path)
-        total = obs.get["rows"]
-        per_part = {}
-        if partition_by:
-            # partition-column-only scan: reads no data pages, the
-            # partition values come from the directory layout
-            for r in out.groupBy(partition_by).count().collect():
-                per_part[str(r[0])] = r[1]
 
         manifest = {
             "snapshot_id": uuid.uuid4().hex,
@@ -177,9 +201,7 @@ class VersionedTable(SnapshotStore):
         else:
             out = df
             version = (m["version"] + 1) if m else 1
-        path = self._vpath(table, version)
-        out.write.mode("overwrite").parquet(path)
-        written = spark.read.parquet(path)
+        written, rows, _ = _commit(out, self._vpath(table, version))
         manifest = {
             "snapshot_id": uuid.uuid4().hex,
             "stage": table,
@@ -189,7 +211,7 @@ class VersionedTable(SnapshotStore):
             "created_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "inputs": ([{"stage": table,
                          "snapshot_id": m["snapshot_id"]}] if m else []),
-            "metrics": {"rows": written.count(),
+            "metrics": {"rows": rows,
                         "upsert_key": key},
             "schema": written.schema.jsonValue(),
         }

@@ -1,9 +1,11 @@
 """Snapshot checkpoint/resume with per-partition lineage + metrics."""
 
 import json
-import os
+import uuid
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from gdal_spark.pipeline.checkpoint import SnapshotStore
 
@@ -81,3 +83,63 @@ def test_versioned_append_upsert(spark, tmp_path):
     assert m3["inputs"][0]["snapshot_id"] == m2["snapshot_id"]  # lineage
     # time travel to version 1
     assert vt.read(spark, "t", version=1).count() == 3
+
+
+def _jobs(spark, fn):
+    """(fn(), the number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    group = f"ckpt-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_is_one_job_and_resume_none(spark, tmp_path):
+    """A commit runs only its write; a resume runs nothing."""
+    from gdal_spark.pipeline.checkpoint import VersionedTable
+    store = SnapshotStore(str(tmp_path / "s"))
+    make = lambda: spark.range(100).withColumn("p", F.col("id") % 4)
+    _, n = _jobs(spark, lambda: store.run_stage(spark, "part", make,
+                                                partition_by="p"))
+    assert n == 1
+    out, n = _jobs(spark, lambda: store.run_stage(spark, "part", make,
+                                                  partition_by="p"))
+    assert n == 0 and out.count() == 100
+    _, n = _jobs(spark, lambda: store.run_stage(spark, "flat", make))
+    assert n == 1
+    vt = VersionedTable(str(tmp_path / "vt"))
+    _, n = _jobs(spark, lambda: vt.write(spark, "t", make()))
+    assert n == 1
+
+
+@pytest.mark.parametrize("col", ["i", "s"])
+def test_manifest_counts_match_input(spark, tmp_path, col):
+    """``rows`` and ``rows_per_partition`` equal the input's own counts,
+    with partition values that need escaping in a directory name."""
+    words = ["a b", "x/y", "50%", None]
+    df = spark.createDataFrame(
+        [(k, k % 3, words[k % 4]) for k in range(50)], "k long, i int, s string")
+    store = SnapshotStore(str(tmp_path))
+    store.run_stage(spark, "st", lambda: df, partition_by=col)
+    metrics = store.manifest("st")["metrics"]
+    want = {str(r[0]): r[1] for r in df.groupBy(col).count().collect()}
+    assert metrics["rows_per_partition"] == want
+    assert metrics["rows"] == sum(metrics["rows_per_partition"].values()) == 50
+
+
+def test_string_partition_keeps_its_type(spark, tmp_path):
+    """A string partition column of digits stays a string: in the
+    committed and the resumed frame, and in the manifest's keys."""
+    df = spark.createDataFrame([(1, "007"), (2, "007"), (3, "12")],
+                               "k long, p string")
+    store = SnapshotStore(str(tmp_path))
+    for _ in range(2):  # commit, then resume
+        out = store.run_stage(spark, "st", lambda: df, partition_by="p")
+        assert out.schema["p"].dataType == StringType()
+        assert sorted((r.k, r.p) for r in out.collect()) == [
+            (1, "007"), (2, "007"), (3, "12")]
+    assert store.manifest("st")["metrics"]["rows_per_partition"] == {
+        "007": 2, "12": 1}

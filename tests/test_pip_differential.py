@@ -13,8 +13,9 @@ local edges into one z12 cell, and two squares meeting at one vertex.
 Most coordinates lie on z12 tile boundaries. Points: uniform, a lattice
 along every edge with its 8 one-ulp neighbours, and the corners of every
 cover cell with theirs. The cover is checked on its own too: every
-point in a ``full`` cell must be inside by the oracle, and every edge a
-boundary row carries must meet that row's part of its cell.
+point in a ``full`` cell must be inside by the oracle, every edge a
+boundary row carries must meet that row's part of its cell, and every
+boundary row must be able to accept a point.
 
 ``PIP_BED_SEEDS=3,4,5`` runs more seeds.
 """
@@ -314,3 +315,14 @@ def test_boundary_rows_carry_only_edges_meeting_their_part(layer):
     stray = [(i, e) for i, (rect, edges) in enumerate(zip(rects, bnd["edges"]))
              for e in edges.tolist() if e[0] != sj._EAST and not _meets(e, rect)]
     assert not stray, (len(stray), stray[:3])
+
+
+@pytest.mark.parametrize("layer", [*SEEDS, "fixture"])
+def test_boundary_rows_can_accept(layer):
+    """A boundary row with no edges must have odd parity: with even
+    parity the predicate rejects every point, so the row is dead."""
+    zones = ZONES if layer == "fixture" else make_layer(layer)
+    _, cover = sj.zone_cell_cover(zones, Z)
+    bnd = cover[~cover["full"]]
+    dead = (bnd["edges"].map(len) == 0) & ~bnd["parity"].astype(bool)
+    assert not dead.any(), bnd[dead].head(3)

@@ -117,21 +117,6 @@ def run_single() -> dict:
         "host_gbps": [gbps_before, round(probe_gbps(), 2)],
         "cover_zoom": sj.auto_cover_zoom(),
     }
-    # attach ONLY the scalar efficiency numbers from the most recent
-    # scaling-protocol run (`python bench.py --scaling` → SCALING.json).
-    # The full nested per-run protocol stays in SCALING.json: embedding
-    # it here blew past the driver's stdout capture window in round 2
-    # (BENCH_r02.json parsed:null) — the output line must stay compact.
-    scal_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "SCALING.json")
-    if os.path.exists(scal_path):
-        with open(scal_path) as fh:
-            s = json.load(fh)
-        result["scaling_efficiency"] = s.get("efficiency")
-        result["scaling_efficiency_median"] = s.get(
-            f"efficiency_{s.get('n_cores')}_to_{s.get('four_n_cores')}_median")
-        result["scaling_cores"] = [s.get("n_cores"), s.get("four_n_cores")]
-        result["work_conservation_ratio"] = s.get("work_conservation_ratio")
     spark.stop()
     return result
 

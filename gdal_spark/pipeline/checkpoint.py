@@ -3,30 +3,40 @@
 North-rule requirement: jobs must be *resumable from checkpoint with
 per-partition lineage and metrics*. The container ships no Iceberg
 runtime, so this implements the moral equivalent over partitioned
-Parquet: every stage commit writes
+Parquet, with one commit protocol for ``run_stage`` stages and
+``VersionedTable`` versions alike, after Iceberg's manifests:
 
-- the stage output as a (optionally partitioned) parquet dataset,
-- an atomic JSON manifest (tmp + rename) recording: snapshot id, stage
-  name, input snapshot ids (lineage chain), wall time, total rows,
-  per-partition row counts (per-partition lineage/metrics) and the
-  output schema.
+1. the frame is written, as a (optionally partitioned) parquet dataset,
+   to a fresh directory ``<base>/<name>/<snapshot_id>/``;
+2. the manifest ``<base>/_manifests/<name>.json`` that names that
+   snapshot is written with ``atomic_write`` (tmp + rename): this is
+   the pointer swap, so a reader sees the old snapshot or the new one,
+   never a partial directory;
+3. every directory under ``<base>/<name>/`` that the new manifest does
+   not name is deleted: superseded snapshots, and orphans a crash left
+   before its swap.
+
+A manifest records the snapshot id, the name, the input snapshot ids
+(the lineage chain), the commit's wall time, total rows and per-partition
+row counts (per-partition lineage/metrics), and ``versions``: each kept
+snapshot's ``version``, ``snapshot_id`` and ``schema``. A stage keeps
+only its current snapshot; a table keeps every version (time travel).
 
 A commit runs no Spark job but the write (``_commit``). The row counts
 are the rows actually persisted: the driver sums the ``num_rows`` of
 the written parquet footers, keyed by each file's ``col=value``
 directory, as Iceberg records each data file's ``record_count`` in its
 manifest when the file is written. That costs O(files) small driver reads and
-no pass over the rows. The read-back and the resume read take the
-schema given to them (the written frame's, or the manifest's), so
-neither runs a schema-inference job, and a partition column keeps its
-type: a string ``"007"`` stays ``"007"``.
+no pass over the rows. Every read takes the schema the manifest records
+(or the written frame's), so no read runs a schema-inference job, and a
+partition column keeps its type: a string ``"007"`` stays ``"007"``.
 
-``run_stage`` is idempotent: a stage whose manifest says ``complete`` is
-not recomputed — the job resumes from the last good snapshot, exactly
-the Iceberg-snapshot resume semantics described in SURVEY.md §2.15.
-(Swapping this for a real Iceberg catalog is a one-line change of the
-write path — ``df.writeTo(table).append()`` — the manifest becomes the
-snapshot summary + table properties.)
+Lineage rule: ``run_stage`` resumes a stage whose manifest says
+``complete`` only while every input it records still has the snapshot
+id it recorded — the job resumes from the last good snapshot, the
+Iceberg-snapshot resume semantics of SURVEY.md §2.15. Otherwise the
+stage recomputes; its new id then fails the check of every stage that
+read it, so the recompute cascades downstream.
 
 The reference's closest analogs: chunk-restartable utilities and the
 geocoding cache layer (ogr/ogr_geocoding.cpp:118); GDAL itself has no
@@ -37,6 +47,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from urllib.parse import unquote
@@ -49,7 +60,7 @@ from gdal_spark.sources.commit import atomic_write
 
 
 def _commit(df: DataFrame, path: str, partition_by: str | None = None):
-    """Write ``df`` to ``path`` as parquet, replacing it, and run no
+    """Write ``df`` to the new directory ``path`` as parquet, and run no
     Spark job beyond the write's → (the written dataset, its rows, its
     rows per partition).
 
@@ -57,7 +68,7 @@ def _commit(df: DataFrame, path: str, partition_by: str | None = None):
     per partition keyed by the unescaped value of their ``col=value``
     directory. The dataset is read back with ``df``'s schema, the
     partition column moved last as a partitioned read orders it."""
-    writer = df.write.mode("overwrite")
+    writer = df.write
     if partition_by:
         writer = writer.partitionBy(partition_by)
     writer.parquet(path)
@@ -92,55 +103,78 @@ class SnapshotStore:
         with open(p) as f:
             return json.load(f)
 
+    def _snapshot_id(self, stage: str) -> str | None:
+        return (self.manifest(stage) or {}).get("snapshot_id")
+
     def data_path(self, stage: str) -> str:
-        return os.path.join(self.base, stage)
+        """The directory of the snapshot the manifest names."""
+        return os.path.join(self.base, stage, self._snapshot_id(stage))
+
+    def _read(self, spark: SparkSession, name: str, snap: dict) -> DataFrame:
+        """One kept snapshot (a ``versions`` entry), read with its schema."""
+        return spark.read.schema(StructType.fromJson(snap["schema"])).parquet(
+            os.path.join(self.base, name, snap["snapshot_id"]))
+
+    def _publish(self, spark: SparkSession, name: str, df: DataFrame,
+                 partition_by: str | None = None, inputs=(), kept=(),
+                 **extra) -> tuple[DataFrame, dict]:
+        """Commit ``df`` as a new snapshot of ``name`` that the manifest
+        names after the ``kept`` ones → (the written frame, the manifest).
+        Each input's snapshot id is read after the write, before the swap."""
+        sid = uuid.uuid4().hex
+        t0 = time.monotonic()
+        out, total, per_part = _commit(df, os.path.join(self.base, name, sid),
+                                       partition_by)
+        versions = [*kept, {"version": len(kept) + 1, "snapshot_id": sid,
+                            "schema": out.schema.jsonValue()}]
+        manifest = {
+            "snapshot_id": sid,
+            "stage": name,
+            "status": "complete",
+            "version": len(versions),
+            "created_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "inputs": [{"stage": s, "snapshot_id": self._snapshot_id(s)}
+                       for s in inputs],
+            "metrics": {
+                "wall_sec": round(time.monotonic() - t0, 3),
+                "rows": total,
+                "partition_by": partition_by,
+                "rows_per_partition": per_part,
+                "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+            },
+            "versions": versions,
+            **extra,
+        }
+        atomic_write(self._manifest_path(name),
+                     [json.dumps(manifest, indent=1).encode()])
+        named = {v["snapshot_id"] for v in versions}
+        for d in set(os.listdir(os.path.join(self.base, name))) - named:
+            shutil.rmtree(os.path.join(self.base, name, d))
+        return out, manifest
 
     def run_stage(self, spark: SparkSession, stage: str, fn,
                   partition_by: str | None = None,
                   inputs: list[str] | None = None) -> DataFrame:
         """Compute-or-resume one stage. ``fn() -> DataFrame``.
 
-        A resume reads the committed output with the manifest's schema
-        and runs no Spark job. A commit runs only the write's: the
-        manifest's ``rows`` and ``rows_per_partition`` are the
-        persisted counts from the written parquet footers, read on the
-        driver (O(files) small reads, no pass over the rows)."""
+        A stage resumes when its manifest says ``complete`` and each
+        input it records still has the recorded snapshot id; it then
+        reads the committed snapshot with the manifest's schema and runs
+        no Spark job. Otherwise ``fn()`` is committed, which runs only
+        the write's job: the manifest's ``rows`` and
+        ``rows_per_partition`` are the persisted counts from the written
+        parquet footers, read on the driver (O(files) small reads, no
+        pass over the rows)."""
         m = self.manifest(stage)
-        path = self.data_path(stage)
-        if m and m.get("status") == "complete":
-            return spark.read.schema(
-                StructType.fromJson(m["schema"])).parquet(path)
-
-        t0 = time.monotonic()
-        out, total, per_part = _commit(fn(), path, partition_by)
-        wall = time.monotonic() - t0
-
-        manifest = {
-            "snapshot_id": uuid.uuid4().hex,
-            "stage": stage,
-            "status": "complete",
-            "created_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "inputs": [
-                {"stage": s, "snapshot_id": (self.manifest(s) or {}).get("snapshot_id")}
-                for s in (inputs or [])
-            ],
-            "metrics": {
-                "wall_sec": round(wall, 3),
-                "rows": total,
-                "partition_by": partition_by,
-                "rows_per_partition": per_part,
-                "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-            },
-            "schema": out.schema.jsonValue(),
-        }
-        atomic_write(self._manifest_path(stage),
-                     [json.dumps(manifest, indent=1).encode()])
-        return out
+        if m and m.get("status") == "complete" and all(
+                self._snapshot_id(i["stage"]) == i["snapshot_id"]
+                for i in m["inputs"]):
+            return self._read(spark, stage, m["versions"][-1])
+        return self._publish(spark, stage, fn(), partition_by, inputs or ())[0]
 
     def lineage(self, stage: str) -> list[dict]:
         """Walk the input chain of a stage (most recent first)."""
         chain = []
-        m = self.manifest(stage)
         seen = set()
         frontier = [stage]
         while frontier:
@@ -169,52 +203,34 @@ class VersionedTable(SnapshotStore):
       appears in df are REPLACED by df's rows (ogr2ogr -upsert),
       the rest kept; df rows with fresh keys are inserts.
 
-    Reads always resolve the latest complete version; time travel via
-    ``read(version=N)``."""
-
-    def _vpath(self, table: str, version: int) -> str:
-        return os.path.join(self.base, f"{table}__v{version}")
+    A write commits as a stage does: version N goes to
+    ``<base>/<table>/<snapshot_id>/``, then the manifest swap names it
+    after versions 1..N-1 in ``versions``, then any directory it does
+    not name (a crashed write's) is deleted. Reads resolve the latest
+    version, or ``read(version=N)`` for time travel, each with the
+    schema recorded for that version, so no read runs a Spark job."""
 
     def read(self, spark: SparkSession, table: str,
              version: int | None = None) -> DataFrame:
         m = self.manifest(table)
         if m is None:
             raise FileNotFoundError(f"no snapshot for table {table}")
-        v = m["version"] if version is None else version
-        return spark.read.parquet(self._vpath(table, v))
+        snaps = {v["version"]: v for v in m["versions"]}
+        return self._read(spark, table,
+                          snaps[m["version"] if version is None else version])
 
     def write(self, spark: SparkSession, table: str, df: DataFrame,
               mode: str = "overwrite", key: str | None = None) -> dict:
+        if mode not in ("overwrite", "append", "upsert"):
+            raise ValueError(f"unknown mode {mode!r}")
+        if mode == "upsert" and not key:
+            raise ValueError("upsert requires a key column")
         m = self.manifest(table)
-        if m is not None and mode != "overwrite":
+        if m and mode != "overwrite":
             cur = self.read(spark, table)
-            if mode == "append":
-                out = cur.unionByName(df)
-            elif mode == "upsert":
-                if not key:
-                    raise ValueError("upsert requires a key column")
-                out = (cur.join(df.select(key).distinct(), key, "left_anti")
-                       .unionByName(df))
-            else:
-                raise ValueError(f"unknown mode {mode!r}")
-            version = m["version"] + 1
-        else:
-            out = df
-            version = (m["version"] + 1) if m else 1
-        written, rows, _ = _commit(out, self._vpath(table, version))
-        manifest = {
-            "snapshot_id": uuid.uuid4().hex,
-            "stage": table,
-            "status": "complete",
-            "version": version,
-            "mode": mode,
-            "created_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "inputs": ([{"stage": table,
-                         "snapshot_id": m["snapshot_id"]}] if m else []),
-            "metrics": {"rows": rows,
-                        "upsert_key": key},
-            "schema": written.schema.jsonValue(),
-        }
-        atomic_write(self._manifest_path(table),
-                     [json.dumps(manifest, indent=1).encode()])
-        return manifest
+            if mode == "upsert":
+                cur = cur.join(df.select(key).distinct(), key, "left_anti")
+            df = cur.unionByName(df)
+        return self._publish(spark, table, df, inputs=[table] if m else (),
+                             kept=m["versions"] if m else (),
+                             mode=mode, upsert_key=key)[1]

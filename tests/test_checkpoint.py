@@ -1,13 +1,19 @@
 """Snapshot checkpoint/resume with per-partition lineage + metrics."""
 
 import json
+import os
+import shutil
+import signal
+import subprocess
+import sys
+import time
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from gdal_spark.pipeline.checkpoint import SnapshotStore
+from gdal_spark.pipeline.checkpoint import SnapshotStore, VersionedTable
 
 
 def test_resume_skips_completed_stage(spark, tmp_path):
@@ -61,7 +67,6 @@ def test_incomplete_stage_recomputed(spark, tmp_path):
 
 
 def test_versioned_append_upsert(spark, tmp_path):
-    from gdal_spark.pipeline.checkpoint import VersionedTable
     vt = VersionedTable(str(tmp_path / "vt"))
     base = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], "k long, v string")
@@ -99,7 +104,6 @@ def _jobs(spark, fn):
 
 def test_commit_is_one_job_and_resume_none(spark, tmp_path):
     """A commit runs only its write; a resume runs nothing."""
-    from gdal_spark.pipeline.checkpoint import VersionedTable
     store = SnapshotStore(str(tmp_path / "s"))
     make = lambda: spark.range(100).withColumn("p", F.col("id") % 4)
     _, n = _jobs(spark, lambda: store.run_stage(spark, "part", make,
@@ -113,6 +117,11 @@ def test_commit_is_one_job_and_resume_none(spark, tmp_path):
     vt = VersionedTable(str(tmp_path / "vt"))
     _, n = _jobs(spark, lambda: vt.write(spark, "t", make()))
     assert n == 1
+    _, n = _jobs(spark, lambda: vt.write(spark, "t", make(), mode="append"))
+    assert n == 1
+    for version, rows in ((None, 200), (1, 100)):
+        out, n = _jobs(spark, lambda: vt.read(spark, "t", version=version))
+        assert n == 0 and out.count() == rows
 
 
 @pytest.mark.parametrize("col", ["i", "s"])
@@ -143,3 +152,191 @@ def test_string_partition_keeps_its_type(spark, tmp_path):
             (1, "007"), (2, "007"), (3, "12")]
     assert store.manifest("st")["metrics"]["rows_per_partition"] == {
         "007": 2, "12": 1}
+
+
+def test_resume_checks_input_lineage(spark, tmp_path):
+    """A stage whose input was recomputed is recomputed too: ``b`` read
+    5 rows of ``a``; once ``a`` is recomputed as 8 rows, ``b`` has 8 and
+    its manifest names ``a``'s new snapshot, the only one left on disk."""
+    store = SnapshotStore(str(tmp_path))
+
+    def publish(n):
+        a = store.run_stage(spark, "a", lambda: spark.range(n))
+        return store.run_stage(spark, "b", lambda: a, inputs=["a"])
+
+    assert publish(5).count() == 5
+    os.remove(store._manifest_path("a"))
+    assert publish(8).count() == 8
+    a_id = store.manifest("a")["snapshot_id"]
+    assert store.manifest("b")["inputs"] == [{"stage": "a", "snapshot_id": a_id}]
+    assert os.listdir(tmp_path / "a") == [a_id]
+    assert os.listdir(tmp_path / "b") == [store.manifest("b")["snapshot_id"]]
+
+
+@pytest.mark.parametrize("mode", ["bogus", "upsert"])
+def test_versioned_write_checks_its_arguments(spark, tmp_path, mode):
+    """A bad ``mode``, or an upsert without ``key``, fails on a table's
+    first write as on later ones, and commits nothing."""
+    vt = VersionedTable(str(tmp_path))
+    with pytest.raises(ValueError):
+        vt.write(spark, "t", spark.range(3), mode=mode)
+    assert vt.manifest("t") is None
+
+
+# ------------------------------------------------------------ kill points
+# A child process republishes three stages, geocoded → tile_base →
+# tile_pyramid as perfbench's tile_publish does, on inline input, and
+# SIGKILLs its process group (driver and JVM) at one point. The store it
+# starts from holds a complete publish of N_OLD points whose geocoded
+# commit was lost, so the child commits N_NEW points and every stage
+# after geocoded must notice its stale input. The test session then
+# reruns the publish, which must end as a clean run does.
+
+N_OLD, N_NEW = 2000, 3000
+STAGES = ("geocoded", "tile_base", "tile_pyramid")
+KILL_POINTS = ("between_commits", "part_write", "before_swap")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _publish(spark, store, n):
+    from gdal_spark.operators import tiling
+
+    g = store.run_stage(spark, "geocoded", lambda: spark.range(
+        n, numPartitions=4).select(
+            "id", (F.col("id") * 7919 % 36000 / 100 - 180).alias("lon"),
+            (F.col("id") * 104729 % 17000 / 100 - 85).alias("lat")))
+    b = store.run_stage(spark, "tile_base", lambda: tiling.tile_counts(g, 12),
+                        inputs=["geocoded"])
+    store.run_stage(spark, "tile_pyramid", lambda: tiling.pyramid(b, 0),
+                    partition_by="z", inputs=["tile_base"])
+
+
+def _outputs(spark, store):
+    return {s: sorted(map(tuple, spark.read.parquet(store.data_path(s))
+                          .collect())) for s in STAGES}
+
+
+def _orphans(store, stage):
+    """Directories under ``<base>/<stage>/`` the manifest does not name."""
+    keep = store.manifest(stage)["snapshot_id"]
+    return [os.path.join(store.base, stage, d)
+            for d in os.listdir(os.path.join(store.base, stage)) if d != keep]
+
+
+def _kill_on_part_file(path, pg):
+    """A pass-through ``mapInArrow`` function: every task but the first
+    waits until a part file exists under ``path``, then kills."""
+    def fn(batches):
+        from pyspark import TaskContext
+        if TaskContext.get().partitionId() > 0:
+            deadline = time.monotonic() + 60
+            while time.monotonic() < deadline and not any(
+                    f.startswith("part-") for _, _, fs in os.walk(path)
+                    for f in fs):
+                time.sleep(0.05)
+            os.killpg(pg, signal.SIGKILL)
+            os.killpg(0, signal.SIGKILL)  # the Python worker daemon's group
+        yield from batches
+    return fn
+
+
+def _child(base, point):
+    """Republish N_NEW points into ``base``; SIGKILL at ``point``."""
+    from gdal_spark.pipeline import checkpoint as ckpt
+    from gdal_spark.session import get_spark
+
+    pg = os.getpgid(0)
+    run_stage, commit, atomic_write = (
+        SnapshotStore.run_stage, ckpt._commit, ckpt.atomic_write)
+
+    def before_tile_base(self, spark, stage, *a, **k):
+        if stage == "tile_base":
+            os.killpg(pg, signal.SIGKILL)
+        return run_stage(self, spark, stage, *a, **k)
+
+    def slow_tile_base(df, path, partition_by=None):
+        if os.path.basename(os.path.dirname(path)) == "tile_base":
+            df = df.mapInArrow(_kill_on_part_file(path, pg), df.schema)
+        return commit(df, path, partition_by)
+
+    def before_pyramid_swap(path, chunks):
+        if path.endswith("tile_pyramid.json"):
+            os.killpg(pg, signal.SIGKILL)
+        return atomic_write(path, chunks)
+
+    if point == "between_commits":
+        SnapshotStore.run_stage = before_tile_base
+    elif point == "part_write":
+        ckpt._commit = slow_tile_base
+    else:
+        ckpt.atomic_write = before_pyramid_swap
+    _publish(get_spark(app="checkpoint-kill", master="local[2]"),
+             SnapshotStore(base), N_NEW)
+
+
+@pytest.fixture(scope="module")
+def killed(spark, tmp_path_factory):
+    """{kill point: (its store's base, the child's exit code, its log)}.
+    The three children run at once, each in its own process group."""
+    root = tmp_path_factory.mktemp("killed")
+    seed = SnapshotStore(str(root / "seed"))
+    _publish(spark, seed, N_OLD)
+    os.remove(seed._manifest_path("geocoded"))
+    env = {**os.environ, "PYTHONPATH": ROOT, "SPARK_DRIVER_MEM": "1g",
+           "SPARK_LOCAL_DIRS": str(root / "spark-local")}
+    procs = {}
+    try:
+        for point in KILL_POINTS:
+            base = str(root / point)
+            shutil.copytree(seed.base, base)
+            with open(f"{base}.log", "wb") as log:
+                procs[point] = subprocess.Popen(
+                    [sys.executable, __file__, base, point], env=env,
+                    stdout=log, stderr=subprocess.STDOUT,
+                    start_new_session=True)
+        codes = {p: proc.wait(timeout=300) for p, proc in procs.items()}
+    finally:
+        for proc in procs.values():
+            if proc.poll() is None:
+                os.killpg(proc.pid, signal.SIGKILL)
+                proc.wait()
+    return {p: (str(root / p), codes[p], (root / f"{p}.log").read_text())
+            for p in KILL_POINTS}
+
+
+@pytest.fixture(scope="module")
+def clean(spark, tmp_path_factory):
+    store = SnapshotStore(str(tmp_path_factory.mktemp("clean")))
+    _publish(spark, store, N_NEW)
+    return _outputs(spark, store)
+
+
+def _landed(store, point):
+    """The store shows the kill where ``point`` says it was."""
+    m = {s: store.manifest(s) for s in STAGES}
+    if point == "between_commits":  # geocoded new, tile_base on the old
+        return (m["geocoded"]["metrics"]["rows"] == N_NEW
+                and m["tile_base"]["inputs"][0]["snapshot_id"]
+                != m["geocoded"]["snapshot_id"])
+    stage = "tile_base" if point == "part_write" else "tile_pyramid"
+    done = [os.path.exists(os.path.join(d, "_SUCCESS"))
+            for d in _orphans(store, stage)]
+    return done == [point == "before_swap"]
+
+
+@pytest.mark.parametrize("point", KILL_POINTS)
+def test_rerun_after_kill_matches_clean_run(spark, killed, clean, point):
+    base, code, log = killed[point]
+    assert code == -signal.SIGKILL, log[-3000:]
+    store = SnapshotStore(base)
+    assert _landed(store, point)
+    _publish(spark, store, N_NEW)
+    assert _outputs(spark, store) == clean
+    for s in STAGES:
+        assert all(store.manifest(i["stage"])["snapshot_id"] == i["snapshot_id"]
+                   for i in store.manifest(s)["inputs"])
+        assert _orphans(store, s) == []
+
+
+if __name__ == "__main__":
+    _child(*sys.argv[1:])

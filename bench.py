@@ -115,7 +115,7 @@ def run_single() -> dict:
         # healthy ~12+ GB/s single-stream, co-tenant collapse <2 — see
         # tools/memprobe.py; Spark wall times scale with this)
         "host_gbps": [gbps_before, round(probe_gbps(), 2)],
-        "cover_zoom": sj.auto_cover_zoom(),
+        "cover_zoom": sj.zone_cell_cover()[0],
     }
     spark.stop()
     return result

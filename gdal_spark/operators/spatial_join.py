@@ -22,10 +22,13 @@ Scale design (100 TB story):
   DataFrame joined with an explicit ``broadcast()`` hint, so the join is
   a map-side BroadcastHashJoin; the only wide op is whatever aggregation
   the caller adds downstream.
-- The cover zoom adapts so each polygon covers ≤ ``COVER_CELLS``
-  cells. Stages 2 and 3 are one join condition, ``full OR <pip>``:
-  ``Or`` short-circuits in codegen, so interior-cell rows never
-  evaluate an edge, and the join is one pass with no Python hop.
+- One quadtree descent over all zones picks the cover zoom and builds
+  the cover: by default the finest zoom (z18 at most) whose cover
+  stays within ``COVER_CELLS`` cells in total, the cell budget of
+  *Raster Intervals* (SIGMOD 2023). Stages 2 and 3 are one join
+  condition, ``full OR <pip>``: ``Or`` short-circuits in codegen, so
+  interior-cell rows never evaluate an edge, and the join is one pass
+  with no Python hop.
 - The exact test sees only the edges that can change the answer in a
   cell (the interior/boundary split of *Raster Intervals*, SIGMOD
   2023): the driver keeps them, up to ``EDGE_SLOTS``, on each boundary
@@ -39,11 +42,13 @@ Scale design (100 TB story):
   edge meets it, even parity) or boundary. A ``full`` flag is therefore
   the same proof as the exact test's, not a separate float corner test.
 - For polygon sets too large to broadcast, the same cover table can be
-  shuffle-joined on (tx, ty) with salting — see tiling.salted_count for
+  shuffle-joined on (tx, ty) with salting — see tiling.salted_agg for
   the skew pattern; not needed for the fixture scale.
 """
 
 from __future__ import annotations
+
+import itertools
 
 import numpy as np
 import pandas as pd
@@ -55,10 +60,10 @@ from gdal_spark.geo import geom as G
 from gdal_spark.geo import mercator as M
 
 
-#: bbox-cell budget per zone for the cover zoom choice (z12 for the
-#: fixture zones). Output is identical at any budget; finer covers send
-#: fewer rows through the edge test, coarser ones build a smaller
-#: broadcast side.
+#: budget on a layer's cover cells, all zones together: the auto zoom
+#: is the finest whose cover stays within it (z12 for the fixture
+#: zones). Output is identical at any zoom; finer covers send fewer rows
+#: through the edge test, coarser ones build a smaller broadcast side.
 COVER_CELLS = 131072
 
 #: degrees. ``tile_cols`` can place a point a rounding step (~1e-13°)
@@ -74,50 +79,82 @@ EDGE_SLOTS = 3
 SPLIT_DEPTH = 10
 
 
-def auto_cover_zoom(zones=ZONES, max_cells_per_zone: int = COVER_CELLS) -> int:
-    """Highest zoom where every zone's bbox cover stays under the cap."""
-    best = 0
-    for z in range(1, 19):
-        ok = True
-        for zone in zones:
-            xmin, ymin, xmax, ymax = G.polygon_bbox(zone["rings"])
-            tx0, ty0 = M.latlon_to_tile_np(np.array([ymax]), np.array([xmin]), z)
-            tx1, ty1 = M.latlon_to_tile_np(np.array([ymin]), np.array([xmax]), z)
-            n = (int(tx1[0]) - int(tx0[0]) + 1) * (int(ty1[0]) - int(ty0[0]) + 1)
-            if n > max_cells_per_zone:
-                ok = False
-                break
-        if ok:
-            best = z
-        else:
-            break
-    return best
-
-
 def zone_cell_cover(zones=ZONES, zoom: int | None = None) -> tuple[int, pd.DataFrame]:
-    """Driver-side cover build (zones are the small broadcast side).
+    """Driver-side cover build (zones are the small broadcast side) by
+    one quadtree descent from z0 over all zones in lockstep.
+
+    At each level a zone keeps only the cells in its bbox tile range:
+    the tile map is monotone and nested, so every zone point's cell is
+    there. ``_part_edges`` classifies each kept cell: with no edges it
+    answers for all of it by ``parity``, odd a full leaf kept at its own
+    level, even dropped; every other cell is boundary and descends. A
+    zone whose bbox lies in one cell needs no test: that cell holds its
+    whole boundary, so every edge is local there and the parity even.
+
+    The descent stops at ``zoom``, or without one at the first level
+    (z18 at most) where 4 × (full leaves expanded to it + boundary
+    cells) exceeds ``COVER_CELLS``: a level has at most 4 times its
+    parent's cells, so the cover stays within the budget. There full
+    leaves expand once, and boundary cells go to ``_cell_edges`` with
+    the classification they have, so no cell is classified twice.
 
     Returns (zoom, frame of tx, ty, zone_fid, full, lon0, lon1, lat0,
     lat1, parity, edges). ``full`` mirrors the envelope-contains accept
     of ogrlayer.cpp:4040: no zone edge meets the cell and the cell lies
     in the zone's interior, so member points need no exact test. A
     boundary row (``full`` false) carries the exact test's inputs for
-    the part [lon0, lon1) × [lat0, lat1) of its cell (``_cell_edges``):
-    the folded ``parity`` and the local ``edges``. These are NaN / None
-    on full rows. One rule, ``_part_edges``, decides every cell and
-    part: full, dropped or boundary, and a boundary row's edges.
+    the part [lon0, lon1) × [lat0, lat1) of its cell: the folded
+    ``parity`` and the local ``edges``. These are NaN / None on full
+    rows.
     """
-    zoom = auto_cover_zoom(zones) if zoom is None else zoom
-    parts = []
-    for zone in zones:
-        parts += [part.assign(zone_fid=np.int32(zone["zone_fid"]))
-                  for part in _quad_cover(zone["rings"], zoom)]
-    pdf = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
-        {"tx": np.array([], np.int64), "ty": np.array([], np.int64),
-         "full": np.array([], bool), "zone_fid": np.array([], np.int32)})
-    return zoom, pdf.reindex(columns=["tx", "ty", "zone_fid", "full", "lon0",
-                                      "lon1", "lat0", "lat1", "parity",
-                                      "edges"])
+    segs = [[np.concatenate(a) for a in zip(*(G._ring_arrays(r)
+                                              for r in z["rings"]))]
+            for z in zones]
+    xmin, ymin, xmax, ymax = np.reshape(
+        [G.polygon_bbox(z["rings"]) for z in zones], (-1, 4)).T
+    fid = np.array([z["zone_fid"] for z in zones], np.int32)
+    n, last = len(zones), 18 if zoom is None else zoom
+    # cells (gx, gy) of zone k, at z0 every tile a point can map to (the
+    # tile map puts lon -180 in column -1 and lat -85.05 in row 1)
+    k = np.repeat(np.arange(n), 4)
+    gx, gy = np.tile([-1, -1, 0, 0], n), np.tile([0, 1, 0, 1], n)
+    fx = fy = fk = np.zeros(0, np.int64)  # full leaves, expanded to z
+    for z in range(last + 1):
+        tx0, ty0 = M.latlon_to_tile_np(ymax, xmin, z)
+        tx1, ty1 = M.latlon_to_tile_np(ymin, xmax, z)
+        ok = (gx >= tx0[k]) & (gx <= tx1[k]) & (gy >= ty0[k]) & (gy <= ty1[k])
+        gx, gy, k = gx[ok], gy[ok], k[ok]
+        lat_a, x0, lat_b, x9 = M.tile_bounds_latlon_np(gx, gy, z)
+        rect = [x0, x9, np.minimum(lat_a, lat_b), np.maximum(lat_a, lat_b)]
+        at = [slice(a, b) for a, b in itertools.pairwise(
+            np.searchsorted(k, np.arange(n + 1)))]
+        cls = [(np.zeros(1, bool), np.zeros(len(seg[0]), np.int64),
+                np.stack(seg, axis=1))
+               if tx0[i] == tx1[i] and ty0[i] == ty1[i]
+               else _part_edges(*seg, *(a[at[i]] for a in rect))
+               for i, seg in enumerate(segs)]
+        bnd = np.concatenate([np.zeros(0, bool)] + [
+            np.bincount(row, minlength=len(parity)) > 0
+            for parity, row, _ in cls])
+        leaf = ~bnd & np.concatenate([np.zeros(0, bool)] + [
+            parity for parity, _, _ in cls])
+        fx, fy, fk = (np.concatenate([a, c[leaf]])
+                      for a, c in ((fx, gx), (fy, gy), (fk, k)))
+        if z == last or (zoom is None
+                         and 4 * (len(fx) + bnd.sum()) > COVER_CELLS):
+            break
+        fx, fy, fk = *_expand_cells(fx, fy, 1), np.repeat(fk, 4)
+        gx, gy, k = *_expand_cells(gx[bnd], gy[bnd], 1), np.repeat(k[bnd], 4)
+    rows = [pd.DataFrame({"tx": fx, "ty": fy, "zone_fid": fid[fk],
+                          "full": True})]
+    for i, (parity, row, edges) in enumerate(cls):
+        b = bnd[at[i]]
+        rows.append(_cell_edges(
+            segs[i], gx[at[i]][b], gy[at[i]][b], [a[at[i]][b] for a in rect],
+            parity[b], (np.cumsum(b) - 1)[row], edges).assign(zone_fid=fid[i]))
+    return z, pd.concat(rows, ignore_index=True).reindex(
+        columns=["tx", "ty", "zone_fid", "full", "lon0", "lon1", "lat0",
+                 "lat1", "parity", "edges"])
 
 
 #: longitude of the stand-in edges ``_part_edges`` makes for the ends
@@ -263,58 +300,9 @@ def _expand_cells(tx, ty, d: int):
     """All zoom+d descendants of cells (tx, ty): (n·4^d,) arrays."""
     k = 1 << d
     off = np.arange(k, dtype=np.int64)
-    ox, oy = np.meshgrid(off, off, indexing="ij")
-    ox, oy = ox.ravel(), oy.ravel()
-    ex = (tx[:, None] * k + ox[None, :]).ravel()
-    ey = (ty[:, None] * k + oy[None, :]).ravel()
-    return ex, ey
-
-
-#: seed-grid budget for the quadtree cover build: the descent starts
-#: at the coarsest zoom where the zone bbox is under this many cells,
-#: then subdivides only boundary cells — build work is O(perimeter /
-#: cell_size), not O(area / cell_size²), so a fine final zoom (few
-#: rows through the edge test) stays cheap to construct driver-side.
-COVER_SEED_CELLS = 1024
-
-
-def _quad_cover(rings, zoom: int):
-    """Cover of one polygon at ``zoom`` by quadtree descent → (full
-    cells, boundary rows) frames.
-
-    Each level's cells go through ``_part_edges``. A cell left with no
-    edges has no local edge, so the zone's boundary misses it and its
-    ``parity`` answers for all of it: odd, the cell is full and expands
-    to its ``zoom`` descendants; even, it is dropped. Every other cell
-    is boundary and descends. At ``zoom`` the boundary cells go on to
-    ``_cell_edges`` with that classification, so no cell is classified
-    twice.
-    """
-    seg = [np.concatenate(a) for a in zip(*(G._ring_arrays(r) for r in rings))]
-    xmin, ymin, xmax, ymax = G.polygon_bbox(rings)
-    z = max(1, min(zoom, auto_cover_zoom([{"rings": rings}], COVER_SEED_CELLS)))
-    tx0, ty0 = M.latlon_to_tile_np(np.array([ymax]), np.array([xmin]), z)
-    tx1, ty1 = M.latlon_to_tile_np(np.array([ymin]), np.array([xmax]), z)
-    gx, gy = (a.ravel() for a in np.meshgrid(
-        np.arange(int(tx0[0]), int(tx1[0]) + 1, dtype=np.int64),
-        np.arange(int(ty0[0]), int(ty1[0]) + 1, dtype=np.int64),
-        indexing="ij"))
-    full = []
-    while True:
-        lat_a, x0, lat_b, x9 = M.tile_bounds_latlon_np(gx, gy, z)
-        rect = [x0, x9, np.minimum(lat_a, lat_b), np.maximum(lat_a, lat_b)]
-        parity, row, edges = _part_edges(*seg, *rect)
-        bnd = np.bincount(row, minlength=len(gx)) > 0
-        full.append(_expand_cells(gx[~bnd & parity], gy[~bnd & parity],
-                                  zoom - z))
-        if z == zoom:
-            break
-        gx, gy = _expand_cells(gx[bnd], gy[bnd], 1)
-        z += 1
-    fx, fy = (np.concatenate(a) for a in zip(*full))
-    return (pd.DataFrame({"tx": fx, "ty": fy, "full": True}),
-            _cell_edges(seg, gx[bnd], gy[bnd], [a[bnd] for a in rect],
-                        parity[bnd], (np.cumsum(bnd) - 1)[row], edges))
+    ex, ey = np.broadcast_arrays(tx[:, None, None] * k + off[:, None],
+                                 ty[:, None, None] * k + off)
+    return ex.ravel(), ey.ravel()
 
 
 def zones_attr_df(spark: SparkSession) -> DataFrame:
@@ -357,7 +345,8 @@ def build_cover_df(spark: SparkSession, cover, zoom: int) -> DataFrame:
 
     A boundary row carries one ``_e array<double>``: parity, lon0,
     lon1, lat0, lat1, then ``_slot_count(cover)`` groups of ``_SLOT``
-    values holding its local edges, unused ones ``_NO_EDGE``. On full
+    values holding its local edges, unused ones ``_NO_EDGE``; ``_e``'s
+    column metadata records that slot count for ``pip_sql``. On full
     rows ``_e`` is empty, so they stay narrow; it is never null and
     holds no nulls, so the predicate's generated code has no null
     branches."""
@@ -385,7 +374,8 @@ def build_cover_df(spark: SparkSession, cover, zoom: int) -> DataFrame:
         "full": pa.array(full), "_e": edges},
         schema=pa.schema([("cell", pa.int64()), ("zone_fid", pa.int32()),
                           ("full", pa.bool_()),
-                          pa.field("_e", edges.type, nullable=False)])))
+                          pa.field("_e", edges.type, nullable=False)]))
+    ).withMetadata("_e", {"slots": slots})
 
 
 def _slot_sql(k: int, lat: str, lon: str, on: int) -> str:
@@ -454,7 +444,8 @@ def pip_join(points: DataFrame, spark: SparkSession, zones=ZONES,
            .withColumn("_lat", F.coalesce(F.col(lat_col), F.lit(0.0)))
            .withColumn("_lon", F.coalesce(F.col(lon_col), F.lit(0.0))))
 
-    exact = F.expr(pip_sql(_slot_count(cover), "_lat", "_lon"))
+    exact = F.expr(pip_sql(cover_df.schema["_e"].metadata["slots"],
+                           "_lat", "_lon"))
     refined = (pts.join(F.broadcast(cover_df), F.col("_cell") == F.col("cell"))
                .filter(F.col("full") | exact)
                .drop("_cell", "_lat", "_lon", "cell", "full", "_e"))

@@ -17,10 +17,12 @@ Parquet, with one commit protocol for ``run_stage`` stages and
    before its swap.
 
 A manifest records the snapshot id, the name, the input snapshot ids
-(the lineage chain), the commit's wall time, total rows and per-partition
-row counts (per-partition lineage/metrics), and ``versions``: each kept
-snapshot's ``version``, ``snapshot_id`` and ``schema``. A stage keeps
-only its current snapshot; a table keeps every version (time travel).
+(the lineage chain), the files the committed frame read (``sources``:
+each of its ``inputFiles()`` with its size and ``st_mtime_ns``), the
+commit's wall time, total rows and per-partition row counts
+(per-partition lineage/metrics), and ``versions``: each kept snapshot's
+``version``, ``snapshot_id`` and ``schema``. A stage keeps only its
+current snapshot; a table keeps every version (time travel).
 
 A commit runs no Spark job but the write (``_commit``). The row counts
 are the rows actually persisted: the driver sums the ``num_rows`` of
@@ -33,10 +35,12 @@ partition column keeps its type: a string ``"007"`` stays ``"007"``.
 
 Lineage rule: ``run_stage`` resumes a stage whose manifest says
 ``complete`` only while every input it records still has the snapshot
-id it recorded — the job resumes from the last good snapshot, the
-Iceberg-snapshot resume semantics of SURVEY.md §2.15. Otherwise the
-stage recomputes; its new id then fails the check of every stage that
-read it, so the recompute cascades downstream.
+id it recorded, and every source file still has its recorded size and
+mtime — the job resumes from the last good snapshot, the
+Iceberg-snapshot resume semantics of SURVEY.md §2.15. The file check is
+what a root stage (one with no inputs) has: rewriting a table it read
+recomputes it. Otherwise the stage recomputes; its new id then fails the
+check of every stage that read it, so the recompute cascades downstream.
 
 The reference's closest analogs: chunk-restartable utilities and the
 geocoding cache layer (ogr/ogr_geocoding.cpp:118); GDAL itself has no
@@ -50,7 +54,7 @@ import os
 import shutil
 import time
 import uuid
-from urllib.parse import unquote
+from urllib.parse import unquote, urlparse
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -88,6 +92,22 @@ def _commit(df: DataFrame, path: str, partition_by: str | None = None):
     return out, sum(per_part.values()), per_part if partition_by else {}
 
 
+def _stat(uri: str) -> dict:
+    """A source file's record: its ``inputFiles()`` URI, size and mtime."""
+    st = os.stat(unquote(urlparse(uri).path))
+    return {"path": uri, "size": st.st_size, "mtime_ns": st.st_mtime_ns}
+
+
+def _unchanged(sources: list[dict] | None) -> bool:
+    """Every recorded source file still has its size and mtime. A
+    manifest without ``sources`` predates the record, so it fails."""
+    try:
+        return sources is not None and all(_stat(f["path"]) == f
+                                           for f in sources)
+    except FileNotFoundError:
+        return False
+
+
 class SnapshotStore:
     def __init__(self, base_dir: str):
         self.base = base_dir
@@ -123,6 +143,7 @@ class SnapshotStore:
         Each input's snapshot id is read after the write, before the swap."""
         sid = uuid.uuid4().hex
         t0 = time.monotonic()
+        sources = [_stat(uri) for uri in df.inputFiles()]  # no Spark job
         out, total, per_part = _commit(df, os.path.join(self.base, name, sid),
                                        partition_by)
         versions = [*kept, {"version": len(kept) + 1, "snapshot_id": sid,
@@ -135,6 +156,7 @@ class SnapshotStore:
             "created_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "inputs": [{"stage": s, "snapshot_id": self._snapshot_id(s)}
                        for s in inputs],
+            "sources": sources,
             "metrics": {
                 "wall_sec": round(time.monotonic() - t0, 3),
                 "rows": total,
@@ -157,18 +179,18 @@ class SnapshotStore:
                   inputs: list[str] | None = None) -> DataFrame:
         """Compute-or-resume one stage. ``fn() -> DataFrame``.
 
-        A stage resumes when its manifest says ``complete`` and each
-        input it records still has the recorded snapshot id; it then
-        reads the committed snapshot with the manifest's schema and runs
-        no Spark job. Otherwise ``fn()`` is committed, which runs only
-        the write's job: the manifest's ``rows`` and
-        ``rows_per_partition`` are the persisted counts from the written
-        parquet footers, read on the driver (O(files) small reads, no
-        pass over the rows)."""
+        A stage resumes when its manifest says ``complete``, each input
+        it records still has the recorded snapshot id and each source
+        file its recorded size and mtime; it then reads the committed
+        snapshot with the manifest's schema and runs no Spark job.
+        Otherwise ``fn()`` is committed, which runs only the write's
+        job: the manifest's ``rows`` and ``rows_per_partition`` are the
+        persisted counts from the written parquet footers, read on the
+        driver (O(files) small reads, no pass over the rows)."""
         m = self.manifest(stage)
         if m and m.get("status") == "complete" and all(
                 self._snapshot_id(i["stage"]) == i["snapshot_id"]
-                for i in m["inputs"]):
+                for i in m["inputs"]) and _unchanged(m.get("sources")):
             return self._read(spark, stage, m["versions"][-1])
         return self._publish(spark, stage, fn(), partition_by, inputs or ())[0]
 

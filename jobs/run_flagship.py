@@ -11,7 +11,10 @@ Submit (the north-rule deployment shape):
 On a real cluster drop `--master local[...]` in favor of the cluster
 manager; every stage commits a resumable snapshot with per-partition
 lineage + metrics (gdal_spark/pipeline/checkpoint.py), so re-submitting
-after a failure resumes from the last complete stage.
+after a failure resumes from the last complete stage. Each input
+directory and zoom range gets its own store under `--snapshots`: a
+resume checks that the files a stage read are unchanged, not that the
+job now reads the same files.
 """
 
 from __future__ import annotations
@@ -44,7 +47,9 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("gdal_spark_flagship").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    store = SnapshotStore(args.snapshots)
+    source = os.path.abspath(args.sf_dir).strip("/").replace("/", "_")
+    store = SnapshotStore(os.path.join(
+        args.snapshots, f"{source}_z{args.zoom}-{args.min_zoom}"))
     t0 = time.monotonic()
 
     geocoded = store.run_stage(

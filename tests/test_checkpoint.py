@@ -173,6 +173,31 @@ def test_resume_checks_input_lineage(spark, tmp_path):
     assert os.listdir(tmp_path / "b") == [store.manifest("b")["snapshot_id"]]
 
 
+def test_root_stage_recomputes_when_its_file_changes(spark, tmp_path):
+    """A root stage records the files it read: once its parquet file is
+    rewritten with 8 rows instead of 5, it recomputes, and so does the
+    stage that reads it. While the file is unchanged both resume and run
+    no Spark job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "src.parquet")
+    store = SnapshotStore(str(tmp_path / "s"))
+
+    def publish():
+        a = store.run_stage(spark, "a", lambda: spark.read.parquet(src))
+        return store.run_stage(spark, "b", lambda: a, inputs=["a"])
+
+    pq.write_table(pa.table({"k": list(range(5))}), src)
+    assert publish().count() == 5
+    assert store.manifest("a")["sources"][0]["size"] == os.path.getsize(src)
+    out, n = _jobs(spark, publish)
+    assert n == 0 and out.count() == 5
+    pq.write_table(pa.table({"k": list(range(8))}), src)
+    assert publish().count() == 8
+    assert store.run_stage(spark, "a", lambda: None).count() == 8
+
+
 @pytest.mark.parametrize("mode", ["bogus", "upsert"])
 def test_versioned_write_checks_its_arguments(spark, tmp_path, mode):
     """A bad ``mode``, or an upsert without ``key``, fails on a table's

@@ -245,7 +245,7 @@ def test_join_numpy_and_duckdb_agree(spark, seed):
     want = numpy_pairs(zones, px, py)
     oracle = duckdb_pairs(zones, px, py)
     assert oracle == want, _diff(oracle, want)
-    for zoom in (Z, Z + 2):
+    for zoom in (Z, Z + 2, None):
         got = join_pairs(spark, zones, px, py, zoom)
         assert got == want, (zoom, _diff(got, want))
 
@@ -263,6 +263,32 @@ def test_full_cells_hold_only_inside_points(seed):
         sel = np.isin(cell, f["tx"].to_numpy() * (1 << Z) + f["ty"].to_numpy())
         rings = [np.asarray(r, dtype=np.float64) for r in z["rings"]]
         assert G.point_in_polygon(px[sel], py[sel], rings).all(), z["zone_fid"]
+
+
+@pytest.mark.parametrize("layer", [*SEEDS, "10x", "fixture"])
+def test_auto_cover_stays_within_budget(layer):
+    """The auto zoom is the first level where four times the cover's
+    cells exceed ``COVER_CELLS`` (z18 at most), so the cover holds at
+    most ``COVER_CELLS`` cells. The fixture zones get z12, and their
+    auto cover is their z12 cover."""
+    if layer == "10x":  # ten shifted copies, as in the plan-shape test
+        zones = [dict(z, zone_fid=10 * i + z["zone_fid"],
+                      rings=[[(x + 1.5 * i, y) for x, y in r]
+                             for r in z["rings"]])
+                 for i in range(10) for z in ZONES]
+    else:
+        zones = ZONES if layer == "fixture" else make_layer(layer)
+    zoom, cover = sj.zone_cell_cover(zones)
+    cells = len(cover.drop_duplicates(["tx", "ty", "zone_fid"]))
+    assert cells <= sj.COVER_CELLS, (zoom, cells)
+    assert zoom == 18 or 4 * cells > sj.COVER_CELLS, (zoom, cells)
+    if layer == "fixture":
+        z12 = sj.zone_cell_cover(zones, 12)[1]
+        assert zoom == 12
+        pd.testing.assert_frame_equal(cover.drop(columns="edges"),
+                                      z12.drop(columns="edges"))
+        assert all(map(np.array_equal, cover["edges"].dropna(),
+                       z12["edges"].dropna()))
 
 
 def test_layer_exercises_splits_and_wide_rows():

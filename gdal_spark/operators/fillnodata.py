@@ -201,7 +201,9 @@ def smooth3x3(t: DataFrame, iterations: int,
     the 3x3 window pixels that are valid-or-interpolated (tmask),
     including itself; original valid pixels never change. One
     scatter-pivot shuffle per iteration (9-slot explode — the
-    neighbors9 idiom), summed in the reference's fixed scan order
+    neighbors9 idiom — plus a self slot that carries each pixel's own
+    row, so the plan reads the previous pass once and grows linearly
+    with ``iterations``), summed in the reference's fixed scan order
     (prev row x-1,x,x+1 / current / next) for cross-engine
     bit-reproducibility.
 
@@ -218,20 +220,37 @@ def smooth3x3(t: DataFrame, iterations: int,
     Returns the same shape with val smoothed."""
     # slot numbered from the RECEIVING pixel's view (source at relative
     # (-dy, -dx)): slot 0..8 = prev row x-1,x,x+1 / current / next —
-    # the reference's scan order, so the pivoted sum replays it
-    slots = F.array(*[
-        F.struct(F.lit(dy).alias("dy"), F.lit(dx).alias("dx"),
-                 F.lit((1 - dy) * 3 + (1 - dx)).alias("slot"))
-        for dy in (-1, 0, 1) for dx in (-1, 0, 1)])
+    # the reference's scan order, so the pivoted sum replays it. Slot
+    # SELF carries the pixel's own row through the same shuffle, so a
+    # pass reads its input once (no join back onto ``t``).
+    def slot(dy, dx, k):
+        return F.struct(F.lit(dy).alias("dy"), F.lit(dx).alias("dx"),
+                        F.lit(k).alias("slot"))
+
+    SELF = 9
+    own = [slot(0, 0, SELF)]
+    window = own + [slot(dy, dx, (1 - dy) * 3 + (1 - dx))
+                    for dy in (-1, 0, 1) for dx in (-1, 0, 1)]
+    emits = F.when(F.col("tmask"), F.array(*window)).otherwise(F.array(*own))
+
+    def mine(c):
+        return F.max(F.when(F.col("slot") == SELF, F.col(c)))
+
+    apply = F.col("fmask")
+    if height is not None:
+        apply = apply & (F.col("py") >= 1) & (F.col("py") <= height - 2)
     for _ in range(iterations):
-        nb = (t.filter(F.col("tmask"))
-              .select("py", "px", "val", F.explode(slots).alias("s"))
+        nb = (t.select("py", "px", "val", "tmask", "fmask",
+                       F.explode(emits).alias("s"))
               .select((F.col("py") + F.col("s.dy")).alias("py"),
                       (F.col("px") + F.col("s.dx")).alias("px"),
-                      F.col("s.slot").alias("slot"), "val"))
+                      F.col("s.slot").alias("slot"), "val", "tmask", "fmask"))
         piv = nb.groupBy("py", "px").agg(
             *[F.max(F.when(F.col("slot") == k, F.col("val"))).alias(f"n{k}")
-              for k in range(9)])
+              for k in range(9)],
+            mine("val").alias("val"), mine("tmask").alias("tmask"),
+            mine("fmask").alias("fmask"),
+            F.max(F.col("slot") == SELF).alias("_self"))
         num = None
         cnt = None
         for k in range(9):
@@ -239,10 +258,7 @@ def smooth3x3(t: DataFrame, iterations: int,
             hit = F.when(F.col(f"n{k}").isNotNull(), 1).otherwise(0)
             num = term if num is None else num + term
             cnt = hit if cnt is None else cnt + hit
-        apply = F.col("fmask")
-        if height is not None:
-            apply = apply & (F.col("py") >= 1) & (F.col("py") <= height - 2)
-        t = (t.join(piv, ["py", "px"], "left")
+        t = (piv.filter("_self")
              .select("py", "px",
                      F.when(apply, num / cnt)
                      .otherwise(F.col("val")).alias("val"),

@@ -19,9 +19,12 @@ Parquet, with one commit protocol for ``run_stage`` stages and
 A manifest records the snapshot id, the name, the input snapshot ids
 (the lineage chain), the files the committed frame read (``sources``:
 each of its ``inputFiles()`` with its size and ``st_mtime_ns``), the
-commit's wall time, total rows and per-partition row counts
-(per-partition lineage/metrics), and ``versions``: each kept snapshot's
-``version``, ``snapshot_id`` and ``schema``. A stage keeps only its
+commit's wall time, total rows, per-partition row counts
+(per-partition lineage/metrics), ``files_per_partition`` (the ``part-*``
+files the write left under each partition key, ``{"": n}`` for a flat
+stage: how many tasks wrote it, which AQE sizes by the shuffle's
+bytes), and ``versions``: each kept snapshot's ``version``,
+``snapshot_id`` and ``schema``. A stage keeps only its
 current snapshot; a table keeps every version (time travel).
 
 A commit runs no Spark job but the write (``_commit``). The row counts
@@ -66,30 +69,33 @@ from gdal_spark.sources.commit import atomic_write
 def _commit(df: DataFrame, path: str, partition_by: str | None = None):
     """Write ``df`` to the new directory ``path`` as parquet, and run no
     Spark job beyond the write's → (the written dataset, its rows, its
-    rows per partition).
+    rows per partition, its ``part-*`` files per partition).
 
     The counts come from the footers of the written ``part-*`` files,
     per partition keyed by the unescaped value of their ``col=value``
-    directory. The dataset is read back with ``df``'s schema, the
-    partition column moved last as a partitioned read orders it."""
+    directory (a flat write has the one key ``""``). The dataset is
+    read back with ``df``'s schema, the partition column moved last as
+    a partitioned read orders it."""
     writer = df.write
     if partition_by:
         writer = writer.partitionBy(partition_by)
     writer.parquet(path)
-    per_part = {}
-    for d, dirs, files in os.walk(path):
+    per_part, files = {}, {}
+    for d, dirs, names in os.walk(path):
         dirs.sort()
-        parts = [f for f in files if f.startswith("part-")]
+        parts = [f for f in names if f.startswith("part-")]
         if parts:
             key = unquote(os.path.basename(d).partition("=")[2])
             if key == "__HIVE_DEFAULT_PARTITION__":
                 key = "None"  # str() of the null it reads back as
             per_part[key] = sum(pq.read_metadata(os.path.join(d, f)).num_rows
                                 for f in parts)
+            files[key] = len(parts)
     schema = StructType(sorted(df.schema.fields,
                                key=lambda f: f.name == partition_by))
     out = df.sparkSession.read.schema(schema).parquet(path)
-    return out, sum(per_part.values()), per_part if partition_by else {}
+    return (out, sum(per_part.values()), per_part if partition_by else {},
+            files)
 
 
 def _stat(uri: str) -> dict:
@@ -144,8 +150,8 @@ class SnapshotStore:
         sid = uuid.uuid4().hex
         t0 = time.monotonic()
         sources = [_stat(uri) for uri in df.inputFiles()]  # no Spark job
-        out, total, per_part = _commit(df, os.path.join(self.base, name, sid),
-                                       partition_by)
+        out, total, per_part, files = _commit(
+            df, os.path.join(self.base, name, sid), partition_by)
         versions = [*kept, {"version": len(kept) + 1, "snapshot_id": sid,
                             "schema": out.schema.jsonValue()}]
         manifest = {
@@ -162,7 +168,7 @@ class SnapshotStore:
                 "rows": total,
                 "partition_by": partition_by,
                 "rows_per_partition": per_part,
-                "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+                "files_per_partition": files,
             },
             "versions": versions,
             **extra,

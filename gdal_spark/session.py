@@ -2,8 +2,15 @@
 
 Local-mode defaults mirror what we would submit cluster-side via
 ``spark-submit --py-files``: AQE on (runtime skew-join splitting is part
-of the north-rule skew story), shuffle partitions sized to cores, Arrow
-enabled for every pandas-UDF hop.
+of the north-rule skew story), shuffle partitions sized to cores, then
+coalesced by AQE to at least 1 MB per task, Arrow enabled for every
+pandas-UDF hop.
+
+Coalescing is Spark's default: a post-shuffle stage runs as many tasks
+as its bytes need, so a small aggregate writes one part file instead of
+one per core. With ``parallelismFirst`` (also the default) a shuffle
+larger than cores × 1 MB keeps its full width, so a large aggregate is
+not starved of cores (BENCH.md, "AQE coalesce starvation").
 """
 
 from __future__ import annotations
@@ -28,12 +35,6 @@ def get_spark(app: str = "gdal_spark", master: str | None = None,
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
-        # Partition coalescing sizes post-shuffle stages by BYTES; our
-        # aggregation stages are CPU-bound with tiny rows (tile ids),
-        # and coalescing a 500k-group aggregation to 3 partitions left
-        # 29/32 cores idle (measured 2× slowdown on the z12 pyramid).
-        # Skew-join splitting stays on — that one works by row counts.
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # local sf files are a few MB: without a floor on scan splits a

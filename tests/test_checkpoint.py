@@ -124,6 +124,42 @@ def test_commit_is_one_job_and_resume_none(spark, tmp_path):
         assert n == 0 and out.count() == rows
 
 
+def test_small_pyramid_writes_one_file_per_zoom(spark, tmp_path):
+    """A post-shuffle stage is sized by its bytes: the z12→z0 pyramid
+    of a few thousand points is one small shuffle, so one task writes
+    it and each z gets one part file, not one per shuffle partition."""
+    from gdal_spark.operators import tiling
+
+    pts = spark.range(3000).select((F.rand(3) * 170 - 85).alias("lat"),
+                                   (F.rand(4) * 360 - 180).alias("lon"))
+    store = SnapshotStore(str(tmp_path))
+    store.run_stage(spark, "pyr",
+                    lambda: tiling.pyramid(tiling.tile_counts(pts, 12), 0),
+                    partition_by="z")
+    files = store.manifest("pyr")["metrics"]["files_per_partition"]
+    assert files == {str(z): 1 for z in range(13)}
+
+
+def test_large_shuffle_keeps_full_width(spark, tmp_path):
+    """A shuffle above ``defaultParallelism`` × 1 MB is not coalesced
+    below one task per core, so a big aggregate is not starved.
+
+    The keys are 32-byte SHA-256 digests, which lz4 cannot shrink, one
+    group each: 60,000 rows per core shuffle 36.75 B a row, about
+    2.2 MB per core (17,641,584 B measured at local[8]). The flat
+    stage's ``files_per_partition`` is ``{"": files}``."""
+    n = spark.sparkContext.defaultParallelism
+    df = (spark.range(n * 60_000)
+          .select(F.unhex(F.sha2(F.col("id").cast("string"), 256)).alias("k"))
+          .groupBy("k").count())
+    store = SnapshotStore(str(tmp_path))
+    store.run_stage(spark, "agg", lambda: df)
+    metrics = store.manifest("agg")["metrics"]
+    assert metrics["rows"] == n * 60_000
+    assert list(metrics["files_per_partition"]) == [""]
+    assert metrics["files_per_partition"][""] >= n
+
+
 @pytest.mark.parametrize("col", ["i", "s"])
 def test_manifest_counts_match_input(spark, tmp_path, col):
     """``rows`` and ``rows_per_partition`` equal the input's own counts,
@@ -249,19 +285,19 @@ def _orphans(store, stage):
 
 
 def _kill_on_part_file(path, pg):
-    """A pass-through ``mapInArrow`` function: every task but the first
-    waits until a part file exists under ``path``, then kills."""
+    """A pass-through ``mapInArrow`` function: a task passes its rows
+    on, then, before its input ends, waits until a part file exists
+    under ``path`` and kills. A small write is coalesced to one task,
+    so that task is the one that kills."""
     def fn(batches):
-        from pyspark import TaskContext
-        if TaskContext.get().partitionId() > 0:
-            deadline = time.monotonic() + 60
-            while time.monotonic() < deadline and not any(
-                    f.startswith("part-") for _, _, fs in os.walk(path)
-                    for f in fs):
-                time.sleep(0.05)
-            os.killpg(pg, signal.SIGKILL)
-            os.killpg(0, signal.SIGKILL)  # the Python worker daemon's group
         yield from batches
+        deadline = time.monotonic() + 60
+        while time.monotonic() < deadline and not any(
+                f.startswith("part-") for _, _, fs in os.walk(path)
+                for f in fs):
+            time.sleep(0.05)
+        os.killpg(pg, signal.SIGKILL)
+        os.killpg(0, signal.SIGKILL)  # the Python worker daemon's group
     return fn
 
 

@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gdal_spark.session import full_width
+
 
 def tile_local_labels(mask: DataFrame, width: int, tile: int = 32,
                       value_col: str | None = None,
@@ -113,7 +115,7 @@ def tile_local_labels(mask: DataFrame, width: int, tile: int = 32,
         f", {value_col} long" if value_col else "")
     tiled = mask.withColumn("_ty", (F.col("py") / tile).cast("long")) \
                 .withColumn("_tx", (F.col("px") / tile).cast("long"))
-    return (tiled.repartition("_ty", "_tx")
+    return (full_width(tiled, "_ty", "_tx")
             .mapInPandas(_label, schema))
 
 

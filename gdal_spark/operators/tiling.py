@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gdal_spark.geo import mercator as M
+from gdal_spark.session import full_width
 
 
 def assign_tiles(points: DataFrame, z: int, lat_col: str = "lat",
@@ -40,8 +41,17 @@ def assign_tiles(points: DataFrame, z: int, lat_col: str = "lat",
 
 def tile_counts(points: DataFrame, z: int, lat_col: str = "lat",
                 lon_col: str = "lon") -> DataFrame:
-    return (assign_tiles(points, z, lat_col, lon_col)
-            .groupBy("z", "tx", "ty").agg(F.count("*").alias("n_pages")))
+    """Pages per tile at zoom ``z``, at full width (``full_width``).
+
+    The counts are a few MB even at millions of pages, so a stage sized
+    by their bytes would run the pyramid's explode, which multiplies
+    each row by its level count, on a few cores. They are hashed by
+    16×16 tile block, so a task holds whole subtrees four levels deep
+    and its partial sums over them are as few as one task's."""
+    counts = (assign_tiles(points, z, lat_col, lon_col)
+              .groupBy("z", "tx", "ty").agg(F.count("*").alias("n_pages")))
+    return full_width(counts, F.expr("shiftright(tx, 4)"),
+                      F.expr("shiftright(ty, 4)"))
 
 
 def pyramid(base_counts: DataFrame, min_zoom: int = 0) -> DataFrame:
@@ -88,7 +98,8 @@ def tile_pngs(tiles: DataFrame, tile_size: int = 32,
                              "n_px": [len(pdf)],
                              "png": [encode_png(img)]})
 
-    return (tiles.groupBy("level", "ty", "tx")
+    return (full_width(tiles, "level", "ty", "tx")
+            .groupBy("level", "ty", "tx")
             .applyInPandas(_enc, "level int, ty long, tx long, "
                                  "n_px long, png binary"))
 

@@ -8,16 +8,21 @@ pandas-UDF hop.
 
 Coalescing is Spark's default: a post-shuffle stage runs as many tasks
 as its bytes need, so a small aggregate writes one part file instead of
-one per core. With ``parallelismFirst`` (also the default) a shuffle
-larger than cores × 1 MB keeps its full width, so a large aggregate is
-not starved of cores (BENCH.md, "AQE coalesce starvation").
+one per core. The target is total shuffle bytes / cores, but never below
+1 MB (``parallelismFirst`` and ``minPartitionSize``, both defaults): a
+shuffle over cores × 1 MB keeps its full width, and one under it is
+coalesced to about one task per MB, whatever the stage costs per row.
+A stage whose work is per row rather than per byte (a Python kernel,
+an explode) asks for its width with :func:`full_width`, since a
+repartition to a given number is never coalesced (BENCH.md, "AQE
+coalesce starvation").
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app: str = "gdal_spark", master: str | None = None,
@@ -63,3 +68,14 @@ def get_spark(app: str = "gdal_spark", master: str | None = None,
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def full_width(df: DataFrame, *cols) -> DataFrame:
+    """``df`` in ``spark.sql.shuffle.partitions`` partitions, hashed on
+    ``cols`` (round-robin without them). AQE coalesces a shuffle by its
+    bytes, which starves a stage whose cost is per row of a few MB of
+    input; a repartition to a number is left at that width. A hash on
+    the very keys ``df`` is already partitioned by is dropped by the
+    planner, and ``df`` keeps its own width."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *cols)

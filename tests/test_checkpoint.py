@@ -160,6 +160,38 @@ def test_large_shuffle_keeps_full_width(spark, tmp_path):
     assert metrics["files_per_partition"][""] >= n
 
 
+def test_mid_shuffle_is_narrowed_unless_full_width(spark, tmp_path):
+    """A shuffle between 1 MB and ``defaultParallelism`` × 1 MB is
+    coalesced to about one task per MB, whatever its CPU cost per row;
+    ``full_width`` keeps such a stage at one task per core.
+
+    15,000 SHA-256 keys per core shuffle about 0.55 MB per core
+    (4,415,425 B measured at local[8], 2,205,324 B at local[4]), so
+    AQE's target is its 1 MB floor and the aggregate is written by
+    about half as many tasks as there are cores."""
+    from gdal_spark.session import full_width
+
+    n = spark.sparkContext.defaultParallelism
+    if n < 4:
+        pytest.skip("needs at least 4 cores for a 1 MB to cores × 1 MB shuffle")
+    agg = (spark.range(n * 15_000)
+           .select(F.unhex(F.sha2(F.col("id").cast("string"), 256)).alias("k"))
+           .groupBy("k").count())
+    store = SnapshotStore(str(tmp_path))
+    store.run_stage(spark, "agg", lambda: agg)
+    files = store.manifest("agg")["metrics"]["files_per_partition"][""]
+    assert 2 <= files < n
+
+    def width(df):
+        return df.select(F.spark_partition_id()).distinct().count()
+
+    assert width(agg) == files
+    assert width(full_width(agg)) == n
+    # a hash on the keys the input is already partitioned by is dropped
+    # by the planner, so the aggregate's own coalesced width stays
+    assert width(full_width(agg, "k")) == files
+
+
 @pytest.mark.parametrize("col", ["i", "s"])
 def test_manifest_counts_match_input(spark, tmp_path, col):
     """``rows`` and ``rows_per_partition`` equal the input's own counts,

@@ -128,12 +128,12 @@ def test_smooth_plan_grows_linearly_with_passes(spark):
     """Each smoothing pass reads the previous one once: the logical
     plan's leaf count of ``smooth3x3(t, k)`` grows at most linearly in
     k (a pass that joined ``t`` back onto an aggregate of ``t`` doubled
-    it: 256 leaves at 8 passes)."""
+    it: 16 leaves at 4 passes, over the bound of 4 × 2)."""
     from gdal_spark.operators.fillnodata import smooth3x3
 
     t = spark.createDataFrame(
         [(0, 0, 1.0, True, False), (0, 1, 2.0, True, True)],
         "py long, px long, val double, tmask boolean, fmask boolean")
     leaves = {k: smooth3x3(t, k)._jdf.queryExecution().logical()
-              .collectLeaves().size() for k in range(1, 9)}
+              .collectLeaves().size() for k in (1, 4)}
     assert all(leaves[k] <= k * leaves[1] for k in leaves), leaves

@@ -41,14 +41,17 @@ Scale design (100 TB story):
   quadtree descent is full (no edge meets it, odd parity), outside (no
   edge meets it, even parity) or boundary. A ``full`` flag is therefore
   the same proof as the exact test's, not a separate float corner test.
+  It runs once per level of the descent and once per split depth, for
+  all zones together: each cell or part is tested against the edges its
+  parent kept, from its parent's parity, which gives the answer the
+  zone's whole edge list would. A level costs Σ children × their
+  parent's kept edges, not cells × zone edges.
 - For polygon sets too large to broadcast, the same cover table can be
   shuffle-joined on (tx, ty) with salting — see tiling.salted_agg for
   the skew pattern; not needed for the fixture scale.
 """
 
 from __future__ import annotations
-
-import itertools
 
 import numpy as np
 import pandas as pd
@@ -83,20 +86,25 @@ def zone_cell_cover(zones=ZONES, zoom: int | None = None) -> tuple[int, pd.DataF
     """Driver-side cover build (zones are the small broadcast side) by
     one quadtree descent from z0 over all zones in lockstep.
 
-    At each level a zone keeps only the cells in its bbox tile range:
-    the tile map is monotone and nested, so every zone point's cell is
-    there. ``_part_edges`` classifies each kept cell: with no edges it
-    answers for all of it by ``parity``, odd a full leaf kept at its own
-    level, even dropped; every other cell is boundary and descends. A
-    zone whose bbox lies in one cell needs no test: that cell holds its
-    whole boundary, so every edge is local there and the parity even.
+    All zones' ring edges go into one table, each zone a row of it. At
+    each level a zone keeps only the cells in its bbox tile range: the
+    tile map is monotone and nested, so every zone point's cell is
+    there. One ``_part_edges`` call classifies the kept cells of all
+    zones, each against its parent row's kept edges from its parent's
+    parity; at z0 the parents are the zones, with their ring edges and
+    even parity. A cell with no kept edges answers for all of it by
+    ``parity``: odd, a full leaf kept at its own level; even, dropped.
+    Every other cell is boundary and descends, taking its kept edges
+    down as its children's parent row. A level costs Σ cells × their
+    parent's kept edges, not cells × zone edges.
 
     The descent stops at ``zoom``, or without one at the first level
     (z18 at most) where 4 × (full leaves expanded to it + boundary
     cells) exceeds ``COVER_CELLS``: a level has at most 4 times its
     parent's cells, so the cover stays within the budget. There full
-    leaves expand once, and boundary cells go to ``_cell_edges`` with
-    the classification they have, so no cell is classified twice.
+    leaves expand once, and boundary cells go to one ``_cell_edges``
+    call with the classification they have, so no cell is classified
+    twice.
 
     Returns (zoom, frame of tx, ty, zone_fid, full, lon0, lon1, lat0,
     lat1, parity, edges). ``full`` mirrors the envelope-contains accept
@@ -107,52 +115,45 @@ def zone_cell_cover(zones=ZONES, zoom: int | None = None) -> tuple[int, pd.DataF
     ``parity`` and the local ``edges``. These are NaN / None on full
     rows.
     """
-    segs = [[np.concatenate(a) for a in zip(*(G._ring_arrays(r)
-                                              for r in z["rings"]))]
-            for z in zones]
+    ring_edges = [np.concatenate([np.stack(G._ring_arrays(r), axis=1)
+                                  for r in z["rings"]]) for z in zones]
+    edges = np.concatenate([np.empty((0, 4)), *ring_edges])
+    off = np.cumsum([0] + [len(e) for e in ring_edges])
     xmin, ymin, xmax, ymax = np.reshape(
         [G.polygon_bbox(z["rings"]) for z in zones], (-1, 4)).T
     fid = np.array([z["zone_fid"] for z in zones], np.int32)
     n, last = len(zones), 18 if zoom is None else zoom
-    # cells (gx, gy) of zone k, at z0 every tile a point can map to (the
-    # tile map puts lon -180 in column -1 and lat -85.05 in row 1)
-    k = np.repeat(np.arange(n), 4)
+    # cells (gx, gy) of zone k, children of row ``up``: at z0 the zone's
+    # row and every tile a point can map to (the tile map puts lon -180
+    # in column -1 and lat -85.05 in row 1)
+    k = up = np.repeat(np.arange(n), 4)
     gx, gy = np.tile([-1, -1, 0, 0], n), np.tile([0, 1, 0, 1], n)
+    parity = np.zeros(n, bool)
     fx = fy = fk = np.zeros(0, np.int64)  # full leaves, expanded to z
     for z in range(last + 1):
         tx0, ty0 = M.latlon_to_tile_np(ymax, xmin, z)
         tx1, ty1 = M.latlon_to_tile_np(ymin, xmax, z)
         ok = (gx >= tx0[k]) & (gx <= tx1[k]) & (gy >= ty0[k]) & (gy <= ty1[k])
-        gx, gy, k = gx[ok], gy[ok], k[ok]
+        gx, gy, k, up = gx[ok], gy[ok], k[ok], up[ok]
         lat_a, x0, lat_b, x9 = M.tile_bounds_latlon_np(gx, gy, z)
         rect = [x0, x9, np.minimum(lat_a, lat_b), np.maximum(lat_a, lat_b)]
-        at = [slice(a, b) for a, b in itertools.pairwise(
-            np.searchsorted(k, np.arange(n + 1)))]
-        cls = [(np.zeros(1, bool), np.zeros(len(seg[0]), np.int64),
-                np.stack(seg, axis=1))
-               if tx0[i] == tx1[i] and ty0[i] == ty1[i]
-               else _part_edges(*seg, *(a[at[i]] for a in rect))
-               for i, seg in enumerate(segs)]
-        bnd = np.concatenate([np.zeros(0, bool)] + [
-            np.bincount(row, minlength=len(parity)) > 0
-            for parity, row, _ in cls])
-        leaf = ~bnd & np.concatenate([np.zeros(0, bool)] + [
-            parity for parity, _, _ in cls])
-        fx, fy, fk = (np.concatenate([a, c[leaf]])
+        parity, off, edges = _part_edges(edges, off, up, parity, *rect)
+        bnd = np.diff(off) > 0
+        fx, fy, fk = (np.concatenate([a, c[~bnd & parity]])
                       for a, c in ((fx, gx), (fy, gy), (fk, k)))
         if z == last or (zoom is None
                          and 4 * (len(fx) + bnd.sum()) > COVER_CELLS):
             break
         fx, fy, fk = *_expand_cells(fx, fy, 1), np.repeat(fk, 4)
-        gx, gy, k = *_expand_cells(gx[bnd], gy[bnd], 1), np.repeat(k[bnd], 4)
-    rows = [pd.DataFrame({"tx": fx, "ty": fy, "zone_fid": fid[fk],
-                          "full": True})]
-    for i, (parity, row, edges) in enumerate(cls):
-        b = bnd[at[i]]
-        rows.append(_cell_edges(
-            segs[i], gx[at[i]][b], gy[at[i]][b], [a[at[i]][b] for a in rect],
-            parity[b], (np.cumsum(b) - 1)[row], edges).assign(zone_fid=fid[i]))
-    return z, pd.concat(rows, ignore_index=True).reindex(
+        up = np.repeat(np.flatnonzero(bnd), 4)
+        gx, gy, k = *_expand_cells(gx[bnd], gy[bnd], 1), k[up]
+    # only boundary rows keep edges, so ``edges`` stays as it is
+    return z, pd.concat([
+        pd.DataFrame({"tx": fx, "ty": fy, "zone_fid": fid[fk], "full": True}),
+        _cell_edges({"tx": gx[bnd], "ty": gy[bnd], "zone_fid": fid[k[bnd]]},
+                    [a[bnd] for a in rect], parity[bnd],
+                    np.append(off[:-1][bnd], off[-1]), edges)],
+        ignore_index=True).reindex(
         columns=["tx", "ty", "zone_fid", "full", "lon0", "lon1", "lat0",
                  "lat1", "parity", "edges"])
 
@@ -162,11 +163,13 @@ def zone_cell_cover(zones=ZONES, zoom: int | None = None) -> tuple[int, pd.DataF
 _EAST = 1000.0
 
 
-def _part_edges(x1, y1, x2, y2, x0, x9, y0, y9):
-    """Edges (E,) against rectangles [x0, x9] × [y0, y9] (R,) → (parity
-    (R,), row (N,), edges (N, 4)): the edges of rectangle ``row[i]`` in
-    ``edges[i]`` as x1, y1, x2, y2, rows ascending. The cover build's
-    only edge-vs-rectangle test.
+def _part_edges(edges, off, up, parity, x0, x9, y0, y9):
+    """Rectangles [x0, x9] × [y0, y9] (R,), rectangle i inside the one
+    of parent row ``up[i]``, against their parents' kept edges → (parity
+    (R,), off (R + 1,), edges (N, 4)): rectangle i keeps edges[off[i]:
+    off[i + 1]] as x1, y1, x2, y2. The parents come the same way: parent
+    p's parity ``parity[p]`` and its edges ``edges[off[p]:off[p + 1]]``.
+    The cover build's only edge-vs-rectangle test.
 
     A point ``tile_cols`` maps into a rectangle lies within it widened
     by ~1e-13°; against the rectangle widened by ``COVER_MARGIN`` (m)
@@ -194,18 +197,34 @@ def _part_edges(x1, y1, x2, y2, x0, x9, y0, y9):
       counts.
 
     A right edge's count, [lat >= ylo] XOR [lat >= yhi], reads only its
-    ends. Each end below the widened rectangle toggles ``parity``; an
-    end within its latitudes becomes the stand-in edge (_EAST, y)–
-    (_EAST, _EAST), which counts exactly when lat >= y; ends above it
-    never count. Two equal ends cancel, so an edge continued by another
-    right edge leaves nothing behind, and a rectangle with no local edge
-    keeps no edges at all. ``parity`` XOR the crossings of the kept
-    edges OR a hit on a local edge is then the exact test's answer for
-    every point in the rectangle."""
+    ends. Each end below the widened rectangle toggles the parity, which
+    starts from the parent's; an end within its latitudes becomes the
+    stand-in edge (_EAST, y)–(_EAST, _EAST), a right edge that counts
+    exactly when lat >= y; ends above it never count. Two equal ends
+    cancel, so an edge continued by another right edge leaves nothing
+    behind, and a rectangle with no local edge keeps no edges at all.
+    ``parity`` XOR the crossings of the kept edges OR a hit on a local
+    edge is then the exact test's answer for every point in the
+    rectangle.
+
+    The parent's edges give the same result as the zone's whole edge
+    list, as the rectangle lies inside the parent: an edge the parent
+    did not keep misses the parent, so it misses the rectangle too and
+    lies on the same side of it; a stand-in folds as the end it stands
+    for; and ends that cancelled in the parent cancel here too. At z0
+    the parents are the zones, with their ring edges and even parity.
+    The cost is Σ rectangles × their parent's kept edges."""
     m, n = COVER_MARGIN, len(x0)
-    ylo, yhi = np.minimum(y1, y2), np.maximum(y1, y2)
-    r, c = np.nonzero((ylo <= y9[:, None] + m) & (yhi >= y0[:, None] - m))
-    x1, y1, x2, y2, ylo, yhi = (a[c] for a in (x1, y1, x2, y2, ylo, yhi))
+    # pair rectangle r[i] with edge c[i] of its parent row
+    cnt = off[up + 1] - off[up]
+    r = np.repeat(np.arange(n), cnt)
+    c = np.arange(len(r)) + np.repeat(off[up] - np.cumsum(cnt) + cnt, cnt)
+    ya, yb = edges[:, 1], edges[:, 3]
+    ylo, yhi = np.minimum(ya, yb), np.maximum(ya, yb)
+    near = (ylo[c] <= y9[r] + m) & (yhi[c] >= y0[r] - m)
+    r, c = r[near], c[near]
+    e, ylo, yhi = edges[c], ylo[c], yhi[c]
+    x1, y1, x2, y2 = e.T
     side_x, side_y = x0[r], np.clip(y0[r], ylo, yhi)
     x0, x9, y0, y9 = x0[r] - m, x9[r] + m, y0[r] - m, y9[r] + m
     dx, dy = x2 - x1, y2 - y1
@@ -229,7 +248,8 @@ def _part_edges(x1, y1, x2, y2, x0, x9, y0, y9):
                 | crosses(x0, y0, x9, y0) | crosses(x9, y0, x9, y9)
                 | crosses(x9, y9, x0, y9) | crosses(x0, y9, x0, y0)))
     right = ~local & (np.sign(dy) * cross(side_x, side_y) > 0)
-    parity = np.bincount(r[right & (ylo < y0)], minlength=n) % 2 == 1
+    parity = parity[up] ^ (
+        np.bincount(r[right & (ylo < y0)], minlength=n) % 2 == 1)
     lo, hi = right & (ylo >= y0), right & (yhi <= y9)
     (row, y), odd = np.unique(
         np.stack([np.concatenate([r[lo], r[hi]]),
@@ -237,47 +257,48 @@ def _part_edges(x1, y1, x2, y2, x0, x9, y0, y9):
         axis=1, return_counts=True)
     row, y = row[odd % 2 == 1].astype(np.int64), y[odd % 2 == 1]
     row = np.concatenate([r[local], row])
-    edges = np.concatenate([
-        np.stack([x1, y1, x2, y2], axis=1)[local],
+    e = np.concatenate([
+        e[local],
         np.stack([np.full_like(y, _EAST), y, np.full_like(y, _EAST),
                   np.full_like(y, _EAST)], axis=1)])
     order = np.argsort(row, kind="stable")
-    return parity, row[order], edges[order]
+    return parity, np.searchsorted(row[order], np.arange(n + 1)), e[order]
 
 
-def _cell_edges(seg, gx, gy, rect, parity, row, edges) -> pd.DataFrame:
-    """Boundary rows of one zone for cells (gx, gy), given the cells'
-    rectangles ``rect`` (x0, x9, y0, y9) and their ``_part_edges``
-    result (parity, row, edges) against the zone's edges ``seg``. Per
-    row: the part [lon0, lon1) × [lat0, lat1) of the cell it answers
+def _cell_edges(cells, rect, parity, off, edges) -> pd.DataFrame:
+    """Boundary rows of all zones for the cells given by the columns
+    ``cells`` (tx, ty, zone_fid), the cells' rectangles ``rect`` (x0,
+    x9, y0, y9) and their ``_part_edges`` result (parity, off, edges).
+    Per row: the part [lon0, lon1) × [lat0, lat1) of the cell it answers
     for, the parity folded from the edges right of that part, and its
     edges (stand-ins included) as an (n, 4) x1, y1, x2, y2 array.
 
     A row with more than ``EDGE_SLOTS`` edges is split into its 4
-    quarters, at most ``SPLIT_DEPTH`` times; each quarter goes through
-    ``_part_edges`` in turn. A point belongs to exactly one part, as
-    parts are half-open and the cell's outer sides are open (±inf). A
-    part left with no edges and even parity holds no point of the zone
-    and is dropped. Only edges that meet at one point (a vertex of degree >
-    ``EDGE_SLOTS``) outlast the splits; such a row keeps all its edges,
-    and ``build_cover_df`` widens every row's slots to fit the
-    largest."""
-    n = len(gx)
+    quarters, at most ``SPLIT_DEPTH`` times; one ``_part_edges`` call
+    per depth classifies the quarters of all rows split there, each
+    against the edges of the row it splits, as it lies inside it. A
+    point belongs to exactly one part, as parts are half-open and the
+    cell's outer sides are open (±inf). A part left with no edges and
+    even parity holds no point of the zone and is dropped. Only edges
+    that meet at one point (a vertex of degree > ``EDGE_SLOTS``) outlast
+    the splits; such a row keeps all its edges, and ``build_cover_df``
+    widens every row's slots to fit the largest."""
+    n = len(parity)
     # a part: its cell, exact rectangle x0, x9, y0, y9, region r0 … r3
     part = [np.arange(n), *rect] + [
         np.full(n, v) for v in (-np.inf, np.inf, -np.inf, np.inf)]
     rows = []
     for depth in range(SPLIT_DEPTH + 1):
-        cell, x0, x9, y0, y9, r0, r1, r2, r3 = part
-        n = np.bincount(row, minlength=len(cell))
-        split = (n > EDGE_SLOTS) & (depth < SPLIT_DEPTH)
-        keep = ~split & ((n > 0) | parity)
-        rows.append([a[keep] for a in (cell, r0, r1, r2, r3, parity)]
-                    + [np.split(edges[keep[row]], np.cumsum(n[keep])[:-1])
-                       if keep.any() else []])
-        cell, x0, x9, y0, y9, r0, r1, r2, r3 = (a[split] for a in part)
-        if not len(cell):
+        cnt = np.diff(off)
+        split = (cnt > EDGE_SLOTS) & (depth < SPLIT_DEPTH)
+        keep = ~split & ((cnt > 0) | parity)
+        e, end = edges[np.repeat(keep, cnt)], np.cumsum(cnt[keep])
+        rows.append([a[keep] for a in (part[0], *part[5:], parity)]
+                    + [[e[i:j] for i, j in zip(end - cnt[keep], end)]])
+        up = np.flatnonzero(split)
+        if not len(up):
             break
+        cell, x0, x9, y0, y9, r0, r1, r2, r3 = (a[up] for a in part)
         xm, ym = (x0 + x9) / 2, (y0 + y9) / 2
         quarters = [(hx, hy)
                     for hx in ((x0, xm, r0, xm), (xm, x9, xm, r1))
@@ -285,11 +306,12 @@ def _cell_edges(seg, gx, gy, rect, parity, row, edges) -> pd.DataFrame:
         part = [np.tile(cell, 4)] + [
             np.concatenate([(hx + hy)[k] for hx, hy in quarters])
             for k in (0, 1, 4, 5, 2, 3, 6, 7)]
-        parity, row, edges = _part_edges(*seg, *part[1:5])
+        parity, off, edges = _part_edges(edges, off, np.tile(up, 4), parity,
+                                         *part[1:5])
     cell, r0, r1, r2, r3, parity = (np.concatenate(c) for c in
                                     list(zip(*rows))[:6])
     return pd.DataFrame({
-        "tx": gx[cell], "ty": gy[cell], "full": False,
+        **{name: a[cell] for name, a in cells.items()}, "full": False,
         "lon0": r0, "lon1": r1, "lat0": r2, "lat1": r3,
         "parity": pd.Series(parity, dtype=object),
         "edges": pd.Series([e for level in rows for e in level[6]],

@@ -17,9 +17,13 @@ point in a ``full`` cell must be inside by the oracle, every edge a
 boundary row carries must meet that row's part of its cell, and every
 boundary row must be able to accept a point.
 
+A star layer adds many zones: ``make_star_layer``'s stars, each a fan of
+convex triangles around its centre for the half-plane oracle.
+
 ``PIP_BED_SEEDS=3,4,5`` runs more seeds.
 """
 
+import hashlib
 import os
 from fractions import Fraction
 
@@ -134,6 +138,43 @@ def make_layer(seed):
     return zones
 
 
+def make_star_layer(n=25, v=12, lon0=10.0, lat0=46.0, size=2.0):
+    """``n`` stars on a ⌈√n⌉ grid over a ``size``° box: star i has
+    ``v`` vertices at angles 2πj/v + 0.1, at radii alternating 0.49 and
+    0.30 of the grid step. Its oracle parts are the triangles of the fan
+    around its centre."""
+    g = int(np.ceil(np.sqrt(n)))
+    step = size / g
+    a = 2 * np.pi * np.arange(v) / v + 0.1
+    rad = np.where(np.arange(v) % 2 == 0, 0.49, 0.30) * step
+    zones = []
+    for i in range(n):
+        cx, cy = lon0 + (i % g + 0.5) * step, lat0 + (i // g + 0.5) * step
+        ring = list(zip((cx + rad * np.cos(a)).tolist(),
+                        (cy + rad * np.sin(a)).tolist()))
+        zones.append(_zone(i, [ring], [[(cx, cy), ring[j], ring[(j + 1) % v]]
+                                       for j in range(v)]))
+    return zones
+
+
+def make_ten_copies():
+    """The fixture zones and nine copies shifted east, as in the
+    plan-shape test."""
+    return [dict(z, zone_fid=10 * i + z["zone_fid"],
+                 rings=[[(x + 1.5 * i, y) for x, y in r]
+                        for r in z["rings"]])
+            for i in range(10) for z in ZONES]
+
+
+def _layer(layer):
+    """A bed seed's layer, or "stars", "10x" or "fixture"."""
+    if layer == "stars":
+        return make_star_layer()
+    if layer == "10x":
+        return make_ten_copies()
+    return ZONES if layer == "fixture" else make_layer(layer)
+
+
 # ------------------------------------------------------------- points
 
 def _neighbours(px, py):
@@ -237,11 +278,11 @@ def _diff(a, b):
     return sorted(a - b)[:5], sorted(b - a)[:5]
 
 
-@pytest.mark.parametrize("seed", SEEDS)
-def test_join_numpy_and_duckdb_agree(spark, seed):
-    zones = make_layer(seed)
+@pytest.mark.parametrize("layer", [*SEEDS, "stars"])
+def test_join_numpy_and_duckdb_agree(spark, layer):
+    zones = _layer(layer)
     _, cover = sj.zone_cell_cover(zones, Z)
-    px, py = make_points(zones, cover, seed)
+    px, py = make_points(zones, cover, 0 if layer == "stars" else layer)
     want = numpy_pairs(zones, px, py)
     oracle = duckdb_pairs(zones, px, py)
     assert oracle == want, _diff(oracle, want)
@@ -265,19 +306,13 @@ def test_full_cells_hold_only_inside_points(seed):
         assert G.point_in_polygon(px[sel], py[sel], rings).all(), z["zone_fid"]
 
 
-@pytest.mark.parametrize("layer", [*SEEDS, "10x", "fixture"])
+@pytest.mark.parametrize("layer", [*SEEDS, "10x", "fixture", "stars"])
 def test_auto_cover_stays_within_budget(layer):
     """The auto zoom is the first level where four times the cover's
     cells exceed ``COVER_CELLS`` (z18 at most), so the cover holds at
     most ``COVER_CELLS`` cells. The fixture zones get z12, and their
     auto cover is their z12 cover."""
-    if layer == "10x":  # ten shifted copies, as in the plan-shape test
-        zones = [dict(z, zone_fid=10 * i + z["zone_fid"],
-                      rings=[[(x + 1.5 * i, y) for x, y in r]
-                             for r in z["rings"]])
-                 for i in range(10) for z in ZONES]
-    else:
-        zones = ZONES if layer == "fixture" else make_layer(layer)
+    zones = _layer(layer)
     zoom, cover = sj.zone_cell_cover(zones)
     cells = len(cover.drop_duplicates(["tx", "ty", "zone_fid"]))
     assert cells <= sj.COVER_CELLS, (zoom, cells)
@@ -319,13 +354,13 @@ def _meets(edge, rect):
     return t0 <= t1
 
 
-@pytest.mark.parametrize("layer", [*SEEDS, "fixture"])
+@pytest.mark.parametrize("layer", [*SEEDS, "fixture", "stars"])
 def test_boundary_rows_carry_only_edges_meeting_their_part(layer):
     """Every edge on a boundary row, stand-ins excepted, meets the row's
     part of its cell widened by ``COVER_MARGIN``: an edge that misses it
     is wholly left or right of every point there, so it belongs in the
     parity or nowhere."""
-    zones = ZONES if layer == "fixture" else make_layer(layer)
+    zones = _layer(layer)
     _, cover = sj.zone_cell_cover(zones, Z)
     bnd = cover[~cover["full"]]
     minlat, minlon, maxlat, maxlon = M.tile_bounds_latlon_np(
@@ -343,12 +378,64 @@ def test_boundary_rows_carry_only_edges_meeting_their_part(layer):
     assert not stray, (len(stray), stray[:3])
 
 
-@pytest.mark.parametrize("layer", [*SEEDS, "fixture"])
+@pytest.mark.parametrize("layer", [*SEEDS, "fixture", "stars"])
 def test_boundary_rows_can_accept(layer):
     """A boundary row with no edges must have odd parity: with even
     parity the predicate rejects every point, so the row is dead."""
-    zones = ZONES if layer == "fixture" else make_layer(layer)
+    zones = _layer(layer)
     _, cover = sj.zone_cell_cover(zones, Z)
     bnd = cover[~cover["full"]]
     dead = (bnd["edges"].map(len) == 0) & ~bnd["parity"].astype(bool)
     assert not dead.any(), bnd[dead].head(3)
+
+
+def _canonical(row):
+    """A cover row as a sortable tuple: every column, floats in hex,
+    a boundary row's edges in order."""
+    bounds = (float(v).hex()
+              for v in (row.lon0, row.lon1, row.lat0, row.lat1))
+    tail = ("-", "-") if row.full else (
+        str(bool(row.parity)),
+        ",".join(map(float.hex, row.edges.ravel().tolist())))
+    return (int(row.tx), int(row.ty), int(row.zone_fid), bool(row.full),
+            *bounds, *tail)
+
+
+@pytest.mark.parametrize("layer, zoom, digest", [
+    ("fixture", 12,
+     "a63c010d735e7eef137d6734cd7d7e7e9e8e197ba69b046b968cb1dd18c091ef"),
+    (1, Z,
+     "448029e42d842cf2fca841936b038f575513308c033370f8a9056102869dff3c"),
+    (1, None,
+     "cc00e7086d6dbeec6172b48ec3085f27735584eae9fba5215bf76f8642bf5fea"),
+], ids=["fixture-z12", "seed1-z12", "seed1-auto"])
+def test_cover_is_pinned_row_for_row(layer, zoom, digest):
+    """The cover, as sha256 of its column dtypes and its rows sorted:
+    a change to the build that moves any row, bound, parity or edge
+    shows here."""
+    _, cover = sj.zone_cell_cover(_layer(layer), zoom)
+    h = hashlib.sha256(repr(cover.dtypes.astype(str).to_dict()).encode())
+    for row in sorted(map(_canonical, cover.itertuples(index=False))):
+        h.update(repr(row).encode())
+    assert h.hexdigest() == digest
+
+
+@pytest.mark.parametrize("layer", ["10x", "fixture"])
+def test_cover_build_classifies_once_per_level(monkeypatch, layer):
+    """One ``_part_edges`` call per level of the descent and one per
+    split depth serve all zones, whatever their number, and one
+    ``_cell_edges`` call makes every boundary row."""
+    calls = {"_part_edges": 0, "_cell_edges": 0}
+
+    def counted(name, fn):
+        def call(*args):
+            calls[name] += 1
+            return fn(*args)
+        return call
+
+    for name in calls:
+        monkeypatch.setattr(sj, name, counted(name, getattr(sj, name)))
+    zoom, _ = sj.zone_cell_cover(_layer(layer))
+    assert calls["_part_edges"] <= (zoom + 1) + (sj.SPLIT_DEPTH + 1), (
+        zoom, calls)
+    assert calls["_cell_edges"] == 1, calls

@@ -52,10 +52,13 @@ def test_full_cells_really_inside():
 
 
 def _classify(seg, x0, y0, x9, y9):
-    """One rectangle through ``_part_edges`` → (parity, its local edges,
-    the latitudes of its stand-in edges)."""
+    """One rectangle through ``_part_edges``, its parent one row holding
+    ``seg`` with even parity → (parity, its local edges, the latitudes
+    of its stand-in edges)."""
     parity, _, edges = sj._part_edges(
-        *seg, *(np.array([v], np.float64) for v in (x0, x9, y0, y9)))
+        np.stack(seg, axis=1), np.array([0, len(seg[0])]),
+        np.zeros(1, np.int64), np.zeros(1, bool),
+        *(np.array([v], np.float64) for v in (x0, x9, y0, y9)))
     stand = edges[:, 0] == sj._EAST
     return (bool(parity[0]), set(map(tuple, edges[~stand].tolist())),
             edges[stand, 1].tolist())
